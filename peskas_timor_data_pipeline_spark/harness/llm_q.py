@@ -5425,7 +5425,8 @@ def d15_dup_rate_scout(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scout is ONE job instead of one job per driver-side .count(). The
     # ppm division moves in-plan as exact long arithmetic (both operands
     # positive, well inside bigint range — identical values to the old
-    # Python floor division).
+    # Python floor division). An empty corpus has no rate: it fails
+    # loudly through the d12 raise_error guard instead of dividing by 0.
     n_docs_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     n_pairs_df = lsh_candidate_pairs(sigs, "doc_id", N_HASHES, BAND_SIZE).agg(
         F.count(F.lit(1)).cast("long").alias("n_distinct_candidates")
@@ -5438,9 +5439,14 @@ def d15_dup_rate_scout(spark: SparkSession, sf_dir: str) -> DataFrame:
             "candidate_pair_mass",
             "n_colliding_buckets",
             "n_distinct_candidates",
-            F.expr("n_distinct_candidates * 1000000L div n_docs").alias(
-                "candidates_per_doc_ppm"
-            ),
+            F.when(
+                F.col("n_docs") > 0,
+                F.expr("n_distinct_candidates * 1000000L div n_docs"),
+            )
+            .otherwise(
+                F.raise_error(F.lit("d15 duplication rate: empty corpus (n_docs = 0)"))
+            )
+            .alias("candidates_per_doc_ppm"),
         )
     )
 

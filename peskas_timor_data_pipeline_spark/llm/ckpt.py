@@ -35,6 +35,10 @@ def eager_min_bytes() -> int:
     return int(os.environ.get(EAGER_MIN_BYTES_ENV, _DEFAULT_EAGER_MIN_BYTES))
 
 
+# scan_bytes' answer for a size it cannot read: huge, so the eager path wins
+_UNKNOWN_BYTES = 1 << 62
+
+
 def scan_bytes(df: DataFrame) -> int:
     """Catalyst's estimate of the frame's SOURCE size: the sum of leaf-node
     statistics of the analyzed plan (file sizes for file scans). Driver-side
@@ -42,14 +46,17 @@ def scan_bytes(df: DataFrame) -> int:
     in-memory relations) report the defaultSizeInBytes sentinel, so unknown
     inputs read as huge and gated call sites stay on the scale-safe eager
     path. Join/aggregate estimate inflation never enters: only LEAF stats
-    are summed."""
+    are summed. A py4j or reflection failure also reads as huge."""
     total = 0
-    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-    for i in range(leaves.size()):
-        sz = leaves.apply(i).stats().sizeInBytes()
-        total += sz if isinstance(sz, int) else int(sz.toString())
-        if total >= (1 << 62):
-            break
+    try:
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        for i in range(leaves.size()):
+            sz = leaves.apply(i).stats().sizeInBytes()
+            total += sz if isinstance(sz, int) else int(sz.toString())
+            if total >= _UNKNOWN_BYTES:
+                break
+    except Exception:  # noqa: BLE001 - any py4j/reflection surprise => unknown
+        return _UNKNOWN_BYTES
     return total
 
 

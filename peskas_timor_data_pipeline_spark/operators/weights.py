@@ -323,14 +323,3 @@ def convert_length(
     return joined.withColumn(out_col, converted).drop(
         *[c for c in (aL, bL) if c != out_col]
     )
-
-
-def scale_nutrients(
-    df: DataFrame, weight_col: str, nutrient_cols: Sequence[str]
-) -> DataFrame:
-    """Scale per-kg nutrient concentrations by estimated catch weight
-    (R/calculate-weights.R:368-375): nutrient_total = mu * weight / 1000."""
-    out = df
-    for c in nutrient_cols:
-        out = out.withColumn(c, F.col(c) * F.col(weight_col) / 1000.0)
-    return out

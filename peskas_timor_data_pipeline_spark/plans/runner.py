@@ -114,7 +114,10 @@ class Pipeline:
                 )
             else:
                 paths[st.name] = write_stage(out, self.artifact_dir, st.name)
-            with open(self._meta_path(st), "w") as f:
+            # tmp + rename: a crash mid-write never leaves a torn meta file
+            meta = self._meta_path(st)
+            with open(meta + ".tmp", "w") as f:
                 json.dump({"inputs": fp}, f)
+            os.replace(meta + ".tmp", meta)
             log.info("stage %s -> %s", st.name, paths[st.name])
         return paths

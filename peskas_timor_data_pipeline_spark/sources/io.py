@@ -33,29 +33,24 @@ def add_version(prefix: str, extension: str, ts: _dt.datetime | None = None, sha
 
 
 def resolve_latest(directory: str, prefix: str, extension: str) -> str | None:
-    """Resolve the newest versioned artifact for a prefix
+    """Resolve the newest COMMITTED versioned artifact for a prefix
     (cloud_object_name version='latest', R/cloud-storage.R:170-214):
-    group by base name, take max timestamp."""
+    group by base name, take max timestamp. A directory artifact counts
+    only once its writer committed it (Spark's ``_SUCCESS`` marker), so a
+    write that died mid-stage is never resumed from; file artifacts are
+    complete by construction."""
     best, best_ts = None, ""
     for path in glob.glob(os.path.join(directory, f"{prefix}__*__.{extension}")):
         stem = os.path.basename(path)[: -(len(extension) + 1)]
         m = _VERSION_RE.match(stem)
-        if m and m.group("prefix") == prefix and m.group("ts") > best_ts:
+        if (
+            m
+            and m.group("prefix") == prefix
+            and m.group("ts") > best_ts
+            and (not os.path.isdir(path) or os.path.exists(os.path.join(path, "_SUCCESS")))
+        ):
             best, best_ts = path, m.group("ts")
     return best
-
-
-def read_csv_untyped(spark: SparkSession, path: str, **options) -> DataFrame:
-    """All-string CSV read (S3, R/preprocess-landings.R:55-58): the
-    reference's late-typing discipline — explicit casts happen downstream
-    where the semantics are known."""
-    return spark.read.options(header=True, **options).csv(path)
-
-
-def read_csv_typed(spark: SparkSession, path: str, schema: StructType, **options) -> DataFrame:
-    """Typed CSV read (S4): schema declared up front -> pushdown + early
-    failure on drift."""
-    return spark.read.options(header=True, **options).schema(schema).csv(path)
 
 
 def read_csv_quarantined(

@@ -10,8 +10,7 @@ Incremental semantics:
 - Kobo: ``since_id`` query + pagination via ``next`` links, retry x3,
   duplicate-id check (R/retrieve-survey-data.R:32-233)
 - PDS tracks: only trip ids not already landed (anti-join against the
-  sink listing, R/ingest-pds-data.R:97-210); fan-out via a thread pool
-  (the reference uses 32 furrr sessions)
+  sink listing, R/ingest-pds-data.R:97-210)
 """
 
 from __future__ import annotations
@@ -94,31 +93,6 @@ def fetch_pds_trips_csv(
 def incremental_trip_ids(all_ids: list[int], landed_ids: set[int]) -> list[int]:
     """Ids still to fetch (S14's anti-join, R/ingest-pds-data.R:181)."""
     return [t for t in all_ids if t not in landed_ids]
-
-
-def fetch_tracks_parallel(
-    http_get: HttpGet,
-    base_url: str,
-    trip_ids: list[int],
-    land: Callable[[int, str], None],
-    max_workers: int = 32,
-    secret: str | None = None,
-) -> int:
-    """Fan-out per-trip track CSV fetch over a thread pool (S14; the
-    reference's furrr multisession with 32 workers, inst/conf.yml:40-42).
-    ``land(trip_id, body)`` persists each response (e.g. to the landing
-    dir a Spark streaming/batch job scans)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    headers = {"X-API-SECRET": secret} if secret else {}
-
-    def one(trip_id: int) -> int:
-        resp = http_get(f"{base_url}/trip/{trip_id}/points/csv", headers=headers)
-        land(trip_id, resp.text if hasattr(resp, "text") else str(resp))
-        return trip_id
-
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        return sum(1 for _ in pool.map(one, trip_ids))
 
 
 def sync_flags_frames(

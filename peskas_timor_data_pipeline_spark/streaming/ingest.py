@@ -8,8 +8,8 @@ downstream batch stage (parquet sinks are readable by both):
   (replaces the since-id fetch + duplicate check,
   R/retrieve-survey-data.R:207-223; late-submission window = the 28-day
   delay threshold, inst/conf.yml:106-107)
-- append-only track sink with periodic compaction (replaces the
-  consolidated tracks file + 1000-trip resync, R/get-cloud-files.R:160-214)
+- append-only track sink (replaces the consolidated tracks file,
+  R/get-cloud-files.R:160-214)
 """
 
 from __future__ import annotations
@@ -152,14 +152,6 @@ def upsert_sink(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer
-
-
-def compact_sink(spark: SparkSession, path: str, target_partitions: int = 32) -> None:
-    """Periodic small-file compaction for the append sink (the reference
-    resyncs its single tracks file after 1000 new trips; at scale this is
-    a rewrite to ``target_partitions`` zstd parquet files)."""
-    df = spark.read.parquet(path)
-    df.repartition(target_partitions).write.mode("overwrite").parquet(path + "__compact")
 
 
 def join_streams_windowed(

@@ -14,6 +14,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from peskas_timor_data_pipeline_spark.session import get_spark
 
+    # The factory's 24g default heap exceeds a 16 GB host: over a whole
+    # suite run the JVM grows until the kernel OOM-kills it, and every
+    # later Spark test fails. The test tables are megabytes.
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
     spark = get_spark(app_name="pytest", extra_conf={"spark.sql.shuffle.partitions": "8"})
     spark.sparkContext.setLogLevel("ERROR")
     yield spark

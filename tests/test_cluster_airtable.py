@@ -234,3 +234,44 @@ def test_d12_enc_guard_raises_out_of_range(spark):
         bad.groupBy("component").agg(
             F.max(_d12_enc_guarded()).alias("enc")
         ).collect()
+
+
+def test_scan_bytes_unknown_on_jvm_failure(spark, monkeypatch):
+    """A py4j/reflection failure while reading plan statistics must read as
+    huge, so the gated lineage cut takes the scale-safe eager path."""
+    from py4j.protocol import Py4JError
+
+    from peskas_timor_data_pipeline_spark.llm import ckpt
+
+    class BrokenJdf:
+        def queryExecution(self):
+            raise Py4JError("statistics unavailable")
+
+    df = spark.range(3)
+    assert ckpt.scan_bytes(df) < ckpt.eager_min_bytes()
+    monkeypatch.setattr(df, "_jdf", BrokenJdf())
+    assert ckpt.scan_bytes(df) >= ckpt.eager_min_bytes()
+    cut = []
+    monkeypatch.setattr(ckpt, "materialize", lambda frame, _dir=None: cut.append(frame))
+    ckpt.materialize_gated(df)
+    assert cut == [df]
+
+
+def test_d15_raises_on_empty_corpus(spark, tmp_path):
+    """d15's duplication rate has no value on an empty corpus: it must
+    fail through its raise_error guard, not divide by zero or emit NULL."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import SparkRuntimeException
+
+    from peskas_timor_data_pipeline_spark.harness.llm_q import QUERIES
+
+    pq.write_table(
+        pa.table({"doc_id": pa.array([], pa.int64()), "text": pa.array([], pa.string())}),
+        str(tmp_path / "documents.parquet"),
+    )
+    fn, _oracle = QUERIES["d15_dup_rate_scout"]
+    with pytest.raises((SparkRuntimeException, Py4JJavaError), match="empty corpus"):
+        fn(spark, str(tmp_path)).collect()

@@ -403,6 +403,48 @@ def test_pipeline_incremental_skip_and_invalidate(spark, tmp_path):
     assert runs["n"] == 3
 
 
+def test_runner_resumes_only_committed_artifacts(spark, tmp_path):
+    """A write that died mid-stage leaves a NEWER version directory with
+    part files but no ``_SUCCESS`` marker. Resolution, reads and the
+    incremental skip must all keep using the committed artifact."""
+    import os
+
+    from peskas_timor_data_pipeline_spark.plans import Pipeline
+
+    d = str(tmp_path)
+
+    def half_written(df, prefix):
+        path = write_stage(df, d, prefix)
+        os.remove(os.path.join(path, "_SUCCESS"))
+        assert any(f.startswith("part-") for f in os.listdir(path))
+        return path
+
+    base = write_stage(spark.range(5).withColumn("v", F.col("id")), d, "base")
+    pipe = Pipeline(spark, d)
+    runs = {"n": 0}
+
+    @pipe.stage("derived", inputs=["base"])
+    def derived(spark, base):
+        runs["n"] += 1
+        return base.agg(F.sum("v").alias("total"))
+
+    p1 = pipe.run(incremental=True)
+    meta = os.path.join(d, "derived__inputs__.json")
+    with open(meta) as f:
+        assert json.load(f)["inputs"] == f"base={base}"
+    assert not os.path.exists(meta + ".tmp")
+
+    torn_base = half_written(spark.range(7).withColumn("v", F.col("id")), "base")
+    torn_derived = half_written(spark.range(1).select(F.lit(0).alias("total")), "derived")
+    assert torn_base > base and torn_derived > p1["derived"]
+    assert resolve_latest(d, "base", "parquet") == base
+    assert read_stage(spark, d, "base").count() == 5
+    p2 = pipe.run(incremental=True)
+    assert runs["n"] == 1                      # skipped on the committed input
+    assert p2["derived"] == p1["derived"]      # not the torn output
+    assert read_stage(spark, d, "derived").collect()[0].total == 10
+
+
 def test_schema_diff_detects_drift(spark, tmp_path):
     """added / removed / type-changed / unchanged all classified; footer
     metadata only (works on empty files too)."""
