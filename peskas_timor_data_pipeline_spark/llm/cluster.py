@@ -253,7 +253,13 @@ def connected_components_star(
 
     Use :func:`connected_components` for near-dup clusters (tiny
     diameters, constant rounds); prefer this form for adversarial /
-    unknown topologies — long chains, huge sparse components."""
+    unknown topologies — long chains, huge sparse components.
+
+    Runs that are not single-node should pass ``checkpoint_dir``. The node
+    set derives lazily from the first edges checkpoint and is read only
+    after the loop converges; without ``checkpoint_dir`` that checkpoint is
+    a local one, whose blocks an executor loss takes with it, and the
+    truncated lineage cannot recompute them for the final labeling join."""
     canon = (
         pairs.select(
             F.least(F.col(id_a), F.col(id_b)).alias("a"),

@@ -20,40 +20,54 @@ def interpolate_linear(
     df: DataFrame,
     keys: Sequence[str],
     order_col: str,
-    value_col: str,
+    value_col: str | Sequence[str],
     out_col: str | None = None,
 ) -> DataFrame:
     """Linear interpolation of nulls in ``value_col`` within each series
     (partitioned by ``keys``, ordered by ``order_col``); boundary nulls take
-    the nearest non-null (na.approx rule=2). Adds ``is_imputed``."""
-    out_col = out_col or value_col
+    the nearest non-null (na.approx rule=2). Adds ``is_imputed``.
+
+    ``value_col`` may be a sequence: every column is filled in place from
+    one window projection, and ``is_imputed`` flags the LAST one, exactly
+    as chained single-column calls would leave it. ``out_col`` renames a
+    single column's output."""
+    value_cols = [value_col] if isinstance(value_col, str) else list(value_col)
+    if out_col is not None and len(value_cols) != 1:
+        raise ValueError("out_col needs exactly one value column")
     w = Window.partitionBy(*keys).orderBy(order_col)
-    rn = F.row_number().over(w)
-    df = df.withColumn("__rn__", rn)
+    df = df.withColumn("__rn__", F.row_number().over(w))
 
     w_back = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     w_fwd = w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    v = F.col(value_col)
-    non_null_rn = F.when(v.isNotNull(), F.col("__rn__"))
-    df = (
-        df.withColumn("__pv__", F.last(v, ignorenulls=True).over(w_back))
-        .withColumn("__prn__", F.last(non_null_rn, ignorenulls=True).over(w_back))
-        .withColumn("__nv__", F.first(v, ignorenulls=True).over(w_fwd))
-        .withColumn("__nrn__", F.first(non_null_rn, ignorenulls=True).over(w_fwd))
-    )
-    interp = (
-        F.when(v.isNotNull(), v)
-        .when(F.col("__pv__").isNull(), F.col("__nv__"))  # rule=2 head
-        .when(F.col("__nv__").isNull(), F.col("__pv__"))  # rule=2 tail
-        .otherwise(
-            F.col("__pv__")
-            + (F.col("__nv__") - F.col("__pv__"))
-            * (F.col("__rn__") - F.col("__prn__"))
-            / (F.col("__nrn__") - F.col("__prn__"))
+    rn = F.col("__rn__")
+    # per value column: previous/next non-null value and its row number
+    names = [[f"__{h}{i}__" for h in ("pv", "prn", "nv", "nrn")]
+             for i in range(len(value_cols))]
+    bounds = []
+    for c, (pv, prn, nv, nrn) in zip(value_cols, names):
+        v = F.col(c)
+        non_null_rn = F.when(v.isNotNull(), rn)
+        bounds += [
+            F.last(v, ignorenulls=True).over(w_back).alias(pv),
+            F.last(non_null_rn, ignorenulls=True).over(w_back).alias(prn),
+            F.first(v, ignorenulls=True).over(w_fwd).alias(nv),
+            F.first(non_null_rn, ignorenulls=True).over(w_fwd).alias(nrn),
+        ]
+    helpers = {"__rn__", *(n for ns in names for n in ns)}
+    df = df.select("*", *bounds)
+
+    # withColumn placement, so the result equals chained single-column
+    # calls: a name already present is replaced in place, a new one goes last
+    out = {c: F.col(c) for c in df.columns if c not in helpers}
+    for c, ns in zip(value_cols, names):
+        v = F.col(c)
+        pv, prn, nv, nrn = map(F.col, ns)
+        interp = (
+            F.when(v.isNotNull(), v)
+            .when(pv.isNull(), nv)  # rule=2 head
+            .when(nv.isNull(), pv)  # rule=2 tail
+            .otherwise(pv + (nv - pv) * (rn - prn) / (nrn - prn))
         )
-    )
-    return (
-        df.withColumn("is_imputed", v.isNull() & interp.isNotNull())
-        .withColumn(out_col, interp)
-        .drop("__rn__", "__pv__", "__prn__", "__nv__", "__nrn__")
-    )
+        out["is_imputed"] = v.isNull() & interp.isNotNull()
+        out[out_col or c] = interp
+    return df.select(*(e.alias(name) for name, e in out.items()))

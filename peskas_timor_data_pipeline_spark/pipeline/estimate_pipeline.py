@@ -87,11 +87,11 @@ def complete_and_impute(monthly: DataFrame, spine: DataFrame) -> DataFrame:
     full = regions.crossJoin(spine).join(
         monthly, ["region", "landing_period"], "left"
     )
-    out = full
-    for c in ("n_landings_per_boat", "landing_catch", "catch_price"):
-        out = interpolate_linear(out, ["region"], "landing_period", c)
-        out = out.drop("is_imputed") if c != "catch_price" else out
-    return out
+    # is_imputed flags catch_price, the last column
+    return interpolate_linear(
+        full, ["region"], "landing_period",
+        ["n_landings_per_boat", "landing_catch", "catch_price"],
+    )
 
 
 def scale_to_fleet(imputed: DataFrame, boats_dim: DataFrame) -> DataFrame:

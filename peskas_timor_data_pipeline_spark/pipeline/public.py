@@ -52,13 +52,10 @@ def nutrient_supply(
     RDI per day, unpivoted to (nutrient, value)
     (R/format-public-data.R:597-696, RDI normalization :1177-1205)."""
     joined = catches.join(F.broadcast(nutrients_dim), "species", "left")
-    for c in RDI:
-        joined = joined.withColumn(c, F.col(c) * F.col("catch_kg"))
-    per_period = joined.groupBy("period").agg(
-        *[F.sum(c).alias(c) for c in RDI]
-    )
-    for c, rdi in RDI.items():
-        per_period = per_period.withColumn(
-            c, F.col(c) * 1000.0 / unit_days / F.lit(rdi)
-        )
+    # products and RDI scaling inside the one aggregate, scaled in the
+    # fixed order ((sum * 1000) / unit_days) / rdi
+    per_period = joined.groupBy("period").agg(*[
+        (F.sum(F.col(c) * F.col("catch_kg")) * 1000.0 / unit_days / F.lit(rdi)).alias(c)
+        for c, rdi in RDI.items()
+    ])
     return pivot_longer(per_period, ["period"], list(RDI), "nutrient", "people_rdi")

@@ -9,11 +9,21 @@ the last completed stage. With ``incremental=True`` a stage whose inputs'
 artifact versions are unchanged since its last run is skipped entirely —
 the generalization of the reference's hand-rolled only-new-ids /
 descriptor-cache patterns (R/ingest-pds-data.R:181,
-R/preprocess-pds-trips.R:199-235) to every stage.
+R/preprocess-pds-trips.R:199-235) to every stage. The skip is also keyed on
+the stage's code: a stage version (hash of its fn's source plus its
+``partition_cols``) is recorded with the inputs, so an edited stage reruns.
+
+A stage is committed once Spark writes its ``_SUCCESS`` marker; only
+committed artifacts are read or resumed from. Unpartitioned stages also
+carry an optional ``_schema.json`` sidecar, written after the commit, which
+lets the next stage's read skip Parquet schema inference (see
+``sources.io``); partitioned stages never get one.
 """
 
 from __future__ import annotations
 
+import hashlib
+import inspect
 import json
 import logging
 import os
@@ -38,6 +48,18 @@ class Stage:
     fn: Callable[..., DataFrame]          # (spark, **input_dfs) -> DataFrame
     inputs: list[str] = field(default_factory=list)  # upstream stage names
     partition_cols: list[str] = field(default_factory=list)  # hive layout
+    version: str = field(init=False)
+
+    def __post_init__(self) -> None:
+        # Code-aware skip key, hashed once at registration: the fn's source
+        # (its qualname when there is none) plus the declared layout.
+        fn = inspect.unwrap(self.fn)
+        try:
+            code = inspect.getsource(fn)
+        except (OSError, TypeError):
+            code = getattr(fn, "__qualname__", type(fn).__qualname__)
+        key = f"{code}\0{self.partition_cols}"
+        self.version = hashlib.sha1(key.encode()).hexdigest()[:12]
 
 
 @dataclass
@@ -66,7 +88,8 @@ class Pipeline:
     # --- incremental bookkeeping -------------------------------------------------
     # Artifacts are immutable and versioned (sources.io.add_version), so the
     # input artifact PATHS are a complete fingerprint of a stage's inputs:
-    # same paths => same bytes => the previous output is still current.
+    # same paths => same bytes => the previous output is still current. The
+    # stage version covers the other half: same code => same output.
 
     def _fingerprint(self, st: Stage) -> str:
         parts = [
@@ -84,8 +107,9 @@ class Pipeline:
         """Run stages in declaration order (a valid topological order by
         construction); returns stage -> artifact path. ``incremental=True``
         skips a stage when its recorded input fingerprint matches the
-        current latest input artifacts AND its own output artifact exists;
-        skipped stages resolve to their existing artifact, so downstream
+        current latest input artifacts, its recorded stage version matches
+        the registered one, AND its own output artifact exists; skipped
+        stages resolve to their existing artifact, so downstream
         fingerprints see the unchanged path and the skip propagates down
         unchanged branches of the DAG."""
         paths: dict[str, str] = {}
@@ -98,10 +122,11 @@ class Pipeline:
                 meta = self._meta_path(st)
                 if os.path.exists(meta):
                     with open(meta) as f:
-                        if json.load(f).get("inputs") == fp:
-                            paths[st.name] = existing
-                            log.info("stage %s: current, skipped", st.name)
-                            continue
+                        rec = json.load(f)
+                    if rec.get("inputs") == fp and rec.get("version") == st.version:
+                        paths[st.name] = existing
+                        log.info("stage %s: current, skipped", st.name)
+                        continue
             upstream = {
                 name: read_stage(self.spark, self.artifact_dir, name)
                 for name in st.inputs
@@ -117,7 +142,7 @@ class Pipeline:
             # tmp + rename: a crash mid-write never leaves a torn meta file
             meta = self._meta_path(st)
             with open(meta + ".tmp", "w") as f:
-                json.dump({"inputs": fp}, f)
+                json.dump({"inputs": fp, "version": st.version}, f)
             os.replace(meta + ".tmp", meta)
             log.info("stage %s -> %s", st.name, paths[st.name])
         return paths

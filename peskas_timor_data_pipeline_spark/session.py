@@ -15,6 +15,9 @@ Spark plan replaces all of that; the knobs below are the ones that matter at
   its queries), but Spark's default 100-entry LRU evicts each generated
   class before the next round returns to it, so every round recompiled
   every stage in Janino and the JIT then recompiled the fresh classes.
+- No Python call-site capture: PySpark 4 otherwise pays several py4j
+  round trips per Column/functions call to tag expressions with the
+  caller's file and line, which dominated building the stage plans.
 - Session timezone Asia/Dili: all reference date logic is local-time
   (R/validation-functions.R:79-82).
 - Arrow enabled for the few applyInPandas paths (GLMM/imputation at
@@ -80,6 +83,14 @@ def get_spark(
         # averages 8-16 KB per unit (p95 24-53 KB) and bytecode 3-4 KB per
         # class, so 1000 entries retain tens of MB, well inside a 1g heap.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # PySpark 4 records the Python call site of every Column and
+        # functions call for error messages: about six extra py4j round
+        # trips per call. Building the six domain-chain stage plans made
+        # 13.4k py4j calls with it and 4.2k without, and took 0.93 s with
+        # it and 0.54 s without (one JVM, 4 cores, 12 alternations).
+        # Errors keep their class, message and failing function or SQL
+        # fragment; they lose the Python file and line.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

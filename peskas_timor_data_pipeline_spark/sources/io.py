@@ -6,6 +6,16 @@ The reference persists a versioned artifact per stage to GCS and resolves
 boundaries with the same versioned-name convention; storage can be any
 Hadoop-compatible filesystem (file://, gs://, s3a://) — the path prefix is
 the only difference at cluster scale.
+
+Schema sidecar: ``write_stage`` and ``write_stage_clustered`` record the
+written frame's schema as ``<artifact>/_schema.json`` after Spark's commit
+(tmp file + ``os.replace``), and ``read_stage`` hands it to the reader, so a
+stage read launches no footer-reading schema-inference job. The file is
+optional: an artifact without it (older code, a crash between commit and
+schema write) is read by inference, and ``write_stage_partitioned`` never
+writes one, because Spark infers partition column types from directory
+names. ``_SUCCESS`` alone still decides what counts as committed. Spark,
+pyarrow and DuckDB's ``*.parquet`` globs all skip ``_``-prefixed files.
 """
 
 from __future__ import annotations
@@ -13,6 +23,7 @@ from __future__ import annotations
 import datetime as _dt
 import glob
 import hashlib
+import json
 import os
 import re
 
@@ -99,11 +110,24 @@ def _fresh_versioned_path(directory: str, prefix: str) -> str:
         ts += _dt.timedelta(seconds=1)
 
 
+_SCHEMA_FILE = "_schema.json"
+
+
+def _record_schema(df: DataFrame, path: str) -> None:
+    """Write the committed artifact's schema sidecar; tmp + rename, so a
+    reader never sees a torn file."""
+    target = os.path.join(path, _SCHEMA_FILE)
+    with open(target + ".tmp", "w") as f:
+        f.write(df.schema.json())
+    os.replace(target + ".tmp", target)
+
+
 def write_stage(df: DataFrame, directory: str, prefix: str, mode: str = "overwrite") -> str:
     """Parquet stage boundary with a versioned directory name (S6/S7/S8
-    replacement: parquet+zstd instead of gz RDS)."""
+    replacement: parquet+zstd instead of gz RDS) and a schema sidecar."""
     path = _fresh_versioned_path(directory, prefix)
     df.write.mode(mode).parquet(path)
+    _record_schema(df, path)
     return path
 
 
@@ -120,7 +144,8 @@ def write_stage_partitioned(
     the plan — no file listing, no row groups, no IO for the rest). Use for
     the big append-mostly facts (landings by month, tracks by trip-date);
     keep partition cardinality in the hundreds-to-thousands so files stay
-    row-group sized."""
+    row-group sized. No schema sidecar: readers infer the partition
+    column types from the directory names."""
     path = _fresh_versioned_path(directory, prefix)
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
     return path
@@ -152,15 +177,23 @@ def write_stage_clustered(
         .write.mode(mode)
         .parquet(path)
     )
+    _record_schema(df, path)
     return path
 
 
 def read_stage(spark: SparkSession, directory: str, prefix: str) -> DataFrame:
-    """Read the latest version of a stage artifact."""
+    """Read the latest committed version of a stage artifact, with its
+    recorded schema when it has one (no inference job), else by
+    inference."""
     path = resolve_latest(directory, prefix, "parquet")
     if path is None:
         raise FileNotFoundError(f"no artifact for prefix={prefix} in {directory}")
-    return spark.read.parquet(path)
+    try:
+        with open(os.path.join(path, _SCHEMA_FILE)) as f:
+            schema = StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def write_public_tsv(df: DataFrame, path: str) -> None:

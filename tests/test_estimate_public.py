@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+from hypothesis import HealthCheck, example, given, seed, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from peskas_timor_data_pipeline_spark.operators.windows import month_spine
@@ -269,3 +271,38 @@ def test_fill_missing_regions(spark):
     }
     # labelled rows are never overwritten and row count is preserved
     assert len(out) == len(rows)
+
+
+_cell = st.one_of(st.none(), st.integers(min_value=-50, max_value=50))
+
+
+@seed(20261018)
+@settings(max_examples=10, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(series=st.lists(st.lists(st.tuples(_cell, _cell, _cell), min_size=1, max_size=7),
+                       min_size=1, max_size=3))
+@example(series=[
+    # head, middle and tail gaps in every column; an all-null column
+    [(None, None, None), (1, 4, None), (None, None, None),
+     (None, 10, None), (7, None, None), (None, None, None)],
+    [(3, None, 5), (None, 2, None)],
+])
+def test_interpolate_many_columns_equals_chained_calls(spark, series):
+    """Filling several columns from one projection gives exactly the
+    frame that chained single-column calls give, ``is_imputed`` (the
+    last column's flag) and column order included."""
+    from peskas_timor_data_pipeline_spark.operators.interpolate import (
+        interpolate_linear,
+    )
+
+    rows = [
+        (k, t, *(None if v is None else float(v) for v in vals))
+        for k, s in enumerate(series) for t, vals in enumerate(s)
+    ]
+    df = spark.createDataFrame(rows, "k int, t int, a double, b double, c double")
+    chained = df
+    for col in ("a", "b", "c"):
+        chained = interpolate_linear(chained, ["k"], "t", col)
+    multi = interpolate_linear(df, ["k"], "t", ["a", "b", "c"])
+    assert multi.columns == chained.columns == ["k", "t", "a", "b", "c", "is_imputed"]
+    assert sorted(multi.collect()) == sorted(chained.collect())

@@ -24,3 +24,15 @@ def test_codegen_cache_holds_a_repeated_round(spark):
     before = _compiles(spark)
     one_round()
     assert _compiles(spark) - before == 0
+
+
+def test_column_calls_skip_call_site_capture(spark):
+    """Column and functions calls must not pay PySpark's per-call origin
+    capture (several py4j round trips each), which dominated building the
+    domain-chain stage plans."""
+    from pyspark.errors.utils import is_debugging_enabled
+    from pyspark.sql import functions as F
+
+    F.col("x") + 1
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()

@@ -405,8 +405,9 @@ def test_pipeline_incremental_skip_and_invalidate(spark, tmp_path):
 
 def test_runner_resumes_only_committed_artifacts(spark, tmp_path):
     """A write that died mid-stage leaves a NEWER version directory with
-    part files but no ``_SUCCESS`` marker. Resolution, reads and the
-    incremental skip must all keep using the committed artifact."""
+    part files (and even its ``_schema.json``) but no ``_SUCCESS`` marker.
+    Resolution, reads and the incremental skip must all keep using the
+    committed artifact."""
     import os
 
     from peskas_timor_data_pipeline_spark.plans import Pipeline
@@ -417,6 +418,7 @@ def test_runner_resumes_only_committed_artifacts(spark, tmp_path):
         path = write_stage(df, d, prefix)
         os.remove(os.path.join(path, "_SUCCESS"))
         assert any(f.startswith("part-") for f in os.listdir(path))
+        assert os.path.exists(os.path.join(path, "_schema.json"))
         return path
 
     base = write_stage(spark.range(5).withColumn("v", F.col("id")), d, "base")
@@ -467,3 +469,117 @@ def test_schema_diff_detects_drift(spark, tmp_path):
     assert got["name"][0] == "removed"
     assert got["flag"][0] == "added"
     assert got["score"] == ("type_changed", "double", "float")
+
+
+def _jobs_launched(spark, fn):
+    """Run ``fn`` and count the Spark jobs it launched (status store)."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    before = store.jobsList(None).size()
+    out = fn()
+    return out, store.jobsList(None).size() - before
+
+
+def _normalized_plan(df) -> str:
+    import re
+
+    return re.sub(r"#\d+L?", "#", df._jdf.queryExecution().executedPlan().toString())
+
+
+def test_read_stage_uses_recorded_schema_without_a_job(spark, tmp_path):
+    """A ``write_stage`` artifact carries ``_schema.json``; reading it
+    launches no schema-inference job and gives the same schema, rows and
+    executed plan as an inferring read, nested and temporal types
+    included. ``write_stage_clustered`` records the schema too."""
+    import os
+
+    from peskas_timor_data_pipeline_spark.sources.io import write_stage_clustered
+
+    d = str(tmp_path)
+    df = spark.range(50).selectExpr(
+        "id",
+        "named_struct('a', id, 'b', array(cast(id AS string))) AS s",
+        "array(id, id + 1) AS arr",
+        "date_add(date'2023-01-01', cast(id AS int)) AS dt",
+        "timestamp'2023-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts",
+        "cast(id / 7 AS decimal(18, 4)) AS dec",
+    )
+    path = write_stage(df, d, "typed")
+    assert os.path.exists(os.path.join(path, "_schema.json"))
+    got, jobs = _jobs_launched(spark, lambda: read_stage(spark, d, "typed"))
+    assert jobs == 0
+    inferred = spark.read.parquet(path)
+    assert got.schema == inferred.schema
+    assert sorted(got.collect()) == sorted(inferred.collect())
+    assert _normalized_plan(got) == _normalized_plan(inferred)
+
+    clustered = write_stage_clustered(df, d, "clustered", ["id"], n_files=2)
+    assert os.path.exists(os.path.join(clustered, "_schema.json"))
+    got, jobs = _jobs_launched(spark, lambda: read_stage(spark, d, "clustered"))
+    assert jobs == 0 and got.schema == inferred.schema
+
+
+def test_read_stage_infers_without_schema_file(spark, tmp_path):
+    """An artifact without the sidecar (older code, or a crash between
+    commit and schema write) is read by inference."""
+    import os
+
+    d = str(tmp_path)
+    df = spark.createDataFrame([(1, "a", 2.5), (2, None, None)], "id int, v string, x double")
+    path = write_stage(df, d, "old")
+    os.remove(os.path.join(path, "_schema.json"))
+    got, jobs = _jobs_launched(spark, lambda: read_stage(spark, d, "old"))
+    assert jobs >= 1
+    assert got.schema == spark.read.parquet(path).schema
+    assert sorted(got.collect(), key=lambda r: r.id) == df.collect()
+
+
+def test_read_stage_partitioned_artifact_as_before(spark, tmp_path):
+    """Partitioned artifacts get no sidecar: the partition column's type
+    comes from directory-name inference, as before."""
+    import os
+
+    from peskas_timor_data_pipeline_spark.sources.io import write_stage_partitioned
+
+    d = str(tmp_path)
+    df = spark.range(12).select(
+        F.col("id"), (F.col("id") % 3).cast("int").alias("band"), F.lit("x").alias("v")
+    )
+    path = write_stage_partitioned(df, d, "parts", ["band"])
+    assert not os.path.exists(os.path.join(path, "_schema.json"))
+    got = read_stage(spark, d, "parts")
+    inferred = spark.read.parquet(path)
+    assert got.schema == inferred.schema
+    assert got.schema["band"].dataType.simpleString() == "int"
+    assert sorted(got.collect()) == sorted(inferred.collect())
+
+
+def test_incremental_skip_is_keyed_on_stage_code(spark, tmp_path):
+    """Under ``incremental=True`` a stage whose fn changed reruns even
+    though its inputs did not; an unchanged stage is skipped."""
+    from peskas_timor_data_pipeline_spark.plans import Pipeline
+
+    d = str(tmp_path)
+    write_stage(spark.range(5).withColumn("v", F.col("id")), d, "base")
+    runs = []
+
+    def total_v1(spark, base):
+        runs.append("v1")
+        return base.agg(F.sum("v").alias("total"))
+
+    def total_v2(spark, base):
+        runs.append("v2")
+        return base.agg((F.sum("v") * 2).alias("total"))
+
+    def pipeline(fn):
+        pipe = Pipeline(spark, d)
+        pipe.stage("derived", inputs=["base"])(fn)
+        return pipe
+
+    p1 = pipeline(total_v1).run(incremental=True)
+    p2 = pipeline(total_v1).run(incremental=True)
+    assert runs == ["v1"] and p2["derived"] == p1["derived"]
+    p3 = pipeline(total_v2).run(incremental=True)
+    assert runs == ["v1", "v2"] and p3["derived"] != p1["derived"]
+    assert read_stage(spark, d, "derived").collect()[0].total == 20
+    pipeline(total_v2).run(incremental=True)
+    assert runs == ["v1", "v2"]

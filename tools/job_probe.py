@@ -1,9 +1,8 @@
-"""Deterministic optimization probe: run registry queries and report the
-number of Spark JOBS (driver-blocking actions, including eager
-checkpoints), stages, and summed task wall time, plus the build/action
-wall split. Job and stage counts are noise-free on a steal-prone host —
-they measure exactly the barrier structure the checkpoint-gating work
-changes — while summed task time approximates executor work.
+"""Deterministic optimization probe: run registry queries and print, per
+query, the number of Spark JOBS (driver-blocking actions, including eager
+checkpoints) and stages with tasks, plus the build/action/total wall time.
+Job and stage counts are noise-free on a steal-prone host — they measure
+exactly the barrier structure the checkpoint-gating work changes.
 
 Usage: python tools/job_probe.py q1,q2[,...] [--sf-dir DIR]
 """
@@ -39,9 +38,6 @@ def main() -> None:
 
     tracker = sc.statusTracker()
 
-    def snapshot() -> tuple[set[int], set[int]]:
-        return set(tracker.getJobIdsForGroup(None) or []), set()
-
     for name in names:
         fn, _sql = reg[name]
         jobs_before = set(tracker.getJobIdsForGroup(None) or [])
@@ -53,7 +49,6 @@ def main() -> None:
         jobs_after = set(tracker.getJobIdsForGroup(None) or [])
         new_jobs = sorted(jobs_after - jobs_before)
         n_stages = 0
-        task_ms = 0
         for j in new_jobs:
             ji = tracker.getJobInfo(j)
             if ji is None:
