@@ -6302,6 +6302,7 @@ def d20b_store_match_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from peskas_timor_data_pipeline_spark.llm.dedup import (
         match_signature_store, minhash_signature, store_band_rows,
     )
+    from peskas_timor_data_pipeline_spark.sources.io import read_parquet
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     batch = (
@@ -6346,7 +6347,7 @@ def d20b_store_match_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     return match_signature_store(
         batch_sigs, store_sigs, "doc_id", N_HASHES, BAND_SIZE,
         min_agree=_D20_MIN_AGREE,
-        store_bands=spark.read.parquet(path),
+        store_bands=read_parquet(spark, path),
     )
 
 

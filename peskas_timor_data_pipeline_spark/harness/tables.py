@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from peskas_timor_data_pipeline_spark.session import prep_session
+from peskas_timor_data_pipeline_spark.sources.io import read_parquet
 
 TABLES = (
     "region",
@@ -78,6 +79,12 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table; normalizes the session TZ first so
     timestamp->date derivations agree with the naive-timestamp oracle.
 
+    The read goes through ``sources.io.read_parquet``: the first load of
+    a table in a session infers its schema (one footer-reading job), every
+    later load of the unchanged file reuses that answer and launches no
+    job before the query's own action. A rewritten file, or a different
+    ``nanosAsLong`` setting, infers again.
+
     ``events.ts`` varies by testdata generation: TIMESTAMP(NANOS) parquet
     (no native Spark type — read as long nanos via legacy conf, then
     floor-convert with integer division because nanos exceed double's 2^53
@@ -87,7 +94,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     prep_session(spark)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
@@ -95,7 +102,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if isinstance(ts_type, T.LongType):
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return _naive(df)
-    return _naive(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    return _naive(read_parquet(spark, f"{sf_dir}/{name}.parquet"))
 
 
 def _naive(df: DataFrame) -> DataFrame:

@@ -130,34 +130,65 @@ def minhash_signature(
     ASCII order == numeric order, so the long-min picks the same slice and
     lpad(lower(hex(.)), 8) reproduces the exact bytes — signatures, store
     artifacts, and oracle hashes are unchanged, but the aggregate is a
-    fixed-width hash aggregate with map-side partials and zero spill."""
+    fixed-width hash aggregate with map-side partials and zero spill.
+
+    Each digest is read as two signed 64-bit words
+    (``conv(substring(md5, 1|17, 16), 16, -10)``) and slot j is the high
+    (``shiftrightunsigned(w, 32)``) or low (``w & 0xffffffff``) half of
+    its word: the same 32-bit values the hex slices give, bit for bit.
+    Slicing the 128-char concatenated chain instead cost one ``conv`` per
+    slot and one ``substring`` that walks from byte 0 to the slice start
+    (Spark 4.1's ``UTF8String.substring`` has no ASCII fast path): about
+    half of the executor samples of the d18 query went to those two calls.
+    The words take half the ``conv`` calls and no walk longer than 32
+    chars. When the function shingles by itself it explodes
+    ``array_distinct`` of each text's shingles, since a min over the set
+    equals the min over the multiset (the sf0.01 corpus: 500 docs, 147,174
+    shingles, 102,511 distinct (doc, shingle) pairs). Signature +
+    ``localCheckpoint`` on it, ``n_hashes=16``, 4 cores, median of 10
+    alternations in one JVM: 1014 ms with the slices, 668 ms with the
+    words and ``array_distinct``."""
     n_md5 = -(-n_hashes * MINHASH_WIDTH // 32)  # ceil
+    per_word = 64 // (4 * MINHASH_WIDTH)  # 32-bit slots per 64-bit word
+    if shingles is None:
+        shingles = _spread(df).select(
+            F.col(id_col),
+            F.explode(
+                F.expr(f"array_distinct({_shingles_sql(text_col, k_shingle)})")
+            ).alias("sh"),
+        )
     # expr-string construction (r11): identical parsed trees, one py4j
     # round-trip per expression instead of ~4-6 per slot
-    digest = F.expr(
-        "concat(" + ", ".join(
-            f"md5(concat(sh, '#{j}'))" for j in range(n_md5)
-        ) + ")"
+    digests = shingles.select(
+        id_col,
+        *[F.expr(f"md5(concat(sh, '#{k}')) AS __d{k}__") for k in range(n_md5)],
     )
-    shingled = (
-        shingles
-        if shingles is not None
-        else shingle_rows(df, id_col, text_col, k_shingle)
-    ).withColumn("dig", digest)
-    aggs = [
-        F.expr(
-            f"min(CAST(conv(substring(dig, {1 + MINHASH_WIDTH * j},"
-            f" {MINHASH_WIDTH}), 16, 10) AS BIGINT)) AS __hl{j}__"
-        )
-        for j in range(n_hashes)
-    ]
+    words = digests.select(
+        id_col,
+        *[
+            F.expr(
+                f"CAST(conv(substring(__d{k}__, {1 + 16 * i}, 16), 16, -10)"
+                f" AS BIGINT) AS __w{2 * k + i}__"
+            )
+            for k in range(n_md5)
+            for i in range(2)
+        ],
+    )
+
+    def slot(j: int) -> str:
+        w, r = divmod(j, per_word)
+        if r == 0:
+            return f"shiftrightunsigned(__w{w}__, 32)"
+        return f"(__w{w}__ & 4294967295)"
+
+    aggs = [F.expr(f"min({slot(j)}) AS __hl{j}__") for j in range(n_hashes)]
     back = [
         F.expr(
             f"lpad(lower(hex(__hl{j}__)), {MINHASH_WIDTH}, '0') AS h{j}"
         )
         for j in range(n_hashes)
     ]
-    return shingled.groupBy(id_col).agg(*aggs).select(id_col, *back)
+    return words.groupBy(id_col).agg(*aggs).select(id_col, *back)
 
 
 def band_rows(

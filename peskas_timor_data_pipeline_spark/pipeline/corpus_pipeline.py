@@ -53,7 +53,7 @@ from peskas_timor_data_pipeline_spark.llm.text import (
     repetition_signals,
 )
 from peskas_timor_data_pipeline_spark.plans.runner import Pipeline
-from peskas_timor_data_pipeline_spark.sources.io import write_stage
+from peskas_timor_data_pipeline_spark.sources.io import read_parquet, write_stage
 
 
 def ingest_corpus(spark: SparkSession, artifact_dir: str, source_path: str) -> str:
@@ -62,7 +62,7 @@ def ingest_corpus(spark: SparkSession, artifact_dir: str, source_path: str) -> s
     S14 track ingestion: call this only when the source shard actually
     changed — downstream stage fingerprints then skip the whole unchanged
     branch on ``run(incremental=True)``."""
-    df = spark.read.parquet(source_path).select("doc_id", "text")
+    df = read_parquet(spark, source_path).select("doc_id", "text")
     return write_stage(df, artifact_dir, "corpus_raw")
 
 

@@ -190,7 +190,11 @@ def catch_composition(
     grid = agg.select("region").distinct().crossJoin(
         F.broadcast(agg.select("taxa").distinct())
     )
-    completed = grid.join(agg, ["region", "taxa"], "left").select(
+    # agg is grid-sized too: hinted, the join is planned statically. Left
+    # to AQE it is a sort-merge join that becomes a broadcast join only
+    # when the agg stage happens to finish first, so the job count of the
+    # same query varied between runs.
+    completed = grid.join(F.broadcast(agg), ["region", "taxa"], "left").select(
         "region", "taxa", F.coalesce("catch", F.lit(0)).alias("catch")
     )
     totals = completed.groupBy("region").agg(

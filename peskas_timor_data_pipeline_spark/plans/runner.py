@@ -10,8 +10,10 @@ artifact versions are unchanged since its last run is skipped entirely —
 the generalization of the reference's hand-rolled only-new-ids /
 descriptor-cache patterns (R/ingest-pds-data.R:181,
 R/preprocess-pds-trips.R:199-235) to every stage. The skip is also keyed on
-the stage's code: a stage version (hash of its fn's source plus its
-``partition_cols``) is recorded with the inputs, so an edited stage reruns.
+the stage's code: a stage version (hash of the source of its fn and of the
+callables in the fn's closure, plus its ``partition_cols``) is recorded
+with the inputs, so an edited stage reruns. A meta file that is missing,
+unreadable or keyless makes its stage rerun (with a warning).
 
 A stage is committed once Spark writes its ``_SUCCESS`` marker; only
 committed artifacts are read or resumed from. Unpartitioned stages also
@@ -51,15 +53,35 @@ class Stage:
     version: str = field(init=False)
 
     def __post_init__(self) -> None:
-        # Code-aware skip key, hashed once at registration: the fn's source
-        # (its qualname when there is none) plus the declared layout.
-        fn = inspect.unwrap(self.fn)
-        try:
-            code = inspect.getsource(fn)
-        except (OSError, TypeError):
-            code = getattr(fn, "__qualname__", type(fn).__qualname__)
-        key = f"{code}\0{self.partition_cols}"
+        # Code-aware skip key, hashed once at registration: the source of
+        # the fn and of every callable its closure holds, recursively (a
+        # shared wrapper's own source says nothing about the body it
+        # wraps), plus the declared layout.
+        codes: list[str] = []
+        _closure_sources(self.fn, codes, set())
+        key = "\0".join(codes) + f"\0{self.partition_cols}"
         self.version = hashlib.sha1(key.encode()).hexdigest()[:12]
+
+
+def _closure_sources(fn: Callable, out: list[str], seen: set[int]) -> None:
+    """Append the source of ``inspect.unwrap(fn)`` (its qualname when it
+    has none) and, depth first, that of each callable in its closure
+    cells; ``seen`` breaks cycles and repeats."""
+    fn = inspect.unwrap(fn)
+    if id(fn) in seen:
+        return
+    seen.add(id(fn))
+    try:
+        out.append(inspect.getsource(fn))
+    except (OSError, TypeError):
+        out.append(getattr(fn, "__qualname__", type(fn).__qualname__))
+    for cell in getattr(fn, "__closure__", None) or ():
+        try:
+            value = cell.cell_contents
+        except ValueError:  # a cell not yet bound
+            continue
+        if callable(value):
+            _closure_sources(value, out, seen)
 
 
 @dataclass
@@ -101,6 +123,25 @@ class Pipeline:
     def _meta_path(self, st: Stage) -> str:
         return os.path.join(self.artifact_dir, f"{st.name}__inputs__.json")
 
+    def _read_meta(self, st: Stage) -> dict:
+        """The stage's recorded run, or ``{}`` when there is none: a meta
+        file that cannot be read, is not JSON (corrupt, truncated) or lacks
+        the ``inputs``/``version`` keys counts as absent, so the stage
+        reruns instead of the run failing."""
+        meta = self._meta_path(st)
+        try:
+            with open(meta) as f:
+                rec = json.load(f)
+        except FileNotFoundError:
+            return {}
+        except (OSError, ValueError) as e:  # ValueError: bad JSON or UTF-8
+            log.warning("stage %s: unreadable meta %s (%s); rerunning", st.name, meta, e)
+            return {}
+        if not isinstance(rec, dict) or not {"inputs", "version"} <= rec.keys():
+            log.warning("stage %s: meta %s lacks inputs/version; rerunning", st.name, meta)
+            return {}
+        return rec
+
     def run(
         self, only: set[str] | None = None, incremental: bool = False
     ) -> dict[str, str]:
@@ -119,14 +160,11 @@ class Pipeline:
             fp = self._fingerprint(st)
             existing = resolve_latest(self.artifact_dir, st.name, "parquet")
             if incremental and existing is not None and st.inputs:
-                meta = self._meta_path(st)
-                if os.path.exists(meta):
-                    with open(meta) as f:
-                        rec = json.load(f)
-                    if rec.get("inputs") == fp and rec.get("version") == st.version:
-                        paths[st.name] = existing
-                        log.info("stage %s: current, skipped", st.name)
-                        continue
+                rec = self._read_meta(st)
+                if rec.get("inputs") == fp and rec.get("version") == st.version:
+                    paths[st.name] = existing
+                    log.info("stage %s: current, skipped", st.name)
+                    continue
             upstream = {
                 name: read_stage(self.spark, self.artifact_dir, name)
                 for name in st.inputs

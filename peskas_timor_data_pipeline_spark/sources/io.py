@@ -7,15 +7,30 @@ boundaries with the same versioned-name convention; storage can be any
 Hadoop-compatible filesystem (file://, gs://, s3a://) — the path prefix is
 the only difference at cluster scale.
 
-Schema sidecar: ``write_stage`` and ``write_stage_clustered`` record the
-written frame's schema as ``<artifact>/_schema.json`` after Spark's commit
-(tmp file + ``os.replace``), and ``read_stage`` hands it to the reader, so a
-stage read launches no footer-reading schema-inference job. The file is
-optional: an artifact without it (older code, a crash between commit and
-schema write) is read by inference, and ``write_stage_partitioned`` never
-writes one, because Spark infers partition column types from directory
-names. ``_SUCCESS`` alone still decides what counts as committed. Spark,
-pyarrow and DuckDB's ``*.parquet`` globs all skip ``_``-prefixed files.
+One Parquet read path: every package read goes through ``read_parquet``,
+which finds the schema in this order and launches Spark's footer-reading
+schema-inference job only when all else misses:
+
+1. **Sidecar.** ``write_stage`` and ``write_stage_clustered`` record the
+   written frame's schema as ``<artifact>/_schema.json`` after Spark's
+   commit (tmp file + ``os.replace``); a read with it launches no job. The
+   file is optional: an artifact without it (older code, a crash between
+   commit and schema write) falls through, and ``write_stage_partitioned``
+   never writes one, because Spark infers partition column types from
+   directory names. ``_SUCCESS`` alone still decides what counts as
+   committed. Spark, pyarrow and DuckDB's ``*.parquet`` globs all skip
+   ``_``-prefixed files.
+2. **Memo.** The ``StructType`` Spark itself inferred for the same input
+   earlier in the process. The key holds the session, the absolute path,
+   the listing of the path's data files (relative name, size,
+   ``mtime_ns``; ``_``/``.`` names skipped, as Spark skips them), and the
+   session values of the confs Spark's Parquet schema converter reads
+   (``_SCHEMA_CONFS``). A rewritten file or a flipped conf therefore
+   misses and re-infers. The memo holds ``_MEMO_MAX`` entries (least
+   recently used out) and is safe to use from several threads.
+3. **Inference.** A plain ``spark.read.parquet``; its answer enters the
+   memo. URIs (``gs://``, ``s3a://``, ``file://``) and globs are not
+   listed here, so they always infer.
 """
 
 from __future__ import annotations
@@ -26,6 +41,8 @@ import hashlib
 import json
 import os
 import re
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
@@ -122,6 +139,82 @@ def _record_schema(df: DataFrame, path: str) -> None:
     os.replace(target + ".tmp", target)
 
 
+# Session confs that change the schema Spark infers from Parquet footers
+# (ParquetToSparkSchemaConverter and the reader's column matching).
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+_MEMO_MAX = 256
+_memo: OrderedDict = OrderedDict()
+_memo_lock = threading.Lock()
+
+
+def _sidecar_schema(path: str) -> StructType | None:
+    try:
+        with open(os.path.join(path, _SCHEMA_FILE)) as f:
+            return StructType.fromJson(json.load(f))
+    except (FileNotFoundError, NotADirectoryError):
+        return None
+
+
+def _data_files(path: str) -> tuple | None:
+    """(relative name, size, mtime_ns) of every data file under ``path``,
+    skipping ``_``/``.`` names as Spark's file index does; None when the
+    path is not a local file or directory, or changes while listed."""
+    if os.path.isfile(path):
+        base, names = os.path.dirname(path), [os.path.basename(path)]
+    elif os.path.isdir(path):
+        base, names = path, []
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            names += [
+                os.path.relpath(os.path.join(root, n), path)
+                for n in files
+                if not n.startswith(("_", "."))
+            ]
+    else:
+        return None
+    try:
+        stats = {n: os.stat(os.path.join(base, n)) for n in names}
+    except FileNotFoundError:
+        return None
+    return tuple(sorted((n, st.st_size, st.st_mtime_ns) for n, st in stats.items()))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read Parquet with a known schema when there is one: the artifact's
+    sidecar, else the memoized answer of Spark's own inference for the
+    same files and schema confs, else inference (memoized for next time).
+    See the module docstring for the order and the memo key."""
+    schema = _sidecar_schema(path)
+    if schema is None:
+        files = None if "://" in path else _data_files(path)
+        if files is None:
+            return spark.read.parquet(path)
+        key = (
+            spark,
+            os.path.abspath(path),
+            files,
+            tuple(spark.conf.get(c) for c in _SCHEMA_CONFS),
+        )
+        with _memo_lock:
+            schema = _memo.get(key)
+            if schema is not None:
+                _memo.move_to_end(key)
+        if schema is None:
+            df = spark.read.parquet(path)
+            with _memo_lock:
+                _memo[key] = df.schema
+                while len(_memo) > _MEMO_MAX:
+                    _memo.popitem(last=False)
+            return df
+    return spark.read.schema(schema).parquet(path)
+
+
 def write_stage(df: DataFrame, directory: str, prefix: str, mode: str = "overwrite") -> str:
     """Parquet stage boundary with a versioned directory name (S6/S7/S8
     replacement: parquet+zstd instead of gz RDS) and a schema sidecar."""
@@ -182,18 +275,12 @@ def write_stage_clustered(
 
 
 def read_stage(spark: SparkSession, directory: str, prefix: str) -> DataFrame:
-    """Read the latest committed version of a stage artifact, with its
-    recorded schema when it has one (no inference job), else by
-    inference."""
+    """Read the latest committed version of a stage artifact through
+    :func:`read_parquet`."""
     path = resolve_latest(directory, prefix, "parquet")
     if path is None:
         raise FileNotFoundError(f"no artifact for prefix={prefix} in {directory}")
-    try:
-        with open(os.path.join(path, _SCHEMA_FILE)) as f:
-            schema = StructType.fromJson(json.load(f))
-    except FileNotFoundError:
-        return spark.read.parquet(path)
-    return spark.read.schema(schema).parquet(path)
+    return read_parquet(spark, path)
 
 
 def write_public_tsv(df: DataFrame, path: str) -> None:
@@ -238,13 +325,15 @@ def upsert_stage(
 def schema_diff(spark, path_a: str, path_b: str):
     """Schema drift between two parquet snapshots — added / removed /
     type-changed columns (the check a pipeline runs before MERGEing a new
-    vendor drop onto a stage). Reads FOOTER metadata only; no data scan.
+    vendor drop onto a stage). Reads schemas only, through
+    :func:`read_parquet`: sidecar artifacts launch no job, other inputs at
+    most one footer-inference job each (none once memoized); no data scan.
 
     Returns a DataFrame (column_name, status, type_a, type_b) where
     status in {added, removed, type_changed, unchanged}.
     """
-    fa = {f.name: f.dataType.simpleString() for f in spark.read.parquet(path_a).schema.fields}
-    fb = {f.name: f.dataType.simpleString() for f in spark.read.parquet(path_b).schema.fields}
+    fa = {f.name: f.dataType.simpleString() for f in read_parquet(spark, path_a).schema.fields}
+    fb = {f.name: f.dataType.simpleString() for f in read_parquet(spark, path_b).schema.fields}
     rows = []
     for name in sorted(set(fa) | set(fb)):
         ta, tb = fa.get(name), fb.get(name)

@@ -268,6 +268,7 @@ def store_dedup_sink(
     from peskas_timor_data_pipeline_spark.llm.dedup import (
         match_signature_store, minhash_signature,
     )
+    from peskas_timor_data_pipeline_spark.sources.io import read_parquet
 
     def match_batch(batch: DataFrame, batch_id: int) -> None:
         import re
@@ -275,7 +276,7 @@ def store_dedup_sink(
         if not batch.take(1):
             return
         store = (
-            batch.sparkSession.read.parquet(store_sigs)
+            read_parquet(batch.sparkSession, store_sigs)
             if isinstance(store_sigs, str)
             else store_sigs
         )
@@ -304,7 +305,7 @@ def store_dedup_sink(
             )
         bsig = minhash_signature(batch, id_col, text_col, n_hashes, k_shingle)
         store_bands = (
-            batch.sparkSession.read.parquet(band_store)
+            read_parquet(batch.sparkSession, band_store)
             if band_store is not None
             else None
         )

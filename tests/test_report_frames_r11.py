@@ -130,3 +130,22 @@ def test_string_rank_dict_order_preserving(spark):
     got_ids = [i for _, i in out]
     assert got_vals == sorted(set(v for v in vals if v is not None))
     assert got_ids == list(range(1, len(got_vals) + 1))
+
+
+def test_rp3_launches_one_job_count(spark, sf_dir):
+    """rp3's action launches the same jobs on every run: catch_composition
+    broadcasts its grid join instead of leaving the join to adaptive
+    execution, which picked it by which stage finished first."""
+    import collections
+
+    from peskas_timor_data_pipeline_spark.harness import registry
+
+    fn = registry()["rp3_catch_composition"][0]
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    counts = collections.Counter()
+    for _ in range(20):
+        df = fn(spark, sf_dir)
+        before = int(dag.nextJobId())
+        df.write.mode("overwrite").format("noop").save()
+        counts[int(dag.nextJobId()) - before] += 1
+    assert len(counts) == 1, counts

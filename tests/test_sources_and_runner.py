@@ -3,14 +3,18 @@
 from __future__ import annotations
 
 import json
+import os
 import time
 
 from pyspark.sql import functions as F
 
+from peskas_timor_data_pipeline_spark.harness.tables import TABLES, load
 from peskas_timor_data_pipeline_spark.sources.io import (
     add_version,
+    read_parquet,
     read_stage,
     resolve_latest,
+    schema_diff,
     write_stage,
 )
 from peskas_timor_data_pipeline_spark.sources.rest import (
@@ -472,11 +476,13 @@ def test_schema_diff_detects_drift(spark, tmp_path):
 
 
 def _jobs_launched(spark, fn):
-    """Run ``fn`` and count the Spark jobs it launched (status store)."""
-    store = spark.sparkContext._jsc.sc().statusStore()
-    before = store.jobsList(None).size()
+    """Run ``fn`` and count the Spark jobs it launched, by the DAG
+    scheduler's job ids (the status store's job list drops its oldest
+    entries past ``spark.ui.retainedJobs``, so its size is no counter)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = int(dag.nextJobId())
     out = fn()
-    return out, store.jobsList(None).size() - before
+    return out, int(dag.nextJobId()) - before
 
 
 def _normalized_plan(df) -> str:
@@ -583,3 +589,182 @@ def test_incremental_skip_is_keyed_on_stage_code(spark, tmp_path):
     assert read_stage(spark, d, "derived").collect()[0].total == 20
     pipeline(total_v2).run(incremental=True)
     assert runs == ["v1", "v2"]
+
+
+def test_stage_version_covers_the_wrapped_body(spark, tmp_path):
+    """Stages registered through one shared wrapper get versions from the
+    bodies the wrapper closes over: they differ from each other, and an
+    edited body reruns only its own stage under ``incremental=True``."""
+    from peskas_timor_data_pipeline_spark.plans import Pipeline
+
+    d = str(tmp_path)
+    write_stage(spark.range(5).withColumn("v", F.col("id")), d, "base")
+    runs = []
+
+    def total(spark, base):
+        return base.agg(F.sum("v").alias("total"))
+
+    def count_v1(spark, base):
+        return base.agg(F.count("v").alias("n"))
+
+    def count_v2(spark, base):
+        return base.agg((F.count("v") + 1).alias("n"))
+
+    def pipeline(count_fn):
+        pipe = Pipeline(spark, d)
+
+        def stage(name, fn):
+            def counted(*a, **kw):
+                runs.append(name)
+                return fn(*a, **kw)
+
+            pipe.stage(name, inputs=["base"])(counted)
+
+        stage("total", total)
+        stage("count", count_fn)
+        return pipe
+
+    p = pipeline(count_v1)
+    assert p.stages[0].version != p.stages[1].version
+    p.run(incremental=True)
+    pipeline(count_v1).run(incremental=True)
+    assert runs == ["total", "count"]
+    pipeline(count_v2).run(incremental=True)
+    assert runs == ["total", "count", "count"]
+    assert read_stage(spark, d, "count").collect()[0].n == 6
+
+
+def test_unreadable_meta_reruns_its_stage(spark, tmp_path, caplog):
+    """A meta file that is garbage, truncated JSON or keyless counts as
+    absent: the stage reruns with a warning instead of failing the run.
+    A meta that matches while the stage's output is gone reruns too."""
+    import logging
+    import shutil
+
+    from peskas_timor_data_pipeline_spark.plans import Pipeline
+
+    d = str(tmp_path)
+    write_stage(spark.range(3).withColumn("v", F.col("id")), d, "base")
+    runs = []
+
+    def derived(spark, base):
+        runs.append(1)
+        return base.agg(F.sum("v").alias("total"))
+
+    def run():
+        pipe = Pipeline(spark, d)
+        pipe.stage("derived", inputs=["base"])(derived)
+        return pipe.run(incremental=True)
+
+    first = run()
+    meta = os.path.join(d, "derived__inputs__.json")
+    good = open(meta, "rb").read()
+    run()
+    assert len(runs) == 1
+    for bad in (b"\x00\xff\xfe garbage", good[: len(good) // 2], b"[]", b"{}"):
+        with open(meta, "wb") as f:
+            f.write(bad)
+        with caplog.at_level(logging.WARNING, logger="peskas_timor_data_pipeline_spark.plans.runner"):
+            caplog.clear()
+            out = run()
+        assert out["derived"] != first["derived"]
+        assert any("rerunning" in r.getMessage() for r in caplog.records), bad
+    assert len(runs) == 5
+    run()
+    assert len(runs) == 5  # the rerun rewrote a good meta
+
+    while resolve_latest(d, "derived", "parquet") is not None:
+        shutil.rmtree(resolve_latest(d, "derived", "parquet"))
+    run()
+    assert len(runs) == 6
+    assert read_stage(spark, d, "derived").collect()[0].total == 3
+
+
+def test_second_load_launches_no_job(spark, sf_dir):
+    """After one ``load`` of a table, the next load of the unchanged file
+    launches no job, and reads what a plain ``spark.read.parquet`` reads:
+    schema, rows and executed plan."""
+    for name in TABLES:
+        load(spark, sf_dir, name)
+        df, jobs = _jobs_launched(spark, lambda: load(spark, sf_dir, name))
+        assert jobs == 0, name
+        path = f"{sf_dir}/{name}.parquet"
+        got, jobs = _jobs_launched(spark, lambda: read_parquet(spark, path))
+        assert jobs == 0, name
+        plain = spark.read.parquet(path)
+        assert got.schema == plain.schema, name
+        assert _normalized_plan(got) == _normalized_plan(plain), name
+        if name in ("events", "orders", "documents"):
+            assert sorted(got.collect()) == sorted(plain.collect()), name
+
+
+def test_rewritten_file_reinfers(spark, tmp_path):
+    """The memo is keyed on the files: a rewrite of the same path infers
+    again and sees the new schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": [1, 2], "v": ["a", "b"]}), path)
+    first, jobs = _jobs_launched(spark, lambda: read_parquet(spark, path))
+    assert jobs >= 1
+    _, jobs = _jobs_launched(spark, lambda: read_parquet(spark, path))
+    assert jobs == 0
+    pq.write_table(pa.table({"id": [1, 2, 3], "v": [1.5, 2.5, 3.5], "w": [True] * 3}), path)
+    got, jobs = _jobs_launched(spark, lambda: read_parquet(spark, path))
+    assert jobs >= 1
+    assert got.schema == spark.read.parquet(path).schema != first.schema
+    assert got.count() == 3
+
+    # a directory of part files: one more file is a different listing
+    d = str(tmp_path / "dir")
+    os.makedirs(d)
+    pq.write_table(pa.table({"id": [1]}), os.path.join(d, "part-0.parquet"))
+    assert read_parquet(spark, d).count() == 1
+    pq.write_table(pa.table({"id": [2, 3]}), os.path.join(d, "part-1.parquet"))
+    got, jobs = _jobs_launched(spark, lambda: read_parquet(spark, d))
+    assert jobs >= 1 and got.count() == 3
+
+
+def test_flipped_nanos_conf_reinfers(spark, tmp_path):
+    """``nanosAsLong`` changes what Spark infers for TIMESTAMP(NANOS), so
+    it is part of the memo key: flipping it gives Spark's own answer for
+    the new setting, not the remembered one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "nanos.parquet")
+    ts = pa.array([1_700_000_000_123_456_789], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), path, version="2.6")
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        as_long = read_parquet(spark, path)
+        assert as_long.schema["ts"].dataType.simpleString() == "bigint"
+        _, jobs = _jobs_launched(spark, lambda: read_parquet(spark, path))
+        assert jobs == 0
+        spark.conf.set(key, "false")
+
+        def outcome(read):
+            try:
+                return read().schema.simpleString()
+            except Exception as e:  # noqa: BLE001 - compare the failure itself
+                return type(e).__name__
+
+        got = outcome(lambda: read_parquet(spark, path))
+        assert got == outcome(lambda: spark.read.parquet(path))
+        assert got != as_long.schema.simpleString()
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_schema_diff_on_artifacts_launches_no_job(spark, tmp_path):
+    """Two artifacts with schema sidecars are compared without a job."""
+    d = str(tmp_path)
+    a = write_stage(spark.createDataFrame([(1, "x")], "id long, name string"), d, "a")
+    b = write_stage(spark.createDataFrame([(1, 2.0)], "id long, score double"), d, "b")
+    out, jobs = _jobs_launched(spark, lambda: schema_diff(spark, a, b))
+    assert jobs == 0
+    got = {r.column_name: r.status for r in out.collect()}
+    assert got == {"id": "unchanged", "name": "removed", "score": "added"}
