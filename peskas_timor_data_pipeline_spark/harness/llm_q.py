@@ -4777,26 +4777,14 @@ def t30_source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard — corpus-level similarity with NO document pairs anywhere,
     the way you compare crawls/dumps at 100 TB. 16 slots make a coarse
     but fully deterministic estimator (md5 mins, engine-exact); match
-    counts are exact integers."""
-    from peskas_timor_data_pipeline_spark.llm.dedup import (
-        MINHASH_WIDTH,
-        shingle_rows,
-    )
+    counts are exact integers. The signature is
+    ``llm/dedup.py::minhash_signature`` with the source as its id: the
+    min over a source's shingles is the min over its documents'."""
+    from peskas_timor_data_pipeline_spark.llm.dedup import minhash_signature
 
-    docs = load(spark, sf_dir, "documents").select("source", "doc_id", "text")
-    n_md5 = -(-N_HASHES * MINHASH_WIDTH // 32)
-    digest = F.concat(
-        *[F.md5(F.concat(F.col("sh"), F.lit(f"#{j}"))) for j in range(n_md5)]
-    )
-    shingled = shingle_rows(docs, "source", "text", K_SHINGLE).withColumn(
-        "dig", digest
-    )
-    aggs = [
-        F.min(F.substring("dig", 1 + MINHASH_WIDTH * j, MINHASH_WIDTH)).alias(f"h{j}")
-        for j in range(N_HASHES)
-    ]
+    docs = load(spark, sf_dir, "documents").select("source", "text")
     # Size-gated lineage cut (r12): sigs is |sources| rows but its subtree
-    # is the full corpus-scale shingle+md5-chain pass, and BOTH self-join
+    # is the full corpus-scale shingle+md5 pass, and BOTH self-join
     # sides reference it. At cluster scale the cut halves the dominant
     # pass (duplicated subtrees don't share stages under AQE); at toy
     # scale the duplicates run as PARALLEL stages inside one job (wall
@@ -4804,7 +4792,9 @@ def t30_source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured +1.7 s at sf0.1 unconditional, so it engages on size only.
     from peskas_timor_data_pipeline_spark.llm.ckpt import materialize_gated
 
-    sigs = materialize_gated(shingled.groupBy("source").agg(*aggs))
+    sigs = materialize_gated(
+        minhash_signature(docs, "source", "text", N_HASHES, K_SHINGLE)
+    )
     a = sigs.select(
         F.col("source").alias("src_a"),
         *[F.col(f"h{j}").alias(f"a{j}") for j in range(N_HASHES)],

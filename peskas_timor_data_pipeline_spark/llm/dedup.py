@@ -30,31 +30,34 @@ def _spread(df: DataFrame) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
-def _shingles_sql(text_col: str, k: int) -> str:
-    """SQL for the array of lowercased character k-grams (empty for
-    too-short texts).
+def _grams_sql(x: str, k: int) -> str:
+    """SQL for the array of character k-grams of the SQL expression ``x``
+    in start order (empty for NULL or too-short text) — the one gram
+    kernel of this module.
 
-    Guarded: Spark's sequence(1, 0) counts DOWN, so short texts must hit the
-    empty-array branch, not a descending sequence.
+    Each regex match consumes one code point and captures the ``k`` code
+    points that start there, so element i (0-based) is
+    ``substring(x, i + 1, k)``, in time linear in the text. A walk of
+    ``substring(x, i, k)`` over ``sequence(1, len - k + 1)`` gives the
+    same array, but Spark 4.1's ``UTF8String.substring`` scans from byte 0
+    to reach position i, so that costs O(len²) per text. The consuming
+    ``.`` is required: with the lookahead alone, ``(?=(.{k}))``, a match
+    can start on the low half of a surrogate pair."""
+    return f"coalesce(regexp_extract_all({x}, '(?s)(?=(.{{{k}}})).', 1), array())"
 
-    The lowered text is LET-BOUND via a single-element transform: naming
-    ``lower(text)`` inside the per-gram lambda gets it re-evaluated for
-    every gram (no codegen CSE inside higher-order functions — the same
-    CollapseProject trap the CDC operator hit), turning shingling into
-    O(len^2) character work per document; the binding makes it one
-    allocation per row (measured 2.4x on the sf0.1 corpus explode)."""
-    return (
-        f"transform(array(lower({text_col})), __lt__ -> "
-        f"CASE WHEN length(__lt__) >= {k} THEN "
-        f"transform(sequence(1, length(__lt__) - {k - 1}),"
-        f" i -> substring(__lt__, i, {k})) "
-        f"ELSE array() END)[0]"
-    )
+
+def _gram_key(gram_col: str) -> Column:
+    """A gram's 60-bit integer key: its md5's first 15 hex chars. Joins and
+    distincts then shuffle longs instead of k-char strings; the oracles
+    slice the same digest (``('0x' || substr(md5(g), 1, 15))::BIGINT``)."""
+    return F.conv(F.substring(F.md5(gram_col), 1, 15), 16, 10).cast("long")
 
 
 def char_shingles(text_col: str, k: int = 5, out_col: str = "shingle") -> Column:
-    """Array of lowercased character k-grams (empty for too-short texts)."""
-    return F.expr(_shingles_sql(text_col, k)).alias(out_col)
+    """Array of the character k-grams of ``lower(text)`` in start order:
+    a gram per code point but the last k - 1, empty for NULL or
+    too-short texts."""
+    return F.expr(_grams_sql(f"lower({text_col})", k)).alias(out_col)
 
 
 def exact_dedup(
@@ -76,8 +79,9 @@ MINHASH_WIDTH = 8  # hex chars per sub-hash (32 bits)
 def shingle_rows(
     df: DataFrame, id_col: str, text_col: str, k_shingle: int = 5
 ) -> DataFrame:
-    """(id, sh) long frame of character k-grams — the shared upstream of
-    MinHash signatures and Jaccard verification. Callers running both should
+    """(id, sh) long frame of the character k-grams of ``lower(text)``
+    (:func:`char_shingles`) — the shared upstream of MinHash signatures
+    and Jaccard verification. Callers running both should
     compute this ONCE (and localCheckpoint it) so the explode — the widest
     intermediate in the dedup pipeline — is a single pass over the corpus.
 
@@ -154,7 +158,7 @@ def minhash_signature(
         shingles = _spread(df).select(
             F.col(id_col),
             F.explode(
-                F.expr(f"array_distinct({_shingles_sql(text_col, k_shingle)})")
+                F.expr(f"array_distinct({_grams_sql(f'lower({text_col})', k_shingle)})")
             ).alias("sh"),
         )
     # expr-string construction (r11): identical parsed trees, one py4j
@@ -1053,10 +1057,9 @@ def containment_pairs(
     for pairs sharing >= ``min_shared`` surviving grams; ppm values are
     exact integers (d7 convention).
     """
-    gh = F.conv(F.substring(F.md5(F.col("sh")), 1, 15), 16, 10).cast("long")
     grams = materialize(
         shingle_rows(df, id_col, text_col, k_shingle)
-        .select(F.col(id_col), gh.alias("gh"))
+        .select(F.col(id_col), _gram_key("sh").alias("gh"))
         .distinct(),
         checkpoint_dir,
     )
@@ -1174,25 +1177,18 @@ def shingle_rows_with_pos(
     start positions — the positioned variant of :func:`shingle_rows` for
     span-level work (masking, highlighting).
 
-    Positions index the RAW string; case folding applies per k-char slice
-    (``lower(substring(text, i, k))``). Folding the whole text first and
-    slicing that — the r05 form — shifts every position after a
-    length-expanding lowercase mapping (U+0130 'İ' lowers to 2 codepoints),
-    so downstream maskers hit off-by-N characters (ADVICE r05, reproduced).
-    Per-slice folding keeps O(len·k) work (no quadratic re-lowering: the
-    k-char substring is taken from the raw text, THEN lowered), at the
+    Positions index the RAW string; case folding applies per k-char gram
+    (``lower(g)`` over :func:`_grams_sql` of the raw text). Folding the
+    whole text first and slicing that — the r05 form — shifts every
+    position after a length-expanding lowercase mapping (U+0130 'İ' lowers
+    to 2 codepoints), so downstream maskers hit off-by-N characters
+    (ADVICE r05, reproduced). Per-gram folding keeps O(len·k) work, at the
     cost that a gram whose raw slice contains an expanding character folds
     to k+ chars — a gram-identity quirk, not a position error."""
-    grams = F.expr(
-        f"CASE WHEN length({text_col}) >= {k_shingle} THEN "
-        f"transform(sequence(1, length({text_col}) - {k_shingle - 1}),"
-        f" i -> struct(i AS pos,"
-        f" lower(substring({text_col}, i, {k_shingle})) AS sh)) "
-        f"ELSE array() END"
-    )
+    grams = F.expr(f"transform({_grams_sql(text_col, k_shingle)}, g -> lower(g))")
     return _spread(df).select(
-        F.col(id_col), F.explode(grams).alias("__g__")
-    ).select(id_col, F.col("__g__.pos").alias("pos"), F.col("__g__.sh").alias("sh"))
+        F.col(id_col), F.posexplode(grams).alias("__p0__", "sh")
+    ).select(id_col, (F.col("__p0__") + 1).alias("pos"), "sh")
 
 
 def repeated_span_mask(
@@ -1223,14 +1219,9 @@ def repeated_span_mask(
     from pyspark.sql.window import Window
 
     pos = shingle_rows_with_pos(df, id_col, text_col, k_min)
-    # shuffle longs, not 50-char strings: gram identity = 60-bit md5 prefix
-    # (collision odds over a 10^9-gram corpus ~ 10^18/2^61, engine-identical
-    # because the oracle slices the same digest)
-    hashed = pos.select(
-        id_col,
-        "pos",
-        F.conv(F.substring(F.md5("sh"), 1, 15), 16, 10).cast("long").alias("gh"),
-    )
+    # shuffle longs, not 50-char strings (collision odds over a
+    # 10^9-gram corpus ~ 10^18/2^61)
+    hashed = pos.select(id_col, "pos", _gram_key("sh").alias("gh"))
     gram_docs = (
         hashed.select(id_col, "gh")
         .distinct()
@@ -1668,6 +1659,9 @@ def winnow_fingerprints(
     Window starts are positions 1..max(n-w+1, 1) (a document shorter than
     one window winnows to the min of what exists, as MOSS does).
 
+    Grams are the raw (unlowered) k-grams of :func:`_grams_sql`; a NULL
+    text yields no grams, like a text shorter than ``k_gram``.
+
     Scale shape: one shingle explode (the linear step), ONE window pass
     partitioned by document (per-document sequentiality is inherent to
     winnowing — the partition key is the doc, so 100 TB parallelism is
@@ -1681,15 +1675,7 @@ def winnow_fingerprints(
 
     grams = df.select(
         F.col(id_col),
-        F.posexplode(
-            # sequence(1, 0) DESCENDS in Spark ([1, 0]) — a doc shorter
-            # than one gram must yield an empty array explicitly
-            F.expr(
-                f"CASE WHEN length({text_col}) < {k_gram} THEN array() "
-                f"ELSE transform(sequence(1, length({text_col}) - {k_gram} + 1),"
-                f" i -> substring({text_col}, i, {k_gram})) END"
-            )
-        ).alias("__p0__", "__g__"),
+        F.posexplode(F.expr(_grams_sql(text_col, k_gram))).alias("__p0__", "__g__"),
     ).select(
         id_col,
         (F.col("__p0__") + 1).alias("pos"),

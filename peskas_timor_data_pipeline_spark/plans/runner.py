@@ -10,10 +10,12 @@ artifact versions are unchanged since its last run is skipped entirely —
 the generalization of the reference's hand-rolled only-new-ids /
 descriptor-cache patterns (R/ingest-pds-data.R:181,
 R/preprocess-pds-trips.R:199-235) to every stage. The skip is also keyed on
-the stage's code: a stage version (hash of the source of its fn and of the
-callables in the fn's closure, plus its ``partition_cols``) is recorded
-with the inputs, so an edited stage reruns. A meta file that is missing,
-unreadable or keyless makes its stage rerun (with a warning).
+the stage's code: a stage version (hash of the source of its fn, of the
+callables in the fn's closure, and of the module data and package helpers
+that code reads, plus its ``partition_cols``) is recorded with the inputs,
+so an edited stage, or an edited constant or helper it reads, reruns. A
+meta file that is missing, unreadable or keyless makes its stage rerun
+(with a warning).
 
 A stage is committed once Spark writes its ``_SUCCESS`` marker; only
 committed artifacts are read or resumed from. Unpartitioned stages also
@@ -56,17 +58,25 @@ class Stage:
         # Code-aware skip key, hashed once at registration: the source of
         # the fn and of every callable its closure holds, recursively (a
         # shared wrapper's own source says nothing about the body it
-        # wraps), plus the declared layout.
+        # wraps), the data and package helpers their code reads as
+        # globals, plus the declared layout.
         codes: list[str] = []
         _closure_sources(self.fn, codes, set())
         key = "\0".join(codes) + f"\0{self.partition_cols}"
         self.version = hashlib.sha1(key.encode()).hexdigest()[:12]
 
 
+_PACKAGE = __name__.partition(".")[0]
+
+
 def _closure_sources(fn: Callable, out: list[str], seen: set[int]) -> None:
     """Append the source of ``inspect.unwrap(fn)`` (its qualname when it
-    has none) and, depth first, that of each callable in its closure
-    cells; ``seen`` breaks cycles and repeats."""
+    has none), then, depth first, what that code reads: each callable in
+    its closure cells, and each global named by its code or by a code
+    object nested in it. A global that is a data value is appended as
+    ``name=repr``; a callable defined in this package goes through this
+    same walk; modules and anything else are skipped. ``seen`` breaks
+    cycles and repeats."""
     fn = inspect.unwrap(fn)
     if id(fn) in seen:
         return
@@ -82,6 +92,50 @@ def _closure_sources(fn: Callable, out: list[str], seen: set[int]) -> None:
             continue
         if callable(value):
             _closure_sources(value, out, seen)
+    code = getattr(fn, "__code__", None)
+    if code is None:
+        return
+    for name in dict.fromkeys(_global_names(code)):
+        if name not in fn.__globals__:
+            continue  # an attribute or builtin name
+        value = fn.__globals__[name]
+        data = _data_repr(value)
+        if data is not None:
+            out.append(f"{name}={data}")
+        elif callable(value) and (
+            getattr(value, "__module__", None) or ""
+        ).partition(".")[0] == _PACKAGE:
+            _closure_sources(value, out, seen)
+
+
+def _global_names(code) -> list[str]:
+    """The names ``code`` and the code objects nested in it (lambdas,
+    inner functions, comprehensions) load as globals or attributes."""
+    names = list(code.co_names)
+    for const in code.co_consts:
+        if inspect.iscode(const):
+            names += _global_names(const)
+    return names
+
+
+def _data_repr(value: object) -> str | None:
+    """``repr`` of a data value: None, bool, int, float, str or bytes, or
+    a tuple, list, dict or set of data values, with sets sorted. None for
+    anything else."""
+    kind = type(value)
+    if kind in (type(None), bool, int, float, str, bytes):
+        return repr(value)
+    if kind in (tuple, list, set, frozenset):
+        parts = [_data_repr(v) for v in value]
+    elif kind is dict:
+        parts = [_data_repr(item) for item in value.items()]
+    else:
+        return None
+    if None in parts:
+        return None
+    if kind in (set, frozenset):
+        parts.sort()
+    return f"{kind.__name__}({', '.join(parts)})"
 
 
 @dataclass

@@ -634,6 +634,55 @@ def test_stage_version_covers_the_wrapped_body(spark, tmp_path):
     assert read_stage(spark, d, "count").collect()[0].n == 6
 
 
+def test_stage_version_covers_module_data_a_helper_reads(spark, tmp_path, monkeypatch):
+    """A stage whose package helper reads a module-level constant
+    (``nutrient_supply`` and the ``RDI`` dict) reruns under
+    ``incremental=True`` once that constant is edited and the stage is
+    registered again, and serves the new value; unedited, it skips."""
+    import datetime as dt
+
+    from peskas_timor_data_pipeline_spark.pipeline import public
+    from peskas_timor_data_pipeline_spark.pipeline.public import nutrient_supply
+    from peskas_timor_data_pipeline_spark.plans import Pipeline
+
+    d = str(tmp_path)
+    write_stage(
+        spark.createDataFrame(
+            [(dt.date(2023, 1, 1), "CLP", 30.0)],
+            "period date, species string, catch_kg double",
+        ),
+        d,
+        "catches",
+    )
+    write_stage(
+        spark.createDataFrame(
+            [("CLP", *[1.0] * len(public.RDI))],
+            "species string, " + ", ".join(f"{c} double" for c in public.RDI),
+        ),
+        d,
+        "dim",
+    )
+    runs = []
+
+    def run():
+        pipe = Pipeline(spark, d)
+
+        @pipe.stage("supply", inputs=["catches", "dim"])
+        def supply(spark, catches, dim):
+            runs.append(1)
+            return nutrient_supply(catches, dim)
+
+        pipe.run(incremental=True)
+        rows = read_stage(spark, d, "supply").filter("nutrient = 'Protein_mu'")
+        return rows.collect()[0].people_rdi
+
+    assert run() == 30.0 * 1000 / 30 / 50
+    assert run() == 30.0 * 1000 / 30 / 50 and len(runs) == 1
+    monkeypatch.setitem(public.RDI, "Protein_mu", 25.0)
+    assert run() == 30.0 * 1000 / 30 / 25
+    assert len(runs) == 2
+
+
 def test_unreadable_meta_reruns_its_stage(spark, tmp_path, caplog):
     """A meta file that is garbage, truncated JSON or keyless counts as
     absent: the stage reruns with a warning instead of failing the run.

@@ -5,12 +5,24 @@ partial aggregates, TakeOrderedAndProject, and the absence of Python
 evaluators are all visible here. Regenerate after plan-affecting changes:
 
     python tools/dump_plans.py
+
+The output is reproducible: each plan's expression ids are renumbered
+from 0 in order of first appearance, and the session-global noise is
+stripped (exchange ``plan_id``s, RDD ids, the ``localCheckpoint`` call
+site, paths under the temp dir). Two dumps of one commit are therefore
+byte-identical, and a change to one query does not shift the ids of
+the plans after it. One exception remains for a diff across commits:
+the Expand of t42's two distinct aggregates lists its groups in an order
+that depends on the exprId values of whatever the session planned
+before, so t42 can flip even when a change does not touch it.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -117,6 +129,26 @@ SHOWCASE = {
     "a43_rfm_segments": "RFM: fact table read once -> customer frame; ntile windows on the dimension frame; tiles^3 grid agg",
 }
 
+# an exprId follows its name (``v#12L``, ``sum(v)#3``, ``[id=#4]``); a
+# string literal such as md5's ``'#0'`` salt prints after ", " or "("
+_EXPR_ID = re.compile(r"(?<![\s(,\[])#(\d+)")
+_RDD_ID = re.compile(r"(\w+RDD)\[\d+\]")
+_CALL_SITE = re.compile(r"( at localCheckpoint) at \S+:\d+")
+_PLAN_ID = re.compile(r",? ?\[plan_id=\d+\]")
+_TMP_PATH = re.compile(re.escape(tempfile.gettempdir()) + r"/[^\s,\]]*")
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with its expression ids renumbered in first-appearance
+    order and plan ids, RDD ids, checkpoint call sites and temp paths
+    stripped."""
+    ids: dict[str, int] = {}
+    plan = _EXPR_ID.sub(lambda m: f"#{ids.setdefault(m.group(1), len(ids))}", plan)
+    plan = _RDD_ID.sub(r"\1", plan)
+    plan = _CALL_SITE.sub(r"\1", plan)
+    plan = _PLAN_ID.sub("", plan)
+    return _TMP_PATH.sub("<tmp>", plan)
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -139,7 +171,7 @@ def main() -> None:
         jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )
-        plan = df._jdf.queryExecution().explainString(jmode)
+        plan = normalize(df._jdf.queryExecution().explainString(jmode))
         out += [f"## {name}", "", f"**{note}**", "", "```", plan.rstrip(), "```", ""]
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
     with open(path, "w") as f:
