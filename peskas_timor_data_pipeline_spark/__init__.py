@@ -10,6 +10,7 @@ UDFs on large tables.
 Layout
 ------
 - ``session``    : SparkSession factory tuned for the workload
+- ``obs``        : engine accounting read from Spark's status store
 - ``schemas``    : fixed StructType schemas per logical table
 - ``sources``    : readers/writers + artifact versioning
 - ``operators``  : relational/restructuring/window/statistical operators

@@ -9,7 +9,6 @@ default stays local for tests and single-node runs.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 from concurrent.futures import ThreadPoolExecutor
 
@@ -26,13 +25,9 @@ from pyspark.sql import DataFrame
 # (scan_bytes) or a checkpoint's stored bytes (materialized_bytes, ~10x
 # the parquet size for narrow rows); 1 GiB keeps every toy/test scale on
 # the lazy path and engages the cut where a duplicated pass costs whole
-# node-minutes. Parameterized for cluster tuning.
-EAGER_MIN_BYTES_ENV = "SPARK_GRAFT_EAGER_MIN_BYTES"
-_DEFAULT_EAGER_MIN_BYTES = 1 << 30
-
-
-def eager_min_bytes() -> int:
-    return int(os.environ.get(EAGER_MIN_BYTES_ENV, _DEFAULT_EAGER_MIN_BYTES))
+# node-minutes. Callers read ``ckpt.EAGER_MIN_BYTES`` at call time, so a
+# test can force the eager path by setting it.
+EAGER_MIN_BYTES = 1 << 30
 
 
 # scan_bytes' answer for a size it cannot read: huge, so the eager path wins
@@ -80,21 +75,15 @@ def materialized_bytes(df: DataFrame) -> int | None:
 
 
 def materialize_gated(
-    df: DataFrame,
-    checkpoint_dir: str | None = None,
-    small: bool | None = None,
+    df: DataFrame, checkpoint_dir: str | None = None
 ) -> DataFrame:
     """Size-gated lineage cut: :func:`materialize` when the upstream input
     is big (or unknown), pass-through when provably small — at toy scale
     the eager checkpoint job costs more than the recompute it saves (the
     r11→r12 lesson: the checkpoint cohort regressed the sf0.1 bench 2-3x
-    while being plan-verified wins at cluster scale).
-
-    ``small``: explicit gate decision (e.g. from a counted loop frame);
-    None derives it from :func:`scan_bytes` vs :func:`eager_min_bytes`."""
-    if small is None:
-        small = scan_bytes(df) < eager_min_bytes()
-    if small:
+    while being plan-verified wins at cluster scale). The gate compares
+    :func:`scan_bytes` with ``EAGER_MIN_BYTES``."""
+    if scan_bytes(df) < EAGER_MIN_BYTES:
         return df
     return materialize(df, checkpoint_dir)
 

@@ -24,8 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from peskas_timor_data_pipeline_spark.llm import ckpt
 from peskas_timor_data_pipeline_spark.llm.ckpt import (
-    eager_min_bytes,
     materialize,
     materialized_bytes,
 )
@@ -71,7 +71,7 @@ def connected_components(
     # inputs stop paying a driver-blocking job per round. None (reliable
     # checkpoints, evicted blocks) reads as big: cluster runs stay eager.
     sz = materialized_bytes(edges)
-    eager = sz is None or sz >= eager_min_bytes()
+    eager = sz is None or sz >= ckpt.EAGER_MIN_BYTES
     labels = (
         edges.groupBy("src")
         .agg(F.min("dst").alias("nbr_min"))
@@ -285,7 +285,7 @@ def connected_components_star(
     # (bounded plans, single edge-scale pass per star phase at scale) but
     # only block on checkpoint jobs when the edge set is actually big.
     sz = materialized_bytes(edges)
-    eager = sz is None or sz >= eager_min_bytes()
+    eager = sz is None or sz >= ckpt.EAGER_MIN_BYTES
 
     def _sym(e: DataFrame) -> DataFrame:
         return e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(

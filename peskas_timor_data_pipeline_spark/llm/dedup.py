@@ -1071,10 +1071,7 @@ def containment_pairs(
     # one job while an eager checkpoint would serialize (+0.8 s at sf0.1
     # measured), so the cut engages on upstream size only. Gate reads the
     # checkpointed grams' REAL stored bytes, not an estimate.
-    from peskas_timor_data_pipeline_spark.llm.ckpt import (
-        eager_min_bytes,
-        materialized_bytes,
-    )
+    from peskas_timor_data_pipeline_spark.llm import ckpt
 
     gram_df = grams.join(
         grams.groupBy("gh")
@@ -1083,8 +1080,8 @@ def containment_pairs(
         .select("gh"),
         "gh",
     )
-    _gsz = materialized_bytes(grams)
-    if _gsz is None or _gsz >= eager_min_bytes():
+    _gsz = ckpt.materialized_bytes(grams)
+    if _gsz is None or _gsz >= ckpt.EAGER_MIN_BYTES:
         gram_df = materialize(gram_df, checkpoint_dir)
     a = gram_df.select(F.col(id_col).alias("id_a"), "gh")
     b = gram_df.select(F.col(id_col).alias("id_b"), "gh")

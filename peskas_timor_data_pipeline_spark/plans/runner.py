@@ -59,7 +59,8 @@ class Stage:
         # the fn and of every callable its closure holds, recursively (a
         # shared wrapper's own source says nothing about the body it
         # wraps), the data and package helpers their code reads as
-        # globals, plus the declared layout.
+        # globals or as attributes of package modules, plus the declared
+        # layout.
         codes: list[str] = []
         _closure_sources(self.fn, codes, set())
         key = "\0".join(codes) + f"\0{self.partition_cols}"
@@ -71,12 +72,10 @@ _PACKAGE = __name__.partition(".")[0]
 
 def _closure_sources(fn: Callable, out: list[str], seen: set[int]) -> None:
     """Append the source of ``inspect.unwrap(fn)`` (its qualname when it
-    has none), then, depth first, what that code reads: each callable in
-    its closure cells, and each global named by its code or by a code
-    object nested in it. A global that is a data value is appended as
-    ``name=repr``; a callable defined in this package goes through this
-    same walk; modules and anything else are skipped. ``seen`` breaks
-    cycles and repeats."""
+    has none), then, depth first, what that code reads: each callable or
+    package module in its closure cells, and each global named by its
+    code or by a code object nested in it (see :func:`_read`). ``seen``
+    breaks cycles and repeats."""
     fn = inspect.unwrap(fn)
     if id(fn) in seen:
         return
@@ -85,6 +84,8 @@ def _closure_sources(fn: Callable, out: list[str], seen: set[int]) -> None:
         out.append(inspect.getsource(fn))
     except (OSError, TypeError):
         out.append(getattr(fn, "__qualname__", type(fn).__qualname__))
+    code = getattr(fn, "__code__", None)
+    names = dict.fromkeys(_global_names(code)) if code is not None else {}
     for cell in getattr(fn, "__closure__", None) or ():
         try:
             value = cell.cell_contents
@@ -92,20 +93,38 @@ def _closure_sources(fn: Callable, out: list[str], seen: set[int]) -> None:
             continue
         if callable(value):
             _closure_sources(value, out, seen)
-    code = getattr(fn, "__code__", None)
-    if code is None:
-        return
-    for name in dict.fromkeys(_global_names(code)):
-        if name not in fn.__globals__:
-            continue  # an attribute or builtin name
-        value = fn.__globals__[name]
-        data = _data_repr(value)
-        if data is not None:
-            out.append(f"{name}={data}")
-        elif callable(value) and (
-            getattr(value, "__module__", None) or ""
-        ).partition(".")[0] == _PACKAGE:
-            _closure_sources(value, out, seen)
+        elif inspect.ismodule(value):
+            _read(value.__name__, value, names, out, seen)
+    for name in names:
+        if name in getattr(fn, "__globals__", {}):  # else an attribute or builtin
+            _read(name, fn.__globals__[name], names, out, seen)
+
+
+def _read(name: str, value: object, names: dict, out: list[str],
+          seen: set[int], modules: tuple = ()) -> None:
+    """Record a value the hashed code reads as ``name``. A data value is
+    appended as ``name=repr``; a callable defined in this package goes
+    through :func:`_closure_sources`. For a module of this package, each
+    of ``names`` (what the code loads) that the module defines is read as
+    ``module.attr`` the same way, nested package modules included; so
+    ``public.nutrient_supply(...)`` is followed into the helper. Anything
+    else is skipped."""
+    data = _data_repr(value)
+    if data is not None:
+        out.append(f"{name}={data}")
+    elif inspect.ismodule(value):
+        if _in_package(value.__name__) and value not in modules:
+            attrs = vars(value)
+            for attr in names:
+                if attr in attrs:
+                    _read(f"{name}.{attr}", attrs[attr], names, out, seen,
+                          (*modules, value))
+    elif callable(value) and _in_package(getattr(value, "__module__", None)):
+        _closure_sources(value, out, seen)
+
+
+def _in_package(module: str | None) -> bool:
+    return (module or "").partition(".")[0] == _PACKAGE
 
 
 def _global_names(code) -> list[str]:

@@ -175,33 +175,36 @@ def test_cluster_safe_split_never_straddles(spark):
 
 def test_connected_components_eager_gate_forced_big(spark, monkeypatch):
     """The r12 size gate must not change labels: force the eager
-    (big-input) path via SPARK_GRAFT_EAGER_MIN_BYTES=0 and compare
+    (big-input) path via ckpt.EAGER_MIN_BYTES=0 and compare
     against the default (lazy at test scale) path."""
-    monkeypatch.setenv("SPARK_GRAFT_EAGER_MIN_BYTES", "0")
+    from peskas_timor_data_pipeline_spark.llm import ckpt
+
+    monkeypatch.setattr(ckpt, "EAGER_MIN_BYTES", 0)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)],
         "id_a long, id_b long",
     )
     eager = {r.node: r.component for r in connected_components(pairs).collect()}
-    monkeypatch.delenv("SPARK_GRAFT_EAGER_MIN_BYTES")
+    monkeypatch.undo()
     lazy = {r.node: r.component for r in connected_components(pairs).collect()}
     assert eager == lazy
     assert eager[1] == eager[4] == 1 and eager[20] == 20
 
 
 def test_star_components_eager_gate_forced_big(spark, monkeypatch):
+    from peskas_timor_data_pipeline_spark.llm import ckpt
     from peskas_timor_data_pipeline_spark.llm.cluster import (
         connected_components_star,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_EAGER_MIN_BYTES", "0")
+    monkeypatch.setattr(ckpt, "EAGER_MIN_BYTES", 0)
     pairs = spark.createDataFrame(
         [(2, 4), (4, 5), (5, 6), (6, 1), (30, 31)], "id_a long, id_b long"
     )
     eager = {
         r.node: r.component for r in connected_components_star(pairs).collect()
     }
-    monkeypatch.delenv("SPARK_GRAFT_EAGER_MIN_BYTES")
+    monkeypatch.undo()
     lazy = {
         r.node: r.component for r in connected_components_star(pairs).collect()
     }
@@ -248,9 +251,9 @@ def test_scan_bytes_unknown_on_jvm_failure(spark, monkeypatch):
             raise Py4JError("statistics unavailable")
 
     df = spark.range(3)
-    assert ckpt.scan_bytes(df) < ckpt.eager_min_bytes()
+    assert ckpt.scan_bytes(df) < ckpt.EAGER_MIN_BYTES
     monkeypatch.setattr(df, "_jdf", BrokenJdf())
-    assert ckpt.scan_bytes(df) >= ckpt.eager_min_bytes()
+    assert ckpt.scan_bytes(df) >= ckpt.EAGER_MIN_BYTES
     cut = []
     monkeypatch.setattr(ckpt, "materialize", lambda frame, _dir=None: cut.append(frame))
     ckpt.materialize_gated(df)

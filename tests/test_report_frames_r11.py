@@ -138,14 +138,14 @@ def test_rp3_launches_one_job_count(spark, sf_dir):
     execution, which picked it by which stage finished first."""
     import collections
 
+    from peskas_timor_data_pipeline_spark import obs
     from peskas_timor_data_pipeline_spark.harness import registry
 
     fn = registry()["rp3_catch_composition"][0]
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
     counts = collections.Counter()
     for _ in range(20):
         df = fn(spark, sf_dir)
-        before = int(dag.nextJobId())
+        before = obs.cursor(spark)[0]
         df.write.mode("overwrite").format("noop").save()
-        counts[int(dag.nextJobId()) - before] += 1
+        counts[obs.cursor(spark)[0] - before] += 1
     assert len(counts) == 1, counts

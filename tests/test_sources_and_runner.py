@@ -8,6 +8,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from peskas_timor_data_pipeline_spark import obs
 from peskas_timor_data_pipeline_spark.harness.tables import TABLES, load
 from peskas_timor_data_pipeline_spark.sources.io import (
     add_version,
@@ -479,10 +480,9 @@ def _jobs_launched(spark, fn):
     """Run ``fn`` and count the Spark jobs it launched, by the DAG
     scheduler's job ids (the status store's job list drops its oldest
     entries past ``spark.ui.retainedJobs``, so its size is no counter)."""
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = int(dag.nextJobId())
+    before = obs.cursor(spark)[0]
     out = fn()
-    return out, int(dag.nextJobId()) - before
+    return out, obs.cursor(spark)[0] - before
 
 
 def _normalized_plan(df) -> str:
@@ -638,11 +638,12 @@ def test_stage_version_covers_module_data_a_helper_reads(spark, tmp_path, monkey
     """A stage whose package helper reads a module-level constant
     (``nutrient_supply`` and the ``RDI`` dict) reruns under
     ``incremental=True`` once that constant is edited and the stage is
-    registered again, and serves the new value; unedited, it skips."""
+    registered again, and serves the new value; unedited, it skips. The
+    stage reaches the helper as an attribute of its module
+    (``public.nutrient_supply``)."""
     import datetime as dt
 
     from peskas_timor_data_pipeline_spark.pipeline import public
-    from peskas_timor_data_pipeline_spark.pipeline.public import nutrient_supply
     from peskas_timor_data_pipeline_spark.plans import Pipeline
 
     d = str(tmp_path)
@@ -670,7 +671,7 @@ def test_stage_version_covers_module_data_a_helper_reads(spark, tmp_path, monkey
         @pipe.stage("supply", inputs=["catches", "dim"])
         def supply(spark, catches, dim):
             runs.append(1)
-            return nutrient_supply(catches, dim)
+            return public.nutrient_supply(catches, dim)
 
         pipe.run(incremental=True)
         rows = read_stage(spark, d, "supply").filter("nutrient = 'Protein_mu'")

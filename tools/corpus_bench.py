@@ -11,8 +11,8 @@ maximum task RESULT size (the bytes each task ships back to the driver:
 the "no stage collects megabytes to the driver" proof; threshold scalars
 and LSH bucket histograms are the only driver-side state by design).
 
-Metrics come from the local Spark UI REST API (stage counters diffed
-around each pipeline stage), so the numbers are the engine's own
+Metrics come from Spark's in-process status store (``obs.window`` over
+the stages each pipeline stage ran), so the numbers are the engine's own
 accounting, not wall-clock guesswork.
 
 Usage: python tools/corpus_bench.py [--out CORPUSBENCH_r06.json]
@@ -26,9 +26,10 @@ import os
 import shutil
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from peskas_timor_data_pipeline_spark import obs  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 STAGES = ("normalized", "quality_gated", "lm_gated", "exact_deduped",
@@ -36,59 +37,20 @@ STAGES = ("normalized", "quality_gated", "lm_gated", "exact_deduped",
           "packed")
 
 
-def _ui(spark):
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    return f"{base}/api/v1/applications/{app}"
-
-
-def _stages(spark) -> list[dict]:
-    try:
-        with urllib.request.urlopen(f"{_ui(spark)}/stages?status=complete",
-                                    timeout=10) as r:
-            return json.load(r)
-    except Exception:
-        return []
-
-
-def _window_metrics(stages: list[dict], after_id: int) -> dict:
-    """Aggregate the Spark stages newer than ``after_id``: shuffle/in/out
-    bytes, spill, and the maximum per-Spark-stage RESULT size (total bytes
-    tasks shipped to the driver — collect()s and scalar aggregates show up
-    here; a pipeline stage collecting megabytes is a scale bug)."""
-    new = [st for st in stages if st.get("stageId", -1) > after_id]
-    return {
-        "n_spark_stages": len(new),
-        "shuffle_read": sum(st.get("shuffleReadBytes", 0) for st in new),
-        "shuffle_write": sum(st.get("shuffleWriteBytes", 0) for st in new),
-        "input": sum(st.get("inputBytes", 0) for st in new),
-        "output": sum(st.get("outputBytes", 0) for st in new),
-        "spill_bytes": sum(st.get("diskBytesSpilled", 0)
-                           + st.get("memoryBytesSpilled", 0) for st in new),
-        # split driver-bound result bytes into Spark's own broadcast
-        # materializations (the withThreadLocalCaptured futures that
-        # BroadcastExchange runs — capped by autoBroadcastJoinThreshold
-        # and replaced by sort-merge joins once a side outgrows it, so
-        # they VANISH at scale) vs everything else (explicit collects —
-        # the class that must stay KB-sized at any scale).  The marker
-        # lives in the stage's submission STACK TRACE ("details" in the
-        # REST payload) — in Spark 4.x the stage NAME carries the
-        # user call site (e.g. "collect at bench.py:10") even for the
-        # broadcast thread's job, so matching on name alone misfiles
-        # broadcast materializations as collects (found via seg_bench's
-        # 137 MB "collect" that was really the AQE-elected broadcast of
-        # the firsts side of the segment join).
-        "max_broadcast_result_bytes": max(
-            (st.get("resultSize", 0) for st in new
-             if "withThreadLocalCaptured" in st.get("name", "")
-             or "withThreadLocalCaptured" in st.get("details", "")),
-            default=0),
-        "max_collect_result_bytes": max(
-            (st.get("resultSize", 0) for st in new
-             if "withThreadLocalCaptured" not in st.get("name", "")
-             and "withThreadLocalCaptured" not in st.get("details", "")),
-            default=0),
-    }
+def _window(spark, start: tuple[int, int]) -> dict:
+    """The stages Spark ran since ``start`` (an ``obs.cursor``): shuffle,
+    input and output bytes, spill, and the largest per-stage RESULT size
+    (bytes a stage's tasks shipped to the driver), split into broadcast
+    builds and everything else. Broadcast builds are capped by
+    ``autoBroadcastJoinThreshold`` and turn into sort-merge joins once a
+    side outgrows it; everything else (explicit collects, scalar
+    aggregates) must stay KB-sized at any scale."""
+    w = obs.window(spark, start)
+    return {"n_spark_stages": w["stages"],
+            **{k: w[k] for k in ("shuffle_read", "shuffle_write", "input",
+                                 "output", "spill_bytes",
+                                 "max_broadcast_result_bytes",
+                                 "max_collect_result_bytes")}}
 
 
 def synth_10x(spark, src_sf_dir: str, out_path: str, mult: int = 10) -> int:
@@ -141,12 +103,11 @@ def run_scale(spark, label: str, source_parquet: str, workdir: str) -> dict:
     per_stage = {}
     t_all = time.time()
     for name in STAGES:
-        seen = max((st.get("stageId", -1) for st in _stages(spark)), default=-1)
+        start = obs.cursor(spark)
         t0 = time.time()
         pipe.run(only={name})
         wall = round(time.time() - t0, 2)
-        per_stage[name] = {"wall_s": wall,
-                           **_window_metrics(_stages(spark), seen)}
+        per_stage[name] = {"wall_s": wall, **_window(spark, start)}
     total_wall = round(time.time() - t_all, 2)
     rows = {
         name: spark.read.parquet(
@@ -240,12 +201,11 @@ def run_incremental(spark, label: str, workdir: str) -> dict:
 
     def window(fn):
         fn()  # warmup: listing, codegen, broadcast build
-        seen = max((st.get("stageId", -1) for st in _stages(spark)), default=-1)
+        start = obs.cursor(spark)
         t0 = time.time()
         n = fn()
         wall = round(time.time() - t0, 2)
-        return {"wall_s": wall, "verdicts": n,
-                **_window_metrics(_stages(spark), seen)}
+        return {"wall_s": wall, "verdicts": n, **_window(spark, start)}
 
     # banded path (band_store artifact present after the full build).
     # Artifact frames are resolved ONCE outside the window, exactly like
@@ -305,8 +265,7 @@ def main() -> int:
 
     from peskas_timor_data_pipeline_spark.session import get_spark
 
-    spark = get_spark(app_name="corpus-bench",
-                      extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark(app_name="corpus-bench")
     base = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "spark-warehouse", "corpusbench")
     os.makedirs(base, exist_ok=True)

@@ -1,7 +1,7 @@
 """Domain-DAG scale rehearsal (VERDICT r07 #5): the peskas chain
 landings -> weights -> validate -> merge -> estimate -> public run end to
 end at 1x and 10x synthetic scale with engine-accounted per-stage metrics
-(the same Spark-UI stage accounting corpus_bench.py uses).
+(the same status-store stage accounting corpus_bench.py uses).
 
 The reference splits this workload by hand to fit R's memory
 (R/preprocess-landings.R:105-110); this rehearsal is the proof that the
@@ -30,7 +30,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from corpus_bench import _stages, _window_metrics  # noqa: E402
+from corpus_bench import _window  # noqa: E402
+
+from peskas_timor_data_pipeline_spark import obs  # noqa: E402
 
 MUNIS = ["Dili", "Baucau", "Bobonaro", "Covalima", "Lautem", "Liquica",
          "Manatuto", "Manufahi", "Oecusse", "Viqueque", "Aileu", "Ainaro"]
@@ -322,12 +324,12 @@ def run_scale(spark, label: str, n_boats: int, workdir: str) -> dict:
     t_all = time.time()
     for st in ("validated_trips", "weighted_landings", "merged_trips",
                "estimated", "public_summary", "public_nutrients"):
-        seen = max((s.get("stageId", -1) for s in _stages(spark)), default=-1)
+        start = obs.cursor(spark)
         t0 = time.time()
         pipe.run(only={st})
         per_stage[st] = {
             "wall_s": round(time.time() - t0, 2),
-            **_window_metrics(_stages(spark), seen),
+            **_window(spark, start),
         }
     total = round(time.time() - t_all, 2)
 
@@ -349,8 +351,7 @@ def main() -> int:
 
     from peskas_timor_data_pipeline_spark.session import get_spark
 
-    spark = get_spark(app_name="dom-bench",
-                      extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark(app_name="dom-bench")
     spark.sparkContext.setLogLevel("ERROR")
     base = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "spark-warehouse", "dombench")
@@ -377,7 +378,7 @@ def main() -> int:
             "unnest+length-weight, 1:1-per-day merge, imei->modal-region "
             "fill, monthly estimate + spine + interpolation + fleet "
             "scaling + national rollup, public summaries + nutrients) on "
-            "deterministic synthetic data; per-stage Spark-UI stage "
+            "deterministic synthetic data; per-stage status-store stage "
             "accounting between versioned parquet boundaries. The "
             "reference splits landings preprocessing by hand to fit R "
             "memory (R/preprocess-landings.R:105-110) - this chain needs "

@@ -29,7 +29,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.corpus_bench import SF_DIR, _stages, _window_metrics, synth_10x
+from peskas_timor_data_pipeline_spark import obs  # noqa: E402
+from tools.corpus_bench import SF_DIR, _window, synth_10x  # noqa: E402
 
 
 def run_decade(spark, label: str, parquet_path: str) -> dict:
@@ -45,7 +46,7 @@ def run_decade(spark, label: str, parquet_path: str) -> dict:
         F.sum("n_kept").alias("sum_kept"),
         F.sum(F.length("rebuilt")).alias("sum_rebuilt_len"),
     )
-    seen = max((st.get("stageId", -1) for st in _stages(spark)), default=-1)
+    start = obs.cursor(spark)
     t0 = time.time()
     row = checksum.collect()[0]
     wall = round(time.time() - t0, 2)
@@ -59,7 +60,7 @@ def run_decade(spark, label: str, parquet_path: str) -> dict:
         "sum_rebuilt_len": row["sum_rebuilt_len"],
         "plan_has_hash_aggregate": "HashAggregate" in plan,
         "plan_has_sort_aggregate": "SortAggregate" in plan,
-        **_window_metrics(_stages(spark), seen),
+        **_window(spark, start),
     }
 
 
@@ -70,8 +71,7 @@ def main() -> int:
 
     from peskas_timor_data_pipeline_spark.session import get_spark
 
-    spark = get_spark(app_name="seg-bench",
-                      extra_conf={"spark.ui.enabled": "true"})
+    spark = get_spark(app_name="seg-bench")
     base = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "spark-warehouse", "segbench")
     os.makedirs(base, exist_ok=True)
