@@ -8,6 +8,8 @@ full LSH pipeline is value-checked end to end, not just row-counted.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -22,6 +24,8 @@ from peskas_timor_data_pipeline_spark.llm.dedup import (
 )
 from peskas_timor_data_pipeline_spark.llm.multimodal import (
     attach_binary,
+    encode_ppm,
+    encode_wav,
     extract_binary_meta,
 )
 from peskas_timor_data_pipeline_spark.llm.similarity import (
@@ -1210,6 +1214,46 @@ FROM documents
 QUERIES["mm2_resize_plumbing"] = (mm2_resize_plumbing, MM2_ORACLE)
 
 
+# --- Media fixtures for the mm queries ------------------------------------------------
+
+def _synth_media(docs: DataFrame, make: Callable[[int], bytes]) -> DataFrame:
+    """(doc_id, content) with ``make(doc_id)``'s bytes as each document's
+    media payload — the reference's attachments column
+    (R/pt_nest_attachments.R:40-72) synthesized from a formula the
+    query's oracle replays."""
+    import pandas as pd
+
+    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "content": [make(int(did)) for did in pdf["doc_id"]],
+                }
+            )
+
+    return docs.mapInPandas(synth, schema="doc_id long, content binary")
+
+
+def _mm_ppm(did: int) -> bytes:
+    """The mm3/mm8/mm11 image: a P6 PPM of width doc_id%13+1, height
+    doc_id%7+1, pixel(y,x,c) = (doc_id+x+y+c)%256."""
+    import numpy as np
+
+    w, h = did % 13 + 1, did % 7 + 1
+    y, x, c = np.indices((h, w, 3))
+    return encode_ppm(((did + x + y + c) % 256).astype(np.uint8))
+
+
+def _mm_wav(did: int) -> bytes:
+    """The mm4/mm7/mm10 clip: 16-bit PCM at 8 kHz, n = (doc_id%50+1)*80
+    samples, sample[i] = ((doc_id+i)%256 - 128)*100."""
+    import numpy as np
+
+    i = np.arange((did % 50 + 1) * 80)
+    return encode_wav((((did + i) % 256 - 128) * 100).astype("<i2"), sample_rate=8000)
+
+
 # --- MM3: REAL image decode (pure-Python PPM codec) -----------------------------------
 
 def mm3_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1219,29 +1263,11 @@ def mm3_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM THE BYTES with the pure-Python decoder (llm/multimodal.py). The
     oracle recomputes the expected values from the generating formula, so
     a header-parse or pixel-layout bug breaks the hash."""
-    from collections.abc import Iterator as _Iter
-
-    import numpy as np
-    import pandas as pd
-
-    from peskas_timor_data_pipeline_spark.llm.multimodal import (
-        decode_image_meta,
-        encode_ppm,
-    )
+    from peskas_timor_data_pipeline_spark.llm.multimodal import decode_image_meta
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for did in pdf["doc_id"]:
-                w, h = int(did) % 13 + 1, int(did) % 7 + 1
-                y, x, c = np.indices((h, w, 3))
-                px = ((int(did) + x + y + c) % 256).astype(np.uint8)
-                contents.append(encode_ppm(px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
-
-    media = docs.mapInPandas(synth, schema="doc_id long, content binary")
+    media = _synth_media(docs, _mm_ppm)
     meta = decode_image_meta(media, "doc_id")
     return meta.select(
         "doc_id", "width", "height", "channels",
@@ -1275,29 +1301,11 @@ def mm4_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm/multimodal.py::decode_audio). RMS stays hash-exact because the
     normalized samples are dyadic rationals whose squares sum exactly in
     double regardless of summation order."""
-    from collections.abc import Iterator as _Iter
-
-    import numpy as np
-    import pandas as pd
-
-    from peskas_timor_data_pipeline_spark.llm.multimodal import (
-        decode_audio_meta,
-        encode_wav,
-    )
+    from peskas_timor_data_pipeline_spark.llm.multimodal import decode_audio_meta
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for did in pdf["doc_id"]:
-                n = (int(did) % 50 + 1) * 80
-                i = np.arange(n)
-                sig = (((int(did) + i) % 256 - 128) * 100).astype("<i2")
-                contents.append(encode_wav(sig, sample_rate=8000))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
-
-    media = docs.mapInPandas(synth, schema="doc_id long, content binary")
+    media = _synth_media(docs, _mm_wav)
     meta = decode_audio_meta(media, "doc_id")
     return meta.select(
         "doc_id", "sample_rate", "n_channels", "n_samples",
@@ -1333,10 +1341,7 @@ def mm5_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     2nd frame with its luma mean (llm/multimodal.py::sample_video_frames).
     One row per sampled frame, hash-checked against the generating
     formula."""
-    from collections.abc import Iterator as _Iter
-
     import numpy as np
-    import pandas as pd
 
     from peskas_timor_data_pipeline_spark.llm.multimodal import (
         encode_y4m,
@@ -1345,21 +1350,17 @@ def mm5_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for did in pdf["doc_id"]:
-                nf = int(did) % 5 + 1
-                frames = np.stack(
-                    [
-                        np.full((6, 8), (int(did) + f) % 256, dtype=np.uint8)
-                        for f in range(nf)
-                    ]
-                )
-                contents.append(encode_y4m(frames))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
+    def make(did: int) -> bytes:
+        return encode_y4m(
+            np.stack(
+                [
+                    np.full((6, 8), (did + f) % 256, dtype=np.uint8)
+                    for f in range(did % 5 + 1)
+                ]
+            )
+        )
 
-    media = docs.mapInPandas(synth, schema="doc_id long, content binary")
+    media = _synth_media(docs, make)
     return sample_video_frames(media, "doc_id", every_n_frames=2).select(
         "doc_id", "frame_idx", "width", "height",
         F.round("y_mean", 6).alias("y_mean"),
@@ -1961,10 +1962,7 @@ def mm6_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-smallest-id. The oracle recomputes hash, bands, and verify from
     the generating formula, so a codec, sampling, bit-packing, or banding
     bug breaks the hash."""
-    from collections.abc import Iterator as _Iter
-
     import numpy as np
-    import pandas as pd
 
     from peskas_timor_data_pipeline_spark.llm.dedup import hamming_neardup_pairs
     from peskas_timor_data_pipeline_spark.llm.multimodal import (
@@ -1974,21 +1972,15 @@ def mm6_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                base = did - 5 if (did % 10 == 0 and did >= 5) else did
-                w, h = base % 13 + 1, base % 7 + 1
-                y, x, c = np.indices((h, w, 3))
-                px = ((base * base + 7 * base * x + 13 * y + c) % 256).astype(
-                    np.uint8
-                )
-                contents.append(encode_ppm(px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
+    def make(did: int) -> bytes:
+        base = did - 5 if (did % 10 == 0 and did >= 5) else did
+        w, h = base % 13 + 1, base % 7 + 1
+        y, x, c = np.indices((h, w, 3))
+        return encode_ppm(
+            ((base * base + 7 * base * x + 13 * y + c) % 256).astype(np.uint8)
+        )
 
-    media = docs.mapInPandas(synth, schema="doc_id long, content binary")
+    media = _synth_media(docs, make)
     # materialized (r11): the dhash frame feeds the banded pair join (two
     # self-join sides) AND the final per-doc report — unmaterialized, the
     # whole Python synth+decode+dhash pipeline ran once per consumer
@@ -2706,29 +2698,11 @@ def mm7_silence_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the comparison is engine-exact). The oracle replays runs from the
     generating formula with gaps-and-islands SQL, so a decode, threshold,
     or run-boundary bug breaks the hash."""
-    from collections.abc import Iterator as _Iter
-
-    import numpy as np
-    import pandas as pd
-
-    from peskas_timor_data_pipeline_spark.llm.multimodal import (
-        audio_silence_stats,
-        encode_wav,
-    )
+    from peskas_timor_data_pipeline_spark.llm.multimodal import audio_silence_stats
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for did in pdf["doc_id"]:
-                n = (int(did) % 50 + 1) * 80
-                i = np.arange(n)
-                sig = (((int(did) + i) % 256 - 128) * 100).astype("<i2")
-                contents.append(encode_wav(sig, sample_rate=8000))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
-
-    media = docs.mapInPandas(synth, schema="doc_id long, content binary")
+    media = _synth_media(docs, _mm_wav)
     return audio_silence_stats(
         media, "doc_id", threshold=1000 / 32768, min_run=5
     )
@@ -3567,30 +3541,14 @@ def mm8_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-encoded bytes (mean pixel) and a position-weighted checksum that a
     transposed pixel would break. The oracle replays the NN index map
     from the generating formula."""
-    from collections.abc import Iterator as _Iter
-
-    import numpy as np
-    import pandas as pd
-
     from peskas_timor_data_pipeline_spark.llm.multimodal import (
         decode_image_meta,
-        encode_ppm,
         resize_images_real,
     )
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for did in pdf["doc_id"]:
-                w, h = int(did) % 13 + 1, int(did) % 7 + 1
-                y, x, c = np.indices((h, w, 3))
-                px = ((int(did) + x + y + c) % 256).astype(np.uint8)
-                contents.append(encode_ppm(px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
-
-    media = docs.mapInPandas(synth, schema="doc_id long, content binary")
+    media = _synth_media(docs, _mm_ppm)
     resized = resize_images_real(media, "doc_id", "content", target_w=8, target_h=6)
     meta = decode_image_meta(resized, "doc_id")
     return resized.select("doc_id", "width", "height", "pix_checksum").join(
@@ -3631,10 +3589,7 @@ def mm9_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     by 40 (with mod-256 wraparound making per-pixel diffs vary) — decode
     the actual bytes and flag cuts where mean abs frame diff > 20. Oracle
     replays the SAD arithmetic from the generating formula."""
-    from collections.abc import Iterator as _Iter
-
     import numpy as np
-    import pandas as pd
 
     from peskas_timor_data_pipeline_spark.llm.multimodal import (
         encode_y4m,
@@ -3643,22 +3598,18 @@ def mm9_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for did in pdf["doc_id"]:
-                nf = int(did) % 6 + 4
-                y, x = np.indices((6, 8))
-                frames = np.stack(
-                    [
-                        ((int(did) + 40 * (f // 3) + x + y) % 256).astype(np.uint8)
-                        for f in range(nf)
-                    ]
-                )
-                contents.append(encode_y4m(frames))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
+    def make(did: int) -> bytes:
+        y, x = np.indices((6, 8))
+        return encode_y4m(
+            np.stack(
+                [
+                    ((did + 40 * (f // 3) + x + y) % 256).astype(np.uint8)
+                    for f in range(did % 6 + 4)
+                ]
+            )
+        )
 
-    media = docs.mapInPandas(synth, schema="doc_id long, content binary")
+    media = _synth_media(docs, make)
     out = scene_cuts(media, "doc_id", threshold=20.0)
     return out.select(
         "doc_id", "frame_idx", "sad", F.round("mad", 6).alias("mad"), "is_cut"
@@ -3963,30 +3914,14 @@ def mm10_audio_decimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec round trip, then decode the RE-ENCODED bytes again and report
     rate/frames/duration/RMS of the result — two full codec passes
     hash-checked against the generating formula on the kept indices."""
-    from collections.abc import Iterator as _Iter
-
-    import numpy as np
-    import pandas as pd
-
     from peskas_timor_data_pipeline_spark.llm.multimodal import (
         decimate_audio,
         decode_audio_meta,
-        encode_wav,
     )
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for did in pdf["doc_id"]:
-                n = (int(did) % 50 + 1) * 80
-                i = np.arange(n)
-                samples = (((int(did) + i) % 256 - 128) * 100).astype("<i2")
-                contents.append(encode_wav(samples, sample_rate=8000))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
-
-    media = docs.mapInPandas(synth, schema="doc_id long, content binary")
+    media = _synth_media(docs, _mm_wav)
     dec = decimate_audio(media, "doc_id", factor=3)
     meta = decode_audio_meta(dec, "doc_id")
     return dec.select("doc_id", "n_in", "n_out").join(
@@ -4306,29 +4241,11 @@ def mm11_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel (llm/multimodal.py::image_channel_sums). The oracle recomputes
     everything from the generating formula, so a header-parse, layout, or
     channel-order bug breaks the hash."""
-    from collections.abc import Iterator as _Iter
-
-    import numpy as np
-    import pandas as pd
-
-    from peskas_timor_data_pipeline_spark.llm.multimodal import (
-        encode_ppm,
-        image_channel_sums,
-    )
+    from peskas_timor_data_pipeline_spark.llm.multimodal import image_channel_sums
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for did in pdf["doc_id"]:
-                w, h = int(did) % 13 + 1, int(did) % 7 + 1
-                y, x, c = np.indices((h, w, 3))
-                px = ((int(did) + x + y + c) % 256).astype(np.uint8)
-                contents.append(encode_ppm(px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
-
-    media = docs.mapInPandas(synth, schema="doc_id long, content binary")
+    media = _synth_media(docs, _mm_ppm)
     sums = image_channel_sums(media, "doc_id")
     agg = sums.groupBy("channel").agg(
         F.sum("n_pixels").alias("n_pixels"),
@@ -5085,10 +5002,7 @@ def mm13_audio_clipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples at or beyond 32700 counts (llm/multimodal.py::
     audio_clipping_stats). The oracle recomputes the counts from the
     generating formula, so a decode or scaling bug breaks the hash."""
-    from collections.abc import Iterator as _Iter
-
     import numpy as np
-    import pandas as pd
 
     from peskas_timor_data_pipeline_spark.llm.multimodal import (
         audio_clipping_stats,
@@ -5097,18 +5011,13 @@ def mm13_audio_clipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for did in pdf["doc_id"]:
-                n = (int(did) % 50 + 1) * 80
-                i = np.arange(n)
-                raw = (((int(did) + i) % 256 - 128) * 300)
-                sig = np.clip(raw, -32768, 32767).astype("<i2")
-                contents.append(encode_wav(sig, sample_rate=8000))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
+    def make(did: int) -> bytes:
+        raw = ((did + np.arange((did % 50 + 1) * 80)) % 256 - 128) * 300
+        return encode_wav(
+            np.clip(raw, -32768, 32767).astype("<i2"), sample_rate=8000
+        )
 
-    media = docs.mapInPandas(synth, schema="doc_id long, content binary")
+    media = _synth_media(docs, make)
     return audio_clipping_stats(media, "doc_id", threshold=32700)
 
 
@@ -5146,10 +5055,7 @@ def mm14_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     framing, or filter-math bug breaks the hash. Same attachments model
     as mm3 (reference R/pt_nest_attachments.R:40-72); no Pillow anywhere
     on this path."""
-    from collections.abc import Iterator as _Iter
-
     import numpy as np
-    import pandas as pd
 
     from peskas_timor_data_pipeline_spark.llm.multimodal import (
         decode_image_meta,
@@ -5163,19 +5069,14 @@ def mm14_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def synth(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = did % 11 + 1, did % 5 + 1
-                ch = 1 if did % 3 == 0 else 3
-                y, x, c = np.indices((h, w, ch))
-                px = ((did + x + y + c) % 256).astype(np.uint8)
-                contents.append(encode_png(px, filter_type="cycle"))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
+    def make(did: int) -> bytes:
+        w, h = did % 11 + 1, did % 5 + 1
+        ch = 1 if did % 3 == 0 else 3
+        y, x, c = np.indices((h, w, ch))
+        px = ((did + x + y + c) % 256).astype(np.uint8)
+        return encode_png(px, filter_type="cycle")
 
-    media = docs.mapInPandas(synth, schema="doc_id long, content binary")
+    media = _synth_media(docs, make)
     meta = decode_image_meta(media, "doc_id")
     return meta.select(
         "doc_id", "width", "height", "channels",
@@ -5217,10 +5118,7 @@ def mm15_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     lossy, so width/height/channels hash exactly and the mean rides a
     boundedness flag the oracle predicts from the construction (same
     attachments model as mm3, R/pt_nest_attachments.R:40-72)."""
-    from collections.abc import Iterator as _Iter
-
     import numpy as np
-    import pandas as pd
 
     from peskas_timor_data_pipeline_spark.llm.jpeg_codec import encode_jpeg
     from peskas_timor_data_pipeline_spark.llm.multimodal import (
@@ -5236,25 +5134,17 @@ def mm15_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def synth(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        for pdf in batches:
-            contents = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = did % 12 + 5, did % 6 + 5
-                ch = 1 if did % 2 == 0 else 3
-                y, x, c = np.indices((h, w, ch))
-                px = ((did * 7 + x * 3 + y * 5 + c * 11) % 251).astype(
-                    np.uint8
-                )
-                ri = 2 if did % 5 == 0 else 0
-                contents.append(
-                    encode_jpeg(px, quality=90, subsampling="4:4:4",
-                                restart_interval=ri)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "content": contents})
+    def make(did: int) -> bytes:
+        w, h = did % 12 + 5, did % 6 + 5
+        ch = 1 if did % 2 == 0 else 3
+        y, x, c = np.indices((h, w, ch))
+        px = ((did * 7 + x * 3 + y * 5 + c * 11) % 251).astype(np.uint8)
+        ri = 2 if did % 5 == 0 else 0
+        return encode_jpeg(
+            px, quality=90, subsampling="4:4:4", restart_interval=ri
+        )
 
-    media = docs.mapInPandas(synth, schema="doc_id long, content binary")
+    media = _synth_media(docs, make)
     meta = decode_image_meta(media, "doc_id")
     # exact source mean from the generating formula, computed JVM-side:
     # mean over t in [0, w*h*ch) of (doc_id*7 + (t % (w*ch)) div ch * 3

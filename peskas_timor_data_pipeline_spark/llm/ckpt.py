@@ -22,11 +22,12 @@ from pyspark.sql import DataFrame
 # the checkpoint would serialize the timeline, so gated call sites pass
 # the frame through lazily; above it the duplicate pass is real work and
 # the cut wins. Thresholds compare against either source parquet bytes
-# (scan_bytes) or a checkpoint's stored bytes (materialized_bytes, ~10x
-# the parquet size for narrow rows); 1 GiB keeps every toy/test scale on
-# the lazy path and engages the cut where a duplicated pass costs whole
-# node-minutes. Callers read ``ckpt.EAGER_MIN_BYTES`` at call time, so a
-# test can force the eager path by setting it.
+# (scan_bytes, via materialize_gated) or a checkpoint's stored bytes
+# (materialized_is_big, ~10x the parquet size for narrow rows); 1 GiB keeps
+# every toy/test scale on the lazy path and engages the cut where a
+# duplicated pass costs whole node-minutes. Both gates read
+# ``EAGER_MIN_BYTES`` at call time, so a test can force the eager path by
+# setting it.
 EAGER_MIN_BYTES = 1 << 30
 
 
@@ -55,23 +56,24 @@ def scan_bytes(df: DataFrame) -> int:
     return total
 
 
-def materialized_bytes(df: DataFrame) -> int | None:
-    """Actual stored size of a just-:func:`materialize`-d frame, read from
-    the block manager's storage registry (driver-side, no job). None when
-    it cannot be determined (not a checkpoint scan, reliable checkpoint on
-    an external filesystem, blocks evicted) — callers treat None as big,
-    which keeps the scale-safe eager path."""
+def materialized_is_big(df: DataFrame) -> bool:
+    """The size gate on a just-:func:`materialize`-d frame: True when its
+    stored bytes, read from the block manager's storage registry
+    (driver-side, no job), reach ``EAGER_MIN_BYTES``. A size that cannot
+    be determined (not a checkpoint scan, reliable checkpoint on an
+    external filesystem, blocks evicted) reads as big, which keeps the
+    scale-safe eager path."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() != "LogicalRDD":
-            return None
+            return True
         rid = plan.rdd().id()
         for info in df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo():
             if info.id() == rid:
-                return int(info.memSize()) + int(info.diskSize())
+                return int(info.memSize()) + int(info.diskSize()) >= EAGER_MIN_BYTES
     except Exception:  # noqa: BLE001 - any py4j/reflection surprise => unknown
-        return None
-    return None
+        return True
+    return True
 
 
 def materialize_gated(

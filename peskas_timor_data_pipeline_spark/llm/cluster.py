@@ -25,10 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from peskas_timor_data_pipeline_spark.llm import ckpt
-from peskas_timor_data_pipeline_spark.llm.ckpt import (
-    materialize,
-    materialized_bytes,
-)
+from peskas_timor_data_pipeline_spark.llm.ckpt import materialize
 
 
 def _cut(df: DataFrame, eager: bool, checkpoint_dir: str | None) -> DataFrame:
@@ -68,10 +65,10 @@ def connected_components(
     # Size gate (r12, guide §5): the per-round lineage cut stays — the
     # plan-verified r11 win (hop aggregate's reduce side runs once per
     # round) — but its EAGERNESS follows the measured edge bytes, so toy
-    # inputs stop paying a driver-blocking job per round. None (reliable
-    # checkpoints, evicted blocks) reads as big: cluster runs stay eager.
-    sz = materialized_bytes(edges)
-    eager = sz is None or sz >= ckpt.EAGER_MIN_BYTES
+    # inputs stop paying a driver-blocking job per round. An unreadable
+    # size (reliable checkpoints, evicted blocks) reads as big: cluster
+    # runs stay eager.
+    eager = ckpt.materialized_is_big(edges)
     labels = (
         edges.groupBy("src")
         .agg(F.min("dst").alias("nbr_min"))
@@ -284,8 +281,7 @@ def connected_components_star(
     # Same size gate as connected_components: per-round lineage cuts stay
     # (bounded plans, single edge-scale pass per star phase at scale) but
     # only block on checkpoint jobs when the edge set is actually big.
-    sz = materialized_bytes(edges)
-    eager = sz is None or sz >= ckpt.EAGER_MIN_BYTES
+    eager = ckpt.materialized_is_big(edges)
 
     def _sym(e: DataFrame) -> DataFrame:
         return e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(

@@ -1080,8 +1080,7 @@ def containment_pairs(
         .select("gh"),
         "gh",
     )
-    _gsz = ckpt.materialized_bytes(grams)
-    if _gsz is None or _gsz >= ckpt.EAGER_MIN_BYTES:
+    if ckpt.materialized_is_big(grams):
         gram_df = materialize(gram_df, checkpoint_dir)
     a = gram_df.select(F.col(id_col).alias("id_a"), "gh")
     b = gram_df.select(F.col(id_col).alias("id_b"), "gh")

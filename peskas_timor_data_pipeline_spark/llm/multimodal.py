@@ -14,7 +14,7 @@ generalizes to this column layout directly.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 
@@ -601,6 +601,38 @@ def encode_y4m(y_planes, fps_num: int = 25, fps_den: int = 1) -> bytes:
     return b"".join(out)
 
 
+def _map_payloads(
+    df: DataFrame,
+    id_col: str,
+    content_col: str,
+    schema: str,
+    rows: Callable[[bytes], Iterable[tuple]],
+) -> DataFrame:
+    """The one Arrow-batch kernel behind every media operator below.
+    ``rows(content)`` yields the output values of one payload after the
+    id — zero rows, one row or many; the kernel owns the batch loop, the
+    frame assembly and the single ``mapInPandas`` crossing. Output column
+    names come from the DDL ``schema``, whose first column is the id.
+
+    Scale shape: Arrow batches stream partition-locally, only the id and
+    payload columns cross into Python, nothing shuffles and nothing is
+    collected to the driver."""
+    names = [f.split()[0] for f in schema.split(",")]
+
+    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [
+                    (i, *r)
+                    for i, b in zip(pdf[id_col], pdf[content_col])
+                    for r in rows(b)
+                ],
+                columns=names,
+            )
+
+    return df.select(id_col, content_col).mapInPandas(extract, schema=schema)
+
+
 def decode_audio_meta(
     df: DataFrame, id_col: str, content_col: str = "content"
 ) -> DataFrame:
@@ -609,31 +641,18 @@ def decode_audio_meta(
     bytes."""
     import numpy as np
 
-    out_schema = (
+    def rows(b: bytes) -> Iterator[tuple]:
+        d = decode_audio(b)
+        s = d["samples"]
+        rms = float(np.sqrt(np.mean(s**2))) if len(s) else 0.0
+        yield d["sample_rate"], d["n_channels"], d["n_samples"], d["duration_s"], rms
+
+    return _map_payloads(
+        df, id_col, content_col,
         f"{id_col} long, sample_rate int, n_channels int, n_samples long, "
-        "duration_s double, rms double"
+        "duration_s double, rms double",
+        rows,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_audio(b) for b in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "sample_rate": [d["sample_rate"] for d in decoded],
-                    "n_channels": [d["n_channels"] for d in decoded],
-                    "n_samples": [d["n_samples"] for d in decoded],
-                    "duration_s": [d["duration_s"] for d in decoded],
-                    "rms": [
-                        float(np.sqrt(np.mean(d["samples"] ** 2)))
-                        if len(d["samples"])
-                        else 0.0
-                        for d in decoded
-                    ],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(extract, schema=out_schema)
 
 
 def sample_video_frames(
@@ -646,32 +665,17 @@ def sample_video_frames(
     every ``every_n_frames``-th frame, emit one row per sampled frame with
     its luma mean — the actual decode-and-subsample a vision-training
     pipeline runs (the plan shape ``frame_sample_plan`` models)."""
-    out_schema = (
-        f"{id_col} long, frame_idx int, width int, height int, y_mean double"
+
+    def rows(b: bytes) -> Iterator[tuple]:
+        d = decode_video(b)
+        for f in range(0, d["n_frames"], every_n_frames):
+            yield f, d["width"], d["height"], float(d["y_planes"][f].mean())
+
+    return _map_payloads(
+        df, id_col, content_col,
+        f"{id_col} long, frame_idx int, width int, height int, y_mean double",
+        rows,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, ws, hs, means = [], [], [], [], []
-            for did, b in zip(pdf[id_col], pdf[content_col]):
-                d = decode_video(b)
-                for f in range(0, d["n_frames"], every_n_frames):
-                    ids.append(did)
-                    fidx.append(f)
-                    ws.append(d["width"])
-                    hs.append(d["height"])
-                    means.append(float(d["y_planes"][f].mean()))
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "frame_idx": fidx,
-                    "width": ws,
-                    "height": hs,
-                    "y_mean": means,
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(extract, schema=out_schema)
 
 
 def decode_image_meta(
@@ -692,37 +696,25 @@ def decode_image_meta(
     dropped or silently faked)."""
     if on_error not in ("raise", "quarantine"):
         raise ValueError(f"unknown on_error: {on_error}")
-    out_schema = (
+    quarantine = on_error == "quarantine"
+
+    def rows(b: bytes) -> Iterator[tuple]:
+        try:
+            d = decode_image(b)
+        except ValueError as e:
+            if not quarantine:
+                raise
+            yield None, None, None, None, str(e)
+            return
+        meta = (d["width"], d["height"], d["channels"], float(d["pixels"].mean()))
+        yield (*meta, None) if quarantine else meta
+
+    return _map_payloads(
+        df, id_col, content_col,
         f"{id_col} long, width int, height int, channels int, mean_pixel double"
-        + (", decode_error string" if on_error == "quarantine" else "")
+        + (", decode_error string" if quarantine else ""),
+        rows,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols: dict = {
-                id_col: pdf[id_col],
-                "width": [], "height": [], "channels": [], "mean_pixel": [],
-            }
-            errors = []
-            for b in pdf[content_col]:
-                try:
-                    d = decode_image(b)
-                    cols["width"].append(d["width"])
-                    cols["height"].append(d["height"])
-                    cols["channels"].append(d["channels"])
-                    cols["mean_pixel"].append(float(d["pixels"].mean()))
-                    errors.append(None)
-                except ValueError as e:
-                    if on_error == "raise":
-                        raise
-                    for c in ("width", "height", "channels", "mean_pixel"):
-                        cols[c].append(None)
-                    errors.append(str(e))
-            if on_error == "quarantine":
-                cols["decode_error"] = errors
-            yield pd.DataFrame(cols)
-
-    return df.select(id_col, content_col).mapInPandas(extract, schema=out_schema)
 
 
 def image_dhash(
@@ -743,37 +735,26 @@ def image_dhash(
     every step is exact integer arithmetic an oracle can replay from the
     generating formula.
 
-    Scale shape: one mapInPandas pass, numpy per Arrow batch; output is
-    (id, width, height, dhash) — 8 bytes of hash per image, the frame a
-    banded hamming join consumes (llm.dedup.hamming_neardup_pairs)."""
+    Output is (id, width, height, dhash) — 8 bytes of hash per image, the
+    frame a banded hamming join consumes
+    (llm.dedup.hamming_neardup_pairs)."""
     import numpy as np
 
-    out_schema = f"{id_col} long, width int, height int, dhash long"
+    def rows(b: bytes) -> Iterator[tuple]:
+        d = decode_image(b)
+        w, h = d["width"], d["height"]
+        g = d["pixels"].sum(axis=2, dtype=np.int64)  # channel sum
+        iy = (np.arange(grid) * h) // grid
+        ix = (np.arange(grid) * w) // grid
+        s = g[np.ix_(iy, ix)]
+        bits = (s[:, 1:] > s[:, :-1]).astype(np.int64).ravel()
+        yield w, h, int((bits << np.arange(grid * (grid - 1))).sum())
 
-    def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            widths, heights, hashes = [], [], []
-            for b in pdf[content_col]:
-                d = decode_image(b)
-                w, h = d["width"], d["height"]
-                g = d["pixels"].sum(axis=2, dtype=np.int64)  # channel sum
-                iy = (np.arange(grid) * h) // grid
-                ix = (np.arange(grid) * w) // grid
-                s = g[np.ix_(iy, ix)]
-                bits = (s[:, 1:] > s[:, :-1]).astype(np.int64).ravel()
-                hashes.append(int((bits << np.arange(grid * (grid - 1))).sum()))
-                widths.append(w)
-                heights.append(h)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": widths,
-                    "height": heights,
-                    "dhash": hashes,
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(hash_batch, schema=out_schema)
+    return _map_payloads(
+        df, id_col, content_col,
+        f"{id_col} long, width int, height int, dhash long",
+        rows,
+    )
 
 
 def extract_binary_meta(
@@ -781,28 +762,17 @@ def extract_binary_meta(
 ) -> DataFrame:
     """mapInPandas feature extraction over binary content — the real Arrow
     batch path a decoder would use. Deterministic fake features: byte
-    length, first-4-bytes magic, content digest.
-
-    Scale shape: mapInPandas streams Arrow batches per partition; no
-    per-row Python calls, no driver collection; binary columns stay
-    columnar end to end."""
+    length, first-4-bytes magic, content digest."""
     import hashlib
 
-    out_schema = f"{id_col} long, n_bytes long, magic string, digest string"
+    def rows(b: bytes) -> Iterator[tuple]:
+        yield len(b), b[:4].decode("utf-8", "replace"), hashlib.md5(b).hexdigest()
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            content = pdf[content_col]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_bytes": content.map(len),
-                    "magic": content.map(lambda b: b[:4].decode("utf-8", "replace")),
-                    "digest": content.map(lambda b: hashlib.md5(b).hexdigest()),
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(extract, schema=out_schema)
+    return _map_payloads(
+        df, id_col, content_col,
+        f"{id_col} long, n_bytes long, magic string, digest string",
+        rows,
+    )
 
 
 def resize_images(
@@ -816,28 +786,19 @@ def resize_images(
     dims in typed metadata — the exact batch shape a PIL/libvips resize
     would use (decode/re-encode STUBBED: the deterministic fake clamps the
     payload to target_w*target_h bytes so output size tracks target dims).
-
-    Scale shape: binary columns ride Arrow batches partition-locally; the
-    output schema is declared up front so downstream stages plan against
-    typed columns, not a Python object blob."""
-    out_schema = (
-        f"{id_col} long, content binary, meta_width int, meta_height int"
-    )
+    The output schema is declared up front so downstream stages plan
+    against typed columns, not a Python object blob."""
     cap = target_w * target_h
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    # STUB for PIL Image.resize((target_w, target_h))
-                    "content": pdf[content_col].map(lambda b: b[:cap]),
-                    "meta_width": target_w,
-                    "meta_height": target_h,
-                }
-            )
+    def rows(b: bytes) -> Iterator[tuple]:
+        # STUB for PIL Image.resize((target_w, target_h))
+        yield b[:cap], target_w, target_h
 
-    return df.select(id_col, content_col).mapInPandas(resize, schema=out_schema)
+    return _map_payloads(
+        df, id_col, content_col,
+        f"{id_col} long, content binary, meta_width int, meta_height int",
+        rows,
+    )
 
 
 def frame_sample_plan(
@@ -871,55 +832,40 @@ def audio_silence_stats(
     leading/trailing run lengths (the trim offsets an edit pass would cut).
     ``threshold`` is in normalized [-1, 1) amplitude; the default is the
     dyadic 1000/32768, exactly representable so comparisons can never
-    straddle an engine-specific rounding.
-
-    Scale shape: mapInPandas over Arrow batches, one pass per clip, output
-    one narrow row per clip — the decode is embarrassingly parallel and
-    nothing shuffles (the pattern shared by all mm decode operators).
+    straddle an engine-specific rounding. One narrow row per clip.
     """
     import numpy as np
 
-    out_schema = (
+    def rows(b: bytes) -> Iterator[tuple]:
+        s = decode_audio(bytes(b))["samples"]
+        m = np.abs(s) < threshold
+        n_silent = int(m.sum())
+        if n_silent == 0:
+            yield len(s), 0, 0, 0, 0, 0
+            return
+        d = np.diff(m.astype(np.int8))
+        starts = np.where(d == 1)[0] + 1
+        ends = np.where(d == -1)[0] + 1
+        if m[0]:
+            starts = np.r_[0, starts]
+        if m[-1]:
+            ends = np.r_[ends, len(m)]
+        lens = ends - starts
+        yield (
+            len(s),
+            n_silent,
+            int((lens >= min_run).sum()),
+            int(lens.max()),
+            int(lens[0]) if m[0] else 0,
+            int(lens[-1]) if m[-1] else 0,
+        )
+
+    return _map_payloads(
+        df, id_col, content_col,
         f"{id_col} long, n_samples long, n_silent long, n_runs long, "
-        "longest_run long, lead_trim long, trail_trim long"
+        "longest_run long, lead_trim long, trail_trim long",
+        rows,
     )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, b in zip(pdf[id_col], pdf[content_col]):
-                s = decode_audio(bytes(b))["samples"]
-                m = np.abs(s) < threshold
-                n_silent = int(m.sum())
-                if n_silent == 0:
-                    rows.append((did, len(s), 0, 0, 0, 0, 0))
-                    continue
-                d = np.diff(m.astype(np.int8))
-                starts = np.where(d == 1)[0] + 1
-                ends = np.where(d == -1)[0] + 1
-                if m[0]:
-                    starts = np.r_[0, starts]
-                if m[-1]:
-                    ends = np.r_[ends, len(m)]
-                lens = ends - starts
-                rows.append((
-                    did,
-                    len(s),
-                    n_silent,
-                    int((lens >= min_run).sum()),
-                    int(lens.max()),
-                    int(lens[0]) if m[0] else 0,
-                    int(lens[-1]) if m[-1] else 0,
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "n_samples", "n_silent", "n_runs",
-                    "longest_run", "lead_trim", "trail_trim",
-                ],
-            )
-
-    return df.select(id_col, content_col).mapInPandas(extract, schema=out_schema)
 
 
 def resize_images_real(
@@ -938,44 +884,28 @@ def resize_images_real(
     verification. This retires the ``resize_images`` stub for supported
     formats; unsupported codecs still raise loudly there.
 
-    Scale shape: one mapInPandas pass, numpy per Arrow batch; binary in,
-    binary out with typed dims — the distributed preprocessing shape a
-    vision-model pipeline feeds to its trainer.
+    Binary in, binary out with typed dims — the distributed preprocessing
+    shape a vision-model pipeline feeds to its trainer.
     """
     import numpy as np
 
-    out_schema = (
-        f"{id_col} long, content binary, width int, height int, pix_checksum long"
+    def rows(b: bytes) -> Iterator[tuple]:
+        px = decode_image(b)["pixels"]
+        if px.ndim == 2:  # grayscale -> 3-channel for P6 output
+            px = np.repeat(px[:, :, None], 3, axis=2)
+        h, w = px.shape[0], px.shape[1]
+        iy = (np.arange(target_h) * h) // target_h
+        ix = (np.arange(target_w) * w) // target_w
+        res = px[np.ix_(iy, ix)]
+        flat = res.astype(np.int64).ravel()
+        check = int((flat * (np.arange(flat.size) + 1)).sum() % 1_000_000_007)
+        yield encode_ppm(res.astype(np.uint8)), target_w, target_h, check
+
+    return _map_payloads(
+        df, id_col, content_col,
+        f"{id_col} long, content binary, width int, height int, pix_checksum long",
+        rows,
     )
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents, checks = [], []
-            for b in pdf[content_col]:
-                d = decode_image(b)
-                px = d["pixels"]
-                if px.ndim == 2:  # grayscale -> 3-channel for P6 output
-                    px = np.repeat(px[:, :, None], 3, axis=2)
-                h, w = px.shape[0], px.shape[1]
-                iy = (np.arange(target_h) * h) // target_h
-                ix = (np.arange(target_w) * w) // target_w
-                res = px[np.ix_(iy, ix)]
-                flat = res.astype(np.int64).ravel()
-                checks.append(
-                    int((flat * (np.arange(flat.size) + 1)).sum() % 1_000_000_007)
-                )
-                contents.append(encode_ppm(res.astype(np.uint8)))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "content": contents,
-                    "width": target_w,
-                    "height": target_h,
-                    "pix_checksum": checks,
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(resize, schema=out_schema)
 
 
 def scene_cuts(
@@ -991,44 +921,26 @@ def scene_cuts(
     pipeline runs before per-scene sampling. Integer SAD first, ONE exact
     division after, so the decision has no float-accumulation surface.
 
-    Scale shape: one mapInPandas pass; the frame-diff runs vectorized in
-    numpy per clip, bounded by clip length x frame size — per-row cost,
-    nothing corpus-wide. Emits (id, frame_idx, sad, mad, is_cut) per
-    frame pair, frame_idx = the LATER frame (where the new scene starts).
+    The frame-diff runs vectorized in numpy per clip, bounded by clip
+    length x frame size — per-row cost, nothing corpus-wide. Emits (id,
+    frame_idx, sad, mad, is_cut) per frame pair, frame_idx = the LATER
+    frame (where the new scene starts); a single-frame clip emits no row.
     """
     import numpy as np
 
-    out_schema = (
-        f"{id_col} long, frame_idx int, sad long, mad double, is_cut boolean"
+    def rows(b: bytes) -> Iterator[tuple]:
+        d = decode_video(b)
+        y = d["y_planes"].astype(np.int64)
+        npix = d["width"] * d["height"]
+        for f in range(1, y.shape[0]):
+            sad = int(np.abs(y[f] - y[f - 1]).sum())
+            yield f, sad, sad / npix, sad / npix > threshold
+
+    return _map_payloads(
+        df, id_col, content_col,
+        f"{id_col} long, frame_idx int, sad long, mad double, is_cut boolean",
+        rows,
     )
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, sads, mads, cuts = [], [], [], [], []
-            for did, b in zip(pdf[id_col], pdf[content_col]):
-                d = decode_video(b)
-                y = d["y_planes"].astype(np.int64)
-                n = y.shape[0]
-                npix = d["width"] * d["height"]
-                for f in range(1, n):
-                    sad = int(np.abs(y[f] - y[f - 1]).sum())
-                    mad = sad / npix
-                    ids.append(did)
-                    fidx.append(f)
-                    sads.append(sad)
-                    mads.append(mad)
-                    cuts.append(mad > threshold)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(fidx, dtype="int32"),
-                    "sad": pd.Series(sads, dtype="int64"),
-                    "mad": pd.Series(mads, dtype="float64"),
-                    "is_cut": pd.Series(cuts, dtype="bool"),
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(compute, schema=out_schema)
 
 
 def decimate_audio(
@@ -1044,47 +956,31 @@ def decimate_audio(
     counts plus the decimated RMS. Mono 16-bit path (the training-corpus
     normal form); multi-channel input raises loudly.
 
-    Scale shape: one mapInPandas pass, numpy slicing per clip — per-row
-    cost. The RMS of int16-derived dyadic rationals sums exactly in
-    double regardless of order, so it hash-verifies cross-engine.
+    The RMS of int16-derived dyadic rationals sums exactly in double
+    regardless of order, so it hash-verifies cross-engine.
     """
     import numpy as np
 
-    out_schema = (
+    def rows(b: bytes) -> Iterator[tuple]:
+        d = decode_audio(b)
+        if d["n_channels"] != 1:
+            raise ValueError("decimate_audio expects mono input")
+        s = d["samples"][::factor]
+        rate = d["sample_rate"] // factor
+        yield (
+            encode_wav(np.round(s * 32768.0).astype("<i2"), sample_rate=rate),
+            rate,
+            d["n_samples"],
+            len(s),
+            float(np.sqrt((s * s).mean())) if len(s) else None,
+        )
+
+    return _map_payloads(
+        df, id_col, content_col,
         f"{id_col} long, content binary, out_rate int, n_in long, "
-        f"n_out long, rms_out double"
+        "n_out long, rms_out double",
+        rows,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents, rates, nins, nouts, rms = [], [], [], [], []
-            for b in pdf[content_col]:
-                d = decode_audio(b)
-                if d["n_channels"] != 1:
-                    raise ValueError("decimate_audio expects mono input")
-                s = d["samples"][::factor]
-                contents.append(
-                    encode_wav(
-                        np.round(s * 32768.0).astype("<i2"),
-                        sample_rate=d["sample_rate"] // factor,
-                    )
-                )
-                rates.append(d["sample_rate"] // factor)
-                nins.append(d["n_samples"])
-                nouts.append(len(s))
-                rms.append(float(np.sqrt((s * s).mean())) if len(s) else None)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "content": contents,
-                    "out_rate": pd.Series(rates, dtype="int32"),
-                    "n_in": pd.Series(nins, dtype="int64"),
-                    "n_out": pd.Series(nouts, dtype="int64"),
-                    "rms_out": pd.Series(rms, dtype="float64"),
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(run, schema=out_schema)
 
 
 def image_channel_sums(
@@ -1107,33 +1003,18 @@ def image_channel_sums(
     """
     import numpy as np
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, chans, ns, sums, sumsqs = [], [], [], [], []
-            for rid, b in zip(pdf[id_col], pdf[content_col]):
-                d = decode_image(b)
-                px = d["pixels"].astype(np.int64)
-                if px.ndim == 2:
-                    px = px[:, :, None]
-                for c in range(px.shape[2]):
-                    ids.append(rid)
-                    chans.append(c)
-                    ns.append(int(px.shape[0] * px.shape[1]))
-                    sums.append(int(px[:, :, c].sum()))
-                    sumsqs.append(int((px[:, :, c].astype(np.int64) ** 2).sum()))
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "channel": chans,
-                    "n_pixels": ns,
-                    "px_sum": sums,
-                    "px_sumsq": sumsqs,
-                }
-            )
+    def rows(b: bytes) -> Iterator[tuple]:
+        px = decode_image(b)["pixels"].astype(np.int64)
+        if px.ndim == 2:
+            px = px[:, :, None]
+        n = int(px.shape[0] * px.shape[1])
+        for c in range(px.shape[2]):
+            yield c, n, int(px[:, :, c].sum()), int((px[:, :, c] ** 2).sum())
 
-    return df.mapInPandas(
-        extract,
-        schema=f"{id_col} long, channel int, n_pixels long, px_sum long, px_sumsq long",
+    return _map_payloads(
+        df, id_col, content_col,
+        f"{id_col} long, channel int, n_pixels long, px_sum long, px_sumsq long",
+        rows,
     )
 
 
@@ -1155,27 +1036,13 @@ def audio_clipping_stats(
     """
     import numpy as np
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, cl = [], [], []
-            for rid, b in zip(pdf[id_col], pdf[content_col]):
-                d = decode_audio(b)
-                ints = np.rint(d["samples"] * 32768.0).astype(np.int64)
-                ids.append(rid)
-                ns.append(int(len(ints)))
-                cl.append(int((np.abs(ints) >= threshold).sum()))
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "n_samples": ns,
-                    "n_clipped": cl,
-                    "clipped_ppm": [
-                        (c * 1_000_000) // n if n else 0 for c, n in zip(cl, ns)
-                    ],
-                }
-            )
+    def rows(b: bytes) -> Iterator[tuple]:
+        ints = np.rint(decode_audio(b)["samples"] * 32768.0).astype(np.int64)
+        n, clipped = len(ints), int((np.abs(ints) >= threshold).sum())
+        yield n, clipped, (clipped * 1_000_000) // n if n else 0
 
-    return df.mapInPandas(
-        extract,
-        schema=f"{id_col} long, n_samples long, n_clipped long, clipped_ppm long",
+    return _map_payloads(
+        df, id_col, content_col,
+        f"{id_col} long, n_samples long, n_clipped long, clipped_ppm long",
+        rows,
     )

@@ -29,10 +29,10 @@ def dot_expr(a: str, b: str, dim: int) -> Column:
 
 
 def l2_expr(a: str, b: str, dim: int) -> Column:
-    """sum_i (a[i]-b[i])^2 as one generated (codegen) expression. Used on
-    the coarse-routing hot paths where the HOF fold's interpreted
-    evaluation dominates at n x sqrt(C) row counts (one ~2-4 s codegen
-    compile per distinct stage buys ~10x per-row throughput)."""
+    """sum_i (a[i]-b[i])^2 as one generated (codegen) expression: where a
+    HOF fold's interpreted evaluation dominates at large row counts, one
+    ~2-4 s codegen compile per distinct stage buys ~10x per-row
+    throughput."""
     terms = " + ".join(
         f"(CAST({a}[{i}] AS DOUBLE) - CAST({b}[{i}] AS DOUBLE))"
         f" * (CAST({a}[{i}] AS DOUBLE) - CAST({b}[{i}] AS DOUBLE))"
@@ -2114,7 +2114,6 @@ def ivfpq_build(
     n_cells: int = 16,
     checkpoint_dir: str | None = None,
     route: str = "exact",
-    n_route_probe: int = 4,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Build the IVF-PQ index once (FAISS train+add): seeded coarse
     centroids, the residual codebook, and the encoded inverted lists —
@@ -2130,8 +2129,15 @@ def ivfpq_build(
     through the x n_cells / x k_cb row expansions into the aggregates
     and (b) interpreted higher-order folds per expanded row; fixed by
     slim-carry + id-rejoin and unrolled per-subvector element chains
-    (8.1s at 30k x k_cb=256, values bit-identical)."""
+    (8.1s at 30k x k_cb=256, values bit-identical).
+
+    ``route``: "exact" (default) or "gemm" (Arrow-batched BLAS assignment
+    and encode, :func:`_gemm_assign` / :func:`_gemm_pq_encode`); any
+    other value raises ``ValueError``."""
     from peskas_timor_data_pipeline_spark.llm.ckpt import materialize
+
+    if route not in ("exact", "gemm"):
+        raise ValueError(f"unknown route: {route!r}")
 
     l2_fold, diff_arr, res_fold = _pq_folds(dim, m_sub)
     cents = F.broadcast(
@@ -2184,71 +2190,12 @@ def ivfpq_build(
             checkpoint_dir,
         )
         return cents, rcb, encoded
-    if route == "coarse" and n_cells >= 64:
-        # two-level quantized assignment (see ivf_build's route="coarse"
-        # note): O(sqrt(C) + p*C/sqrt(C)) distance evals per vector.
-        # Opt-in only — the e24/e24b oracles replay EXACT assignment.
-        import math
-
-        n_sup = max(4, math.isqrt(n_cells))
-        sups = F.broadcast(
-            materialize(
-                cents.select(
-                    F.col("cell_id").alias("sup_id"),
-                    F.col("cvec").alias("svec"),
-                    F.md5(
-                        F.concat(
-                            F.lit("cent#"), F.col("cell_id").cast("string")
-                        )
-                    ).alias("__sk__"),
-                )
-                .orderBy("__sk__", "sup_id")
-                .limit(n_sup)
-                .drop("__sk__"),
-                checkpoint_dir,
-            )
-        )
-        children = F.broadcast(
-            materialize(
-                cents.crossJoin(sups)
-                .select(
-                    "sup_id", "cell_id", "cvec",
-                    l2_expr("cvec", "svec", dim).alias("__l2__"),
-                )
-                .groupBy("cell_id")
-                .agg(
-                    F.min_by(
-                        "sup_id", F.struct(F.col("__l2__"), F.col("sup_id"))
-                    ).alias("sup_id"),
-                    F.first("cvec").alias("cvec"),
-                ),
-                checkpoint_dir,
-            )
-        )
-        w_r = Window.partitionBy("cand_id").orderBy(
-            F.asc("__l2__"), F.asc("sup_id")
-        )
-        routed = (
-            c.crossJoin(sups)
-            .select("cand_id", "sup_id", l2_expr("__v__", "svec", dim).alias("__l2__"))
-            .withColumn("rn", F.row_number().over(w_r))
-            .filter(F.col("rn") <= int(n_route_probe))
-            .select("cand_id", "sup_id")
-        )
-        assign_codes = (
-            routed.join(F.broadcast(children), "sup_id")
-            .join(c, "cand_id")
-            .select("cand_id", "cell_id", l2_expr("__v__", "cvec", dim).alias("__l2__"))
-            .groupBy("cand_id")
-            .agg(argmin)
-        )
-    else:
-        assign_codes = (
-            c.crossJoin(cents)
-            .select("cand_id", "cell_id", l2_fold("__v__", "cvec").alias("__l2__"))
-            .groupBy("cand_id")
-            .agg(argmin)
-        )
+    assign_codes = (
+        c.crossJoin(cents)
+        .select("cand_id", "cell_id", l2_fold("__v__", "cvec").alias("__l2__"))
+        .groupBy("cand_id")
+        .agg(argmin)
+    )
     assigned = (
         assign_codes.join(c, "cand_id")
         .join(cents.withColumnRenamed("cvec", "__cv__"), "cell_id")
@@ -2581,8 +2528,8 @@ def _gemm_assign(
     (v.c - |c|^2/2). numpy ties resolve to the FIRST (lowest) index and
     the matrix is ordered by cell_id, matching the exact path's
     (score, cell_id) tie-break; float reassociation can flip only
-    exact-tie scores, which n_probe-cell search absorbs (same contract
-    as route='coarse', tested against exact assignment).
+    exact-tie scores, which n_probe-cell search absorbs (tested against
+    exact assignment).
 
     NOT used by any registry query (their oracles replay the exact
     JVM-chain sums; ``route='exact'`` stays the default), so the
@@ -2593,8 +2540,8 @@ def _gemm_assign(
 
     rows = cents.select("cell_id", "cvec").orderBy("cell_id").collect()
     # cell_id is the centroid's own id column — keep its values and dtype
-    # (ADVICE r10: int() crashed string-id corpora that the exact/coarse
-    # routes support, and a hardcoded LongType diverged the inverted-list
+    # (ADVICE r10: int() crashed string-id corpora that the exact route
+    # supports, and a hardcoded LongType diverged the inverted-list
     # schema from route='exact' for int-typed ids)
     cell_ids = np.asarray([r.cell_id for r in rows])
     mat = np.array([[float(x) for x in r.cvec] for r in rows], dtype=np.float64)
@@ -2644,7 +2591,6 @@ def ivf_build(
     n_cells: int = 16,
     checkpoint_dir: str | None = None,
     route: str = "exact",
-    n_route_probe: int = 4,
 ) -> tuple[DataFrame, DataFrame]:
     """Build the IVF index once (FAISS train+add): seeded centroids and
     the inverted lists (cell_id, cand_id, cv, cn), both materialized so
@@ -2658,26 +2604,18 @@ def ivf_build(
     it (the r07 ivfpq lesson, ported here after ANNSCALE showed 382 s
     at 300k vectors).
 
-    ``route="coarse"`` caps the per-vector assignment cost as cells grow
-    with sqrt(n): a two-level quantizer routes each vector to its
-    ``n_route_probe`` nearest of ~sqrt(n_cells) super-centroids (a
-    seeded subset of the centroids), then compares exactly against only
-    those supers' child centroids — O(sqrt(C) + p*C/sqrt(C)) distance
-    evals per vector instead of O(C). A vector occasionally lands in
-    its 2nd-best cell, which search absorbs: probing n_probe cells
-    looks in every list a near-best assignment can reach (FAISS's own
-    assign-time quantization trade). Exact remains the default.
-
-    ``route="gemm"`` (r10) supersedes coarse for builds at scale: one
-    Arrow-batched BLAS GEMM per vector batch against the full centroid
-    matrix — EXACT assignment cheaper than the routed JVM path (the
+    ``route="gemm"`` (r10) is the build path at scale: one Arrow-batched
+    BLAS GEMM per vector batch against the full centroid matrix — the
+    same exact assignment as the default ``route="exact"`` (the
     split-probe measured the JVM element chains at ~2 us per
     (vector, cell) pair; the GEMM does the same flops in BLAS). Not
-    used by registry queries, so oracle sums are untouched.
+    used by registry queries, so oracle sums are untouched. Any other
+    route raises ``ValueError``.
     """
-    import math
-
     from peskas_timor_data_pipeline_spark.llm.ckpt import materialize
+
+    if route not in ("exact", "gemm"):
+        raise ValueError(f"unknown route: {route!r}")
 
     cents = materialize(
         ivf_centroids(candidates, id_col, vec_col, n_cells, dim),
@@ -2699,66 +2637,10 @@ def ivf_build(
     ).alias("cell_id")
     if route == "gemm":
         # Arrow-batched BLAS argmax over ALL cells — exact assignment at
-        # a fraction of the coarse path's JVM scoring cost (see
-        # _gemm_assign; r10 split-probe: scoring was the entire build
-        # wall, the argmax aggregate was free)
+        # a fraction of the JVM scoring cost (see _gemm_assign; r10
+        # split-probe: scoring was the entire build wall, the argmax
+        # aggregate was free)
         assign = _gemm_assign(c, cents, "cand_id", "cv", dim, "cosine")
-    elif route == "coarse" and n_cells >= 64:
-        n_sup = max(4, math.isqrt(n_cells))
-        sups = F.broadcast(
-            materialize(
-                cents.select(
-                    F.col("cell_id").alias("sup_id"),
-                    F.col("cvec").alias("svec"),
-                    F.col("cnorm").alias("snorm"),
-                    F.md5(
-                        F.concat(F.lit("cent#"), F.col("cell_id").cast("string"))
-                    ).alias("__sk__"),
-                )
-                .orderBy("__sk__", "sup_id")
-                .limit(n_sup)
-                .drop("__sk__"),
-                checkpoint_dir,
-            )
-        )
-        # children: every centroid -> its nearest super (exact; the
-        # centroid table is dimension-sized)
-        ch_cos = dot_expr("cvec", "svec", dim) / (F.col("cnorm") * F.col("snorm"))
-        children = F.broadcast(
-            materialize(
-                cents.crossJoin(sups)
-                .select("sup_id", "cell_id", "cvec", "cnorm", ch_cos.alias("cos_s"))
-                .groupBy("cell_id")
-                .agg(
-                    F.min_by(
-                        "sup_id",
-                        F.struct((-F.col("cos_s")).alias("ns"), F.col("sup_id")),
-                    ).alias("sup_id"),
-                    F.first("cvec").alias("cvec"),
-                    F.first("cnorm").alias("cnorm"),
-                ),
-                checkpoint_dir,
-            )
-        )
-        # route: the n_route_probe nearest supers per vector — slim rows
-        q_cos = dot_expr("cv", "svec", dim) / (F.col("cn") * F.col("snorm"))
-        w_r = Window.partitionBy("cand_id").orderBy(
-            F.desc("cos_s"), F.asc("sup_id")
-        )
-        routed = (
-            c.crossJoin(sups)
-            .select("cand_id", "sup_id", q_cos.alias("cos_s"))
-            .withColumn("rn", F.row_number().over(w_r))
-            .filter(F.col("rn") <= int(n_route_probe))
-            .select("cand_id", "sup_id")
-        )
-        assign = (
-            routed.join(F.broadcast(children), "sup_id")
-            .join(c, "cand_id")
-            .select("cand_id", "cell_id", cos.alias("cos_c"))
-            .groupBy("cand_id")
-            .agg(argmax)
-        )
     else:
         assign = (
             c.crossJoin(F.broadcast(cents))

@@ -36,8 +36,12 @@ def sessionize_stream(
 ) -> DataFrame:
     """Gap-sessionization over a stream grouped by ``key_col``.
 
-    Emits CLOSED sessions only (a session closes when a later event
-    arrives past the gap, or the group times out past the watermark).
+    Emits CLOSED sessions only: a session closes when a later event
+    arrives past the gap, or when its group has seen no event for
+    ``gap_seconds`` of PROCESSING time (``ProcessingTimeTimeout``, not a
+    watermark). While a session is open the query keeps running no-data
+    batches to check that timeout, so an ``availableNow`` trigger does
+    not end by itself: the caller stops the query.
     """
 
     def fn(

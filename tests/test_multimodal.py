@@ -158,10 +158,13 @@ def test_y4m_roundtrip_and_frame_sampling(spark):
     with pytest.raises(ValueError, match="unsupported video magic"):
         decode_video(b"\x00\x00\x00 ftypisom")
 
-    rows = [(1, bytearray(encode_y4m(frames)))]
-    df = spark.createDataFrame(rows, "media_id long, content binary")
+    # one batch: a 5-frame clip gives three rows, a 2-frame clip one
+    rows = [(1, bytearray(encode_y4m(frames))), (2, bytearray(encode_y4m(frames[:2])))]
+    df = spark.createDataFrame(rows, "media_id long, content binary").coalesce(1)
     sampled = sample_video_frames(df, "media_id", every_n_frames=2).collect()
-    assert [r.frame_idx for r in sorted(sampled, key=lambda r: r.frame_idx)] == [0, 2, 4]
+    assert sorted((r.media_id, r.frame_idx) for r in sampled) == [
+        (1, 0), (1, 2), (1, 4), (2, 0),
+    ]
     assert all(r.y_mean == 10.0 * r.frame_idx for r in sampled)
 
 
@@ -248,6 +251,19 @@ def test_decode_image_meta_quarantine_mode(spark):
     # bogus chunk length and quarantines on the truncated chunk
     assert out[2].width is None and "PNG" in out[2].decode_error
     assert out[3].width is None and "truncated PPM" in out[3].decode_error
+    # the same rows in ONE Arrow batch: good and bad payloads side by side
+    mixed = {
+        r.media_id: r
+        for r in decode_image_meta(
+            df.coalesce(1), "media_id", on_error="quarantine"
+        ).collect()
+    }
+    assert mixed == out
+    assert mixed[1].mean_pixel == 7.0
+    assert all(
+        (r.width, r.height, r.channels, r.mean_pixel) == (None,) * 4
+        for r in (mixed[2], mixed[3])
+    )
     with pytest.raises(Exception):
         decode_image_meta(df, "media_id").collect()  # default raises
 
@@ -336,6 +352,17 @@ def test_scene_cuts_flags_only_scene_boundaries(spark):
         assert rows[f].sad == 0 and rows[f].is_cut is False
     assert rows[3].sad == 100 * 16
     assert rows[3].mad == 100.0 and rows[3].is_cut is True
+
+    # single-frame clips have no frame pair: zero rows, declared schema
+    single = spark.createDataFrame(
+        [(i, bytearray(encode_y4m(clip[:1]))) for i in (1, 2)],
+        "doc_id long, content binary",
+    ).coalesce(1)
+    none = scene_cuts(single, "doc_id", threshold=20.0)
+    assert none.collect() == []
+    assert none.schema.simpleString() == (
+        "struct<doc_id:bigint,frame_idx:int,sad:bigint,mad:double,is_cut:boolean>"
+    )
 
 
 def test_decimate_audio_round_trip_and_rms(spark):

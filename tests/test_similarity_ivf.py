@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -418,60 +420,22 @@ def test_binary_quantize_and_rerank_agree_with_signs(spark):
         assert {g[1] for g in got} == {2, 3, 4}
 
 
-def test_coarse_routed_build_matches_exact_search(spark):
-    """route='coarse' (r09): two-level assignment may place a vector in a
-    near-best cell, but (a) most vectors land exactly where exact
-    assignment puts them and (b) search recall over the coarse index
-    matches the exact index at a realistic probe budget."""
-    import math
-
+def test_ivf_builders_reject_unknown_routes(spark):
+    """Both IVF builders accept only route 'exact' or 'gemm': any other
+    string, a typo or the retired 'coarse' included, raises instead of
+    silently running the exact path."""
     from peskas_timor_data_pipeline_spark.llm.similarity import (
-        cosine_topk_bruteforce,
         ivf_build,
-        ivf_search,
+        ivfpq_build,
     )
 
-    dim, n, n_cells = 16, 2000, 100
-    rows = [
-        (
-            i,
-            [
-                math.sin((i % 40) * (7.0 + d) + 0.37 * d)
-                + 0.1 * math.sin(i * 13.7 + d)
-                for d in range(dim)
-            ],
-        )
-        for i in range(n)
-    ]
-    cands = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = cands.filter("vec_id < 20").select(
-        (F.col("vec_id") + 10_000).alias("vec_id"), "embedding"
+    cands = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(4)], "vec_id long, embedding array<double>"
     )
-
-    _, inv_exact = ivf_build(cands, "vec_id", "embedding", dim=dim, n_cells=n_cells)
-    cents, inv_coarse = ivf_build(
-        cands, "vec_id", "embedding", dim=dim, n_cells=n_cells, route="coarse"
-    )
-    exact_map = {r.cand_id: r.cell_id for r in inv_exact.collect()}
-    coarse_map = {r.cand_id: r.cell_id for r in inv_coarse.collect()}
-    assert set(coarse_map) == set(exact_map)  # every vector assigned once
-    agree = sum(1 for k in exact_map if exact_map[k] == coarse_map[k])
-    assert agree / n >= 0.9  # near-best assignments are the rare case
-
-    truth = {
-        (r.query_id, r.cand_id)
-        for r in cosine_topk_bruteforce(
-            queries, cands, "vec_id", "embedding", k=3, dim=dim
-        ).collect()
-    }
-    got = {
-        (r.query_id, r.cand_id)
-        for r in ivf_search(
-            queries, cents, inv_coarse, "vec_id", "embedding",
-            k=3, dim=dim, n_probe=10,
-        ).collect()
-    }
-    assert len(truth & got) / len(truth) >= 0.95
+    for build in (ivf_build, ivfpq_build):
+        for route in ("coarse", "gemmm", "EXACT"):
+            with pytest.raises(ValueError, match="unknown route"):
+                build(cands, "vec_id", "embedding", dim=2, n_cells=2, route=route)
 
 
 def test_gemm_build_matches_exact_assignment(spark):

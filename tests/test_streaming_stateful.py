@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import time
 
 
 def test_sessionize_stream_closes_on_gap(spark, tmp_path):
@@ -47,7 +48,18 @@ def test_sessionize_stream_closes_on_gap(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # ProcessingTimeTimeout keeps an availableNow query alive (it keeps
+    # running no-data batches for the open session's timeout), so wait
+    # for the data batch to commit and stop the query ourselves
+    try:
+        deadline = time.monotonic() + 120
+        while sum(p.numInputRows for p in q.recentProgress) < len(rows):
+            if q.exception() is not None:
+                raise q.exception()
+            assert time.monotonic() < deadline, "the data batch never committed"
+            time.sleep(0.2)
+    finally:
+        q.stop()
     out = spark.sql("SELECT * FROM sessions_out").collect()
     assert len(out) == 1
     s = out[0]
