@@ -6217,11 +6217,15 @@ def d20b_store_match_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     from peskas_timor_data_pipeline_spark.llm.ckpt import materialize
 
+    # the pool threads carry the caller's job tags and group
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        store_fut = pool.submit(_write_store)
-        batch_fut = pool.submit(materialize, batch_sigs)
+        store_fut = pool.submit(inherit(_write_store))
+        batch_fut = pool.submit(inherit(materialize), batch_sigs)
         store_fut.result()
         batch_sigs = batch_fut.result()
     return match_signature_store(

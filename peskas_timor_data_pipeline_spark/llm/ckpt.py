@@ -1,18 +1,25 @@
-"""Lineage materialization for iterative / multi-reference plans.
+"""Lineage cuts for iterative / multi-reference plans; every cut is stored here.
 
-``localCheckpoint`` stores blocks on executors — fast, but lost with the
-executor, which aborts a long dedup or component run instead of recomputing.
-For cluster runs callers pass ``checkpoint_dir`` (any shared filesystem
-path) and get a RELIABLE checkpoint that survives executor loss; the
-default stays local for tests and single-node runs.
+Where cuts are stored is a deployment setting: the runtime session conf
+key :data:`LOCATION_KEY`, set with ``--conf``, ``get_spark(extra_conf=...)``
+or ``spark.conf.set`` to a directory every executor can reach. With it
+set, every cut is an eager, RELIABLE ``checkpoint()`` under that path, so
+a lost executor costs a re-read, not the job. Unset, cuts are
+``localCheckpoint()``s: fast, but their blocks die with their executor,
+which aborts the job. Spark's own ``spark.checkpoint.dir`` is a static
+conf; this key can be set and unset at runtime.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Sequence
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
+
+LOCATION_KEY = "spark.peskas.checkpoint.dir"
 
 # Size gate for OPTIONAL lineage cuts (r12): an eager checkpoint is a
 # driver-blocking job whose fixed cost (scheduling, stage barriers, block
@@ -76,9 +83,7 @@ def materialized_is_big(df: DataFrame) -> bool:
     return True
 
 
-def materialize_gated(
-    df: DataFrame, checkpoint_dir: str | None = None
-) -> DataFrame:
+def materialize_gated(df: DataFrame) -> DataFrame:
     """Size-gated lineage cut: :func:`materialize` when the upstream input
     is big (or unknown), pass-through when provably small — at toy scale
     the eager checkpoint job costs more than the recompute it saves (the
@@ -87,32 +92,56 @@ def materialize_gated(
     :func:`scan_bytes` with ``EAGER_MIN_BYTES``."""
     if scan_bytes(df) < EAGER_MIN_BYTES:
         return df
-    return materialize(df, checkpoint_dir)
+    return materialize(df)
 
 
-def materialize(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
-    """Cut lineage eagerly: reliable ``checkpoint()`` under
-    ``checkpoint_dir`` when given, else ``localCheckpoint()``.
+def _location(spark: SparkSession) -> str | None:
+    """The session's checkpoint location (:data:`LOCATION_KEY`), or None."""
+    return spark.conf.get(LOCATION_KEY, None) or None
+
+
+# (location, the checkpoint dir setCheckpointDir made for it): each call
+# makes a fresh subdirectory, so the context is re-pointed only on a change
+_pointed = ("", "")
+_point_lock = threading.Lock()
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Cut lineage eagerly: a reliable ``checkpoint()`` under the session's
+    :data:`LOCATION_KEY` when it is set, else ``localCheckpoint()``.
 
     A frame whose plan is ALREADY a bare checkpoint scan (callers may
     pre-materialize an input to overlap its job with other work) passes
     through untouched — re-checkpointing it would copy every block for
     zero lineage gain."""
+    global _pointed
     if df._jdf.queryExecution().analyzed().getClass().getSimpleName() == (
         "LogicalRDD"
     ):
         return df
-    if checkpoint_dir is None:
+    path = _location(df.sparkSession)
+    if path is None:
         return df.localCheckpoint(eager=True)
     sc = df.sparkSession.sparkContext
-    if sc._jsc.sc().getCheckpointDir().isEmpty():
-        sc.setCheckpointDir(checkpoint_dir)
+    with _point_lock:  # materialize_many cuts from pool threads
+        cur = sc._jsc.sc().getCheckpointDir()
+        if cur.isEmpty() or _pointed != (path, cur.get()):
+            sc.setCheckpointDir(path)
+            _pointed = (path, sc._jsc.sc().getCheckpointDir().get())
     return df.checkpoint(eager=True)
 
 
-def materialize_many(
-    dfs: Sequence[DataFrame], checkpoint_dir: str | None = None
-) -> list[DataFrame]:
+def cut(df: DataFrame, eager: bool) -> DataFrame:
+    """Per-round lineage cut whose eagerness a size gate chose: eager is
+    :func:`materialize`; lazy is a local checkpoint that the frame's first
+    action fills, with no driver-blocking job of its own. A lazy cut
+    cannot be reliable, so with a location set every cut is eager."""
+    if eager or _location(df.sparkSession) is not None:
+        return materialize(df)
+    return df.localCheckpoint(eager=False)
+
+
+def materialize_many(dfs: Sequence[DataFrame]) -> list[DataFrame]:
     """Checkpoint several INDEPENDENT frames as CONCURRENT jobs.
 
     Eager checkpoints are driver-blocking actions; issuing them one after
@@ -121,9 +150,11 @@ def materialize_many(
     from a small thread pool lets the scheduler back-fill executors freed
     by one job's tail with the next job's tasks (optimization guide §2.6
     "overlap independent jobs") — same frames, same values, same plans;
-    only the wall-clock overlap changes. Callers must only pass frames
-    with no compute dependency on each other."""
+    only the wall-clock overlap changes; the pool threads carry the
+    caller's job tags and group. Callers must only pass frames with no
+    compute dependency on each other."""
     if len(dfs) <= 1:
-        return [materialize(df, checkpoint_dir) for df in dfs]
+        return [materialize(df) for df in dfs]
+    run = inheritable_thread_target(dfs[0].sparkSession)(materialize)
     with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
-        return list(pool.map(lambda d: materialize(d, checkpoint_dir), dfs))
+        return list(pool.map(run, dfs))

@@ -15,8 +15,10 @@ All rounds are shuffle-on-key joins — no driver-side graph, scales to
 billions of edges. (GraphFrames does the same thing; this avoids the
 dependency.) Each round materializes ONE frame (eager checkpoint) and the
 convergence flag rides inside it, so checking costs a near-free scan of
-checkpointed partitions, not a recompute. Pass ``checkpoint_dir`` on
-cluster runs so a lost executor recomputes instead of aborting the job.
+checkpointed partitions, not a recompute. Every cut goes through
+``llm.ckpt``: on cluster runs set the session's ``ckpt.LOCATION_KEY`` so
+each cut is a reliable checkpoint and a lost executor costs a re-read
+instead of the job.
 """
 
 from __future__ import annotations
@@ -28,28 +30,11 @@ from peskas_timor_data_pipeline_spark.llm import ckpt
 from peskas_timor_data_pipeline_spark.llm.ckpt import materialize
 
 
-def _cut(df: DataFrame, eager: bool, checkpoint_dir: str | None) -> DataFrame:
-    """Per-round lineage cut for the CC loops. Both paths truncate the
-    logical plan identically (the returned frame is a checkpoint scan, so
-    every downstream plan — and the at-scale plan shape — is the same);
-    only eagerness differs. ``eager`` (big inputs / cluster runs) blocks on
-    a checkpoint job now, so the round's edge-scale shuffle never re-runs.
-    Lazy (small inputs) defers computation to the round's convergence-probe
-    action: the probe computes the frame, the local checkpoint caches it in
-    the same action, and the separate driver-blocking job — whose fixed
-    cost dominates a toy-scale round (the r11 bench regression) — never
-    happens."""
-    if eager:
-        return materialize(df, checkpoint_dir)
-    return df.localCheckpoint(eager=False)
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 50,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(node, component) for every node in ``pairs``; component = min node
     id in the component. Runs until a full round changes no label; raises
@@ -59,15 +44,13 @@ def connected_components(
     edges = materialize(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct(),
-        checkpoint_dir,
+        .distinct()
     )
     # Size gate (r12, guide §5): the per-round lineage cut stays — the
     # plan-verified r11 win (hop aggregate's reduce side runs once per
     # round) — but its EAGERNESS follows the measured edge bytes, so toy
-    # inputs stop paying a driver-blocking job per round. An unreadable
-    # size (reliable checkpoints, evicted blocks) reads as big: cluster
-    # runs stay eager.
+    # inputs stop paying a driver-blocking job per round. With a
+    # checkpoint location set every cut is eager and reliable anyway.
     eager = ckpt.materialized_is_big(edges)
     labels = (
         edges.groupBy("src")
@@ -91,7 +74,7 @@ def connected_components(
         # join side. The jump itself stays lazy — a node-scale self-join
         # of checkpointed data, cheap to replay for its two round-(r+1)
         # consumers, far cheaper than re-running the edge-scale hop.
-        prop = _cut(
+        prop = ckpt.cut(
             labels.select("node", "component", F.col("component").alias("__old__"))
             .unionByName(
                 nbr.withColumn(
@@ -105,7 +88,6 @@ def connected_components(
             )
             .withColumn("__changed__", F.col("component") != F.col("__old__")),
             eager,
-            checkpoint_dir,
         )
         # Convergence is checked on the POST-HOP labels: with symmetrized
         # edges and monotone non-increasing labels, hop-fixed-point ⟺
@@ -143,14 +125,11 @@ def resolve_duplicates(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Keep one canonical doc per near-dup cluster (the min id), mark the
     rest. Docs in no pair are their own canonical. Adds ``canonical_id``
     and ``is_duplicate``."""
-    comp = connected_components(
-        pairs, checkpoint_dir=checkpoint_dir
-    ).withColumnRenamed("node", id_col)
+    comp = connected_components(pairs).withColumnRenamed("node", id_col)
     joined = docs.join(comp, id_col, "left")
     return joined.withColumn(
         "canonical_id", F.coalesce("component", F.col(id_col))
@@ -226,7 +205,6 @@ def connected_components_star(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 50,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(node, component) via ALTERNATING large-star / small-star
     contraction (Kiveris et al. 2014, "Connected Components in MapReduce
@@ -252,11 +230,12 @@ def connected_components_star(
     diameters, constant rounds); prefer this form for adversarial /
     unknown topologies — long chains, huge sparse components.
 
-    Runs that are not single-node should pass ``checkpoint_dir``. The node
-    set derives lazily from the first edges checkpoint and is read only
-    after the loop converges; without ``checkpoint_dir`` that checkpoint is
-    a local one, whose blocks an executor loss takes with it, and the
-    truncated lineage cannot recompute them for the final labeling join."""
+    Runs that are not single-node should set the session's
+    ``ckpt.LOCATION_KEY``. The node set derives lazily from the first
+    edges checkpoint and is read only after the loop converges; without a
+    location that checkpoint is a local one, whose blocks an executor loss
+    takes with it, and the truncated lineage cannot recompute them for
+    the final labeling join."""
     canon = (
         pairs.select(
             F.least(F.col(id_a), F.col(id_b)).alias("a"),
@@ -265,7 +244,7 @@ def connected_components_star(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    edges = materialize(canon, checkpoint_dir)
+    edges = materialize(canon)
     # nodes derive LAZILY from the checkpointed edges (r12): same values
     # as distinct-over-canon, but canon is computed once (inside the edges
     # checkpoint) instead of twice, and the node set's only consumer is
@@ -300,7 +279,7 @@ def connected_components_star(
         # smins, again in the re-hang join) — unmaterialized, only the
         # distinct's Exchange is reused and the post-shuffle dedup plus
         # the join ran once per reference inside the small-star job
-        large = _cut(
+        large = ckpt.cut(
             sym.join(mins, "u")
             .filter(F.col("v") > F.col("u"))
             .select(
@@ -310,7 +289,6 @@ def connected_components_star(
             .filter(F.col("a") != F.col("b"))
             .distinct(),
             eager,
-            checkpoint_dir,
         )
         # SMALL-STAR: per node u over its SMALLER neighbors N≤ = {v <= u},
         # m = min(N≤ ∪ {u}); re-hang N≤ ∪ {u} \ {m} onto m
@@ -333,7 +311,7 @@ def connected_components_star(
             .filter(F.col("a") != F.col("b"))
             .distinct()
         )
-        edges = _cut(small, eager, checkpoint_dir)
+        edges = ckpt.cut(small, eager)
         # convergence = the edge set is a DISJOINT union of min-rooted
         # stars, which (with every edge canonical a < b) holds exactly
         # when (1) no edge's smaller endpoint appears as some other

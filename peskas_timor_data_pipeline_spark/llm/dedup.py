@@ -82,7 +82,7 @@ def shingle_rows(
     """(id, sh) long frame of the character k-grams of ``lower(text)``
     (:func:`char_shingles`) — the shared upstream of MinHash signatures
     and Jaccard verification. Callers running both should
-    compute this ONCE (and localCheckpoint it) so the explode — the widest
+    compute this ONCE (and ``ckpt.materialize`` it) so the explode — the widest
     intermediate in the dedup pipeline — is a single pass over the corpus.
 
     Gram-identity caveat: this helper lowers the WHOLE text before slicing,
@@ -149,7 +149,7 @@ def minhash_signature(
     ``array_distinct`` of each text's shingles, since a min over the set
     equals the min over the multiset (the sf0.01 corpus: 500 docs, 147,174
     shingles, 102,511 distinct (doc, shingle) pairs). Signature +
-    ``localCheckpoint`` on it, ``n_hashes=16``, 4 cores, median of 10
+    a local checkpoint on it, ``n_hashes=16``, 4 cores, median of 10
     alternations in one JVM: 1014 ms with the slices, 668 ms with the
     words and ``array_distinct``."""
     n_md5 = -(-n_hashes * MINHASH_WIDTH // 32)  # ceil
@@ -277,13 +277,11 @@ def lsh_candidate_pairs(
     id_col: str,
     n_hashes: int = 6,
     band_size: int = 2,
-    checkpoint_dir: str | None = None,
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """Band the signature (rows of ``band_size`` hashes), bucket-join on
     band keys, emit distinct candidate pairs (a < b). Only bucket-mates
-    pair up — never an all-pairs product. ``checkpoint_dir`` switches the
-    lineage cut to a reliable checkpoint for cluster runs (llm/ckpt.py).
+    pair up — never an all-pairs product.
 
     ``bucket_cap`` is the hot-bucket skew policy (None keeps exact
     all-bucket-mate pairing): a bucket of n members emits n(n-1)/2 pairs,
@@ -308,7 +306,7 @@ def lsh_candidate_pairs(
     # Measured r12: gating this cut off at toy scale made d2/d18 ~0.3-0.5s
     # SLOWER (the two join sides do not share one Exchange after the
     # id_a/id_b renames), so it stays unconditional.
-    long = materialize(long, checkpoint_dir)
+    long = materialize(long)
     if bucket_cap is not None:
         stats = long.groupBy("band_key").agg(
             F.count(F.lit(1)).alias("__n__"), F.min(id_col).alias("__rep__")
@@ -427,7 +425,6 @@ def ngram_jaccard(
     text_col: str,
     k_shingle: int = 5,
     shingles: DataFrame | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """True Jaccard similarity over distinct char k-gram sets for the given
     candidate pairs: |A ∩ B| / |A ∪ B|. Joins shingle sets only for
@@ -439,7 +436,7 @@ def ngram_jaccard(
     ``pairs`` and the shingle sets are each referenced several times in the
     join tree; persist them so the (expensive) upstream lineage — MinHash,
     LSH banding, the explode — is computed once, not per reference."""
-    pairs = materialize(pairs, checkpoint_dir)
+    pairs = materialize(pairs)
     if shingles is None:
         pair_ids = (
             pairs.select(F.col("id_a").alias(id_col))
@@ -449,7 +446,7 @@ def ngram_jaccard(
         shingles = shingle_rows(
             docs.join(pair_ids, id_col, "left_semi"), id_col, text_col, k_shingle
         )
-    sets = materialize(shingles.distinct(), checkpoint_dir)
+    sets = materialize(shingles.distinct())
     sizes = sets.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
     a_sets = sets.select(F.col(id_col).alias("id_a"), F.col("sh"))
     b_sets = sets.select(F.col(id_col).alias("id_b"), F.col("sh"))
@@ -881,7 +878,6 @@ def lsh_eval(
     n_hashes: int = 16,
     band_size: int = 8,
     k_shingle: int = 5,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Index-tuning gauge for MinHash-LSH (the dedup-side twin of the ANN
     ``topk_recall`` pass): candidate pairs at the given band configuration
@@ -902,10 +898,7 @@ def lsh_eval(
     The shingle explode happens ONCE and feeds signatures, truth, and
     set sizes (materialized against triple recompute).
     """
-    shingles = materialize(
-        shingle_rows(docs, id_col, text_col, k_shingle).distinct(),
-        checkpoint_dir,
-    )
+    shingles = materialize(shingle_rows(docs, id_col, text_col, k_shingle).distinct())
     sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
     a = shingles.select(F.col(id_col).alias("id_a"), "sh")
     b = shingles.select(F.col(id_col).alias("id_b"), "sh")
@@ -933,9 +926,7 @@ def lsh_eval(
     sigs = minhash_signature(
         docs, id_col, text_col, n_hashes, k_shingle, shingles=shingles
     )
-    cand = lsh_candidate_pairs(
-        sigs, id_col, n_hashes, band_size, checkpoint_dir=checkpoint_dir
-    )
+    cand = lsh_candidate_pairs(sigs, id_col, n_hashes, band_size)
     t = truth.withColumn("__t__", F.lit(1))
     c = cand.withColumn("__c__", F.lit(1))
     j = t.join(c, ["id_a", "id_b"], "full_outer")
@@ -1031,7 +1022,6 @@ def containment_pairs(
     k_shingle: int = 32,
     min_shared: int = 3,
     max_df: int = 50,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Asymmetric CONTAINMENT near-dup pairs — |grams(A) ∩ grams(B)| /
     |grams(A)| — the measure that catches a short document pasted inside a
@@ -1061,7 +1051,6 @@ def containment_pairs(
         shingle_rows(df, id_col, text_col, k_shingle)
         .select(F.col(id_col), _gram_key("sh").alias("gh"))
         .distinct(),
-        checkpoint_dir,
     )
     sizes = grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n__"))
     # Size-gated lineage cut (r12): both self-join sides reference the
@@ -1081,7 +1070,7 @@ def containment_pairs(
         "gh",
     )
     if ckpt.materialized_is_big(grams):
-        gram_df = materialize(gram_df, checkpoint_dir)
+        gram_df = materialize(gram_df)
     a = gram_df.select(F.col(id_col).alias("id_a"), "gh")
     b = gram_df.select(F.col(id_col).alias("id_b"), "gh")
     pairs = (

@@ -1023,7 +1023,6 @@ def mmr_topk(
     pool: int = 10,
     lam: float = 0.7,
     dim: int = 64,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Maximal-marginal-relevance re-ranking (Carbonell & Goldstein 1998):
     from each query's relevance top-``pool``, greedily select ``k`` items
@@ -1060,7 +1059,7 @@ def mmr_topk(
     # without a lineage cut the corpus-scale RETRIEVAL re-executes once per
     # reference. Materialize the pool (k·|queries| rows — tiny) so the
     # expensive stage runs exactly once.
-    pool_df = materialize(rel.join(cv, "cand_id"), checkpoint_dir)
+    pool_df = materialize(rel.join(cv, "cand_id"))
     # pairwise similarity among pool mates of the same query (pool^2 rows
     # per query, pool is a small constant)
     a = pool_df.select(
@@ -1083,7 +1082,6 @@ def mmr_topk(
             "query_id", "id_a", "id_b",
             (dot_expr("va", "vb", dim) / (F.col("na") * F.col("nb"))).alias("sim"),
         ),
-        checkpoint_dir,
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("__mmr__"), F.asc("cand_id"))
     # pick 1: pure relevance
@@ -1337,7 +1335,6 @@ def top_eigenvector(
     dim: int = 8,
     n_iter: int = 3,
     round_to: int = 6,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Top principal direction of the first ``dim`` embedding dimensions
     by power iteration — the PCA-lite step before whitening or
@@ -1356,9 +1353,8 @@ def top_eigenvector(
     Returns (i, component, eigenvalue) — eigenvalue is the pivot magnitude
     of the LAST un-normalized iterate (the dominant-eigenvalue estimate).
     """
-    cov = _cov_matrix(df, vec_col, dim, round_to, checkpoint_dir)
-    v = _power_iterate(df.sparkSession, cov, dim, n_iter, round_to,
-                       checkpoint_dir)
+    cov = _cov_matrix(df, vec_col, dim, round_to)
+    v = _power_iterate(df.sparkSession, cov, dim, n_iter, round_to)
     return v.select(
         F.col("j").alias("i"),
         F.col("v").alias("component"),
@@ -1370,7 +1366,6 @@ def _moments(
     df: DataFrame,
     vec_col: str,
     dim: int,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The ONE corpus-scale pass of the PCA family: a single materialized
     1-row frame holding n, the dim sums and the dim*(dim+1)/2 cross sums
@@ -1387,14 +1382,13 @@ def _moments(
     for i in range(1, dim + 1):
         for j in range(i, dim + 1):
             aggs.append(F.expr(f"sum({el(i)} * {el(j)}) AS p{i}_{j}"))
-    return materialize(df.agg(*aggs), checkpoint_dir)
+    return materialize(df.agg(*aggs))
 
 
 def _cov_from_moments(
     moments: DataFrame,
     dim: int,
     round_to: int,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(i, j, c) covariance frame off the materialized moments row, with
     entries rounded BEFORE any iteration (see top_eigenvector)."""
@@ -1414,7 +1408,6 @@ def _cov_from_moments(
         moments.selectExpr(
             f"stack({dim * dim}, {', '.join(entries)}) AS (i, j, c)"
         ),
-        checkpoint_dir,
     )
 
 
@@ -1423,14 +1416,10 @@ def _cov_matrix(
     vec_col: str,
     dim: int,
     round_to: int,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """One corpus-scale moments pass -> materialized (i, j, c) covariance
     frame (top_eigenvector / pca_top2 / pca_scores shared core)."""
-    return _cov_from_moments(
-        _moments(df, vec_col, dim, checkpoint_dir), dim, round_to,
-        checkpoint_dir,
-    )
+    return _cov_from_moments(_moments(df, vec_col, dim), dim, round_to)
 
 
 def _power_iterate(
@@ -1439,7 +1428,6 @@ def _power_iterate(
     dim: int,
     n_iter: int,
     round_to: int,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Pinned-round power iteration on a materialized (i, j, c) matrix
     frame from the all-ones start vector: per round one broadcast join +
@@ -1472,7 +1460,6 @@ def _power_iterate(
                 F.round(F.col("cv") / F.col("pivot"), round_to).alias("v"),
                 F.abs(F.col("pivot")).alias("__eig__"),
             ),
-            checkpoint_dir,
         )
     return v
 
@@ -1483,7 +1470,6 @@ def pca_top2(
     dim: int = 8,
     n_iter: int = 3,
     round_to: int = 6,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Top TWO principal directions by power iteration + Hotelling
     deflation (E27) — the rank-2 PCA sketch behind embedding-store
@@ -1504,9 +1490,8 @@ def pca_top2(
     Returns 2*dim rows: (comp 1|2, i, loading, eigenvalue).
     """
     spark = df.sparkSession
-    cov = _cov_matrix(df, vec_col, dim, round_to, checkpoint_dir)
-    v1, v2 = _pca_two_vectors(spark, cov, dim, n_iter, round_to,
-                              checkpoint_dir)
+    cov = _cov_matrix(df, vec_col, dim, round_to)
+    v1, v2 = _pca_two_vectors(spark, cov, dim, n_iter, round_to)
     one = v1.select(
         F.lit(1).cast("int").alias("comp"),
         F.col("j").alias("i"),
@@ -1528,14 +1513,13 @@ def _pca_two_vectors(
     dim: int,
     n_iter: int,
     round_to: int,
-    checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared pca_top2/pca_scores core: pinned power chain on ``cov``,
     Hotelling deflation (rounded entry-wise), second pinned chain.
     Returns the two (j, v, __eig__) iterate frames."""
     from peskas_timor_data_pipeline_spark.llm.ckpt import materialize
 
-    v1 = _power_iterate(spark, cov, dim, n_iter, round_to, checkpoint_dir)
+    v1 = _power_iterate(spark, cov, dim, n_iter, round_to)
     vv = v1.agg(
         F.round(F.sum(F.col("v") * F.col("v")), round_to).alias("vv"),
         F.max("__eig__").alias("eig1"),
@@ -1558,9 +1542,8 @@ def _pca_two_vectors(
                 round_to,
             ).alias("c"),
         ),
-        checkpoint_dir,
     )
-    v2 = _power_iterate(spark, cov2, dim, n_iter, round_to, checkpoint_dir)
+    v2 = _power_iterate(spark, cov2, dim, n_iter, round_to)
     return v1, v2
 
 
@@ -1571,7 +1554,6 @@ def pca_scores(
     dim: int = 8,
     n_iter: int = 3,
     round_to: int = 6,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Project every embedding onto the top-2 principal directions (E28)
     — the per-document companion of ``pca_top2``: mean-centered scores
@@ -1590,10 +1572,9 @@ def pca_scores(
     Returns (id, score1, score2) rounded ``round_to``dp.
     """
     spark = df.sparkSession
-    mom = _moments(df, vec_col, dim, checkpoint_dir)
-    cov = _cov_from_moments(mom, dim, round_to, checkpoint_dir)
-    v1, v2 = _pca_two_vectors(spark, cov, dim, n_iter, round_to,
-                              checkpoint_dir)
+    mom = _moments(df, vec_col, dim)
+    cov = _cov_from_moments(mom, dim, round_to)
+    v1, v2 = _pca_two_vectors(spark, cov, dim, n_iter, round_to)
     means = mom.selectExpr(
         *[f"round(s{i} / n, {round_to}) AS m{i}" for i in range(1, dim + 1)]
     )
@@ -2112,7 +2093,6 @@ def ivfpq_build(
     m_sub: int = 8,
     k_cb: int = 16,
     n_cells: int = 16,
-    checkpoint_dir: str | None = None,
     route: str = "exact",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Build the IVF-PQ index once (FAISS train+add): seeded coarse
@@ -2145,7 +2125,6 @@ def ivfpq_build(
             ivf_centroids(candidates, id_col, vec_col, n_cells, dim).select(
                 "cell_id", "cvec"
             ),
-            checkpoint_dir,
         )
     )
     # --- assignment: nearest cell by L2, min_by aggregate (no window) ---
@@ -2169,25 +2148,18 @@ def ivfpq_build(
         # on the ASSIGNED centroid — so rcb matches the exact route's
         # only modulo float-tie assignment flips (GEMM reassociation can
         # flip exact-tie cells; same caveat as the assignment itself).
-        assign_m = materialize(
-            _gemm_assign(c, cents, "cand_id", "__v__", dim, "l2"),
-            checkpoint_dir,
-        )
+        assign_m = materialize(_gemm_assign(c, cents, "cand_id", "__v__", dim, "l2"))
         assigned_lazy = (
             assign_m.join(c, "cand_id")
             .join(cents.withColumnRenamed("cvec", "__cv__"), "cell_id")
         )
         rcb = F.broadcast(
-            materialize(
-                residual_codebook(assigned_lazy, "cand_id", k=k_cb, dim=dim),
-                checkpoint_dir,
-            )
+            materialize(residual_codebook(assigned_lazy, "cand_id", k=k_cb, dim=dim))
         )
         encoded = materialize(
             _gemm_pq_encode(
                 assign_m.join(c, "cand_id"), cents, rcb, dim, m_sub
             ),
-            checkpoint_dir,
         )
         return cents, rcb, encoded
     assign_codes = (
@@ -2200,16 +2172,10 @@ def ivfpq_build(
         assign_codes.join(c, "cand_id")
         .join(cents.withColumnRenamed("cvec", "__cv__"), "cell_id")
     )
-    assigned = materialize(
-        assigned.withColumn("__rd__", diff_arr("__v__", "__cv__")),
-        checkpoint_dir,
-    )
+    assigned = materialize(assigned.withColumn("__rd__", diff_arr("__v__", "__cv__")))
     # --- residual codebook (k_cb-row broadcast) ---
     rcb = F.broadcast(
-        materialize(
-            residual_codebook(assigned, "cand_id", k=k_cb, dim=dim),
-            checkpoint_dir,
-        )
+        materialize(residual_codebook(assigned, "cand_id", k=k_cb, dim=dim))
     )
     # --- encode: all m_sub residual-subvector argmins in one aggregation ---
     # same slimming as assignment: the x k_cb codebook expansion carries
@@ -2254,7 +2220,6 @@ def ivfpq_build(
             "cand_id", "cell_id", "__v__",
             *[f"__c{m}__" for m in range(m_sub)],
         ),
-        checkpoint_dir,
     )
     return cents, rcb, encoded
 
@@ -2589,7 +2554,6 @@ def ivf_build(
     vec_col: str,
     dim: int = 64,
     n_cells: int = 16,
-    checkpoint_dir: str | None = None,
     route: str = "exact",
 ) -> tuple[DataFrame, DataFrame]:
     """Build the IVF index once (FAISS train+add): seeded centroids and
@@ -2617,10 +2581,7 @@ def ivf_build(
     if route not in ("exact", "gemm"):
         raise ValueError(f"unknown route: {route!r}")
 
-    cents = materialize(
-        ivf_centroids(candidates, id_col, vec_col, n_cells, dim),
-        checkpoint_dir,
-    )
+    cents = materialize(ivf_centroids(candidates, id_col, vec_col, n_cells, dim))
     c = candidates.select(
         F.col(id_col).alias("cand_id"),
         F.col(vec_col).alias("cv"),
@@ -2650,7 +2611,6 @@ def ivf_build(
         )
     inverted = materialize(
         assign.join(c, "cand_id").select("cell_id", "cand_id", "cv", "cn"),
-        checkpoint_dir,
     )
     return cents, inverted
 

@@ -650,7 +650,6 @@ def bpe_train_merges(
     df: DataFrame,
     token_col: str,
     n_merges: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Byte-pair-encoding merge training on the corpus (Sennrich et al.
     2016): start from character symbols, repeat ``n_merges`` times: count
@@ -686,7 +685,7 @@ def bpe_train_merges(
     )
     merge_rows = []
     for step in range(1, n_merges + 1):
-        cur = materialize(cur, checkpoint_dir)
+        cur = materialize(cur)
         arr = F.split(F.col("__sym__"), " ")
         pairs = (
             cur.filter(F.size(arr) >= 2)
@@ -705,10 +704,7 @@ def bpe_train_merges(
             )
         )
         counts = pairs.groupBy("pair").agg(F.sum("__w__").alias("pair_count"))
-        top = materialize(
-            counts.orderBy(F.desc("pair_count"), F.asc("pair")).limit(1),
-            checkpoint_dir,
-        )
+        top = materialize(counts.orderBy(F.desc("pair_count"), F.asc("pair")).limit(1))
         merge_rows.append(
             top.select(
                 F.lit(step).alias("step"),
@@ -810,7 +806,6 @@ def bpe_encode(
     merges: DataFrame,
     n_merges: int,
     out_col: str = "bpe_sym",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Apply a trained BPE merge table (``bpe_train_merges`` output) to
     tokens, in rank order — the tokenizer's SERVING path. Each step fuses
@@ -821,15 +816,15 @@ def bpe_encode(
     Scale shape: call this on the DISTINCT token vocabulary and join back
     to the corpus (vocabulary-collapse — encode |V| strings, not |corpus|
     tokens). The merge table is the shipped KB-scale artifact: it is
-    materialized once here (reliable checkpoint under ``checkpoint_dir``)
-    and each step's single-row pair broadcasts; nothing about the corpus
-    is shuffled by the encode itself.
+    materialized once here (a reliable checkpoint when the session sets
+    a location, see ``llm/ckpt.py``) and each step's single-row pair
+    broadcasts; nothing about the corpus is shuffled by the encode itself.
 
     Adds ``out_col`` (space-delimited symbol string) and ``n_pieces``.
     """
     from peskas_timor_data_pipeline_spark.llm.ckpt import materialize
 
-    merges = materialize(merges, checkpoint_dir)
+    merges = materialize(merges)
     cur = df.withColumn(
         out_col, F.trim(F.regexp_replace(F.col(token_col), "(.)", "$1 "))
     )

@@ -52,18 +52,23 @@ def test_connected_components_raises_instead_of_splitting(spark):
 
 
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir= switches lineage cuts to reliable checkpoint files
-    on shared storage (survive executor loss); same labels either way."""
-    ckpt = str(tmp_path / "ckpt")
+    """With the session's checkpoint location set, lineage cuts are
+    reliable checkpoint files on shared storage (survive executor loss);
+    same labels either way."""
+    from peskas_timor_data_pipeline_spark.llm import ckpt
+
+    loc = tmp_path / "ckpt"
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
     )
-    comp = {
-        r.node: r.component
-        for r in connected_components(pairs, checkpoint_dir=ckpt).collect()
-    }
+    spark.conf.set(ckpt.LOCATION_KEY, str(loc))
+    try:
+        comp = {r.node: r.component
+                for r in connected_components(pairs).collect()}
+    finally:
+        spark.conf.unset(ckpt.LOCATION_KEY)
     assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-    assert any((tmp_path / "ckpt").rglob("*"))  # checkpoint files landed
+    assert any(loc.rglob("*"))  # checkpoint files landed
 
 
 def test_resolve_duplicates(spark):

@@ -1,10 +1,14 @@
 """``obs``: engine accounting from the in-process status store, on the
-fixture session (``spark.ui.enabled=false``)."""
+fixture session (``spark.ui.enabled=false``) and, for the store's stage
+eviction, on a fresh session in a subprocess."""
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
+import subprocess
+import sys
 
 import pytest
 from py4j.protocol import Py4JJavaError
@@ -79,3 +83,53 @@ def test_failed_store_read_propagates(spark):
         obs.window(spark, (jobs, -1))
     with pytest.raises(Py4JJavaError, match="NoSuchElementException"):
         obs.window(spark, (-1, stages))
+
+
+_EVICTION_SCRIPT = '''
+import json
+from operator import add
+from peskas_timor_data_pipeline_spark import obs
+from peskas_timor_data_pipeline_spark.session import get_spark
+
+spark = get_spark(app_name="obs-eviction",
+                  extra_conf={"spark.ui.retainedStages": "20",
+                              "spark.ui.showConsoleProgress": "false"})
+spark.sparkContext.setLogLevel("OFF")
+windows = []
+for i in range(10):
+    start = obs.cursor(spark)
+    rdd = spark.sparkContext.parallelize(range(200), 2).map(
+        lambda x: (x % 5, 1)).reduceByKey(add, 2)
+    rdd.count()
+    rdd.count()  # reuses the shuffle output: its map stage is SKIPPED
+    # a later job in the same window writes stages, and with them the
+    # store's eviction pass runs while the window is still open
+    spark.sparkContext.parallelize(range(20), 2).map(
+        lambda x: (x % 3, x)).reduceByKey(add, 2).count()
+    windows.append(obs.window(spark, start))
+print(json.dumps(windows))
+spark.stop()
+'''
+
+
+def test_window_survives_evicted_skipped_stages(tmp_path):
+    """Past ``spark.ui.retainedStages`` the status store evicts SKIPPED
+    stages first, those of a live window included. A fresh session that
+    retains 20 stages runs ten windows of three jobs each, the second
+    reusing the first's shuffle: every window still reads three jobs and
+    five run stages. The retention is a static conf, hence the
+    subprocess."""
+    script = tmp_path / "eviction.py"
+    script.write_text(_EVICTION_SCRIPT)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g",
+               PYTHONPATH=os.pathsep.join(
+                   [repo, os.environ.get("PYTHONPATH", "")]))
+    proc = subprocess.run([sys.executable, str(script)], cwd=tmp_path,
+                          env=env, capture_output=True, text=True,
+                          timeout=240)
+    assert proc.returncode == 0, (proc.stderr or proc.stdout)[-3000:]
+    windows = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert len(windows) == 10
+    for w in windows:
+        assert (w["jobs"], w["stages"], w["tasks"]) == (3, 5, 10), w

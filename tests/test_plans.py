@@ -387,7 +387,7 @@ def test_semdedup_broadcast_assignment(spark, sf_dir, monkeypatch):
 
     # (a) full lineage view: assignment is the sanctioned broadcast NLJ,
     # within-cell compare a hash join, nothing cartesian
-    monkeypatch.setattr(ckpt, "materialize", lambda df, checkpoint_dir=None: df)
+    monkeypatch.setattr(ckpt, "materialize", lambda df: df)
     p = plan_str(e11_semdedup(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in p  # x16 centroid broadcast
     assert "CartesianProduct" not in p

@@ -8,7 +8,7 @@ evaluators are all visible here. Regenerate after plan-affecting changes:
 
 The output is reproducible: each plan's expression ids are renumbered
 from 0 in order of first appearance, and the session-global noise is
-stripped (exchange ``plan_id``s, RDD ids, the ``localCheckpoint`` call
+stripped (exchange ``plan_id``s, RDD ids, the checkpoint call
 site, paths under the temp dir). Two dumps of one commit are therefore
 byte-identical, and a change to one query does not shift the ids of
 the plans after it. One exception remains for a diff across commits:
@@ -133,7 +133,7 @@ SHOWCASE = {
 # string literal such as md5's ``'#0'`` salt prints after ", " or "("
 _EXPR_ID = re.compile(r"(?<![\s(,\[])#(\d+)")
 _RDD_ID = re.compile(r"(\w+RDD)\[\d+\]")
-_CALL_SITE = re.compile(r"( at localCheckpoint) at \S+:\d+")
+_CALL_SITE = re.compile(r"( at \w*[cC]heckpoint) at \S+:\d+")
 _PLAN_ID = re.compile(r",? ?\[plan_id=\d+\]")
 _TMP_PATH = re.compile(re.escape(tempfile.gettempdir()) + r"/[^\s,\]]*")
 
