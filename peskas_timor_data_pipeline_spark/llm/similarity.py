@@ -15,6 +15,11 @@ bit-identical across engines for the oracle.
 
 from __future__ import annotations
 
+import functools
+import math
+import operator
+from decimal import MAX_PREC, ROUND_HALF_UP, Context, Decimal
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1340,25 +1345,27 @@ def top_eigenvector(
     by power iteration — the PCA-lite step before whitening or
     low-rank compression of an embedding store.
 
-    Scale shape: the ONLY corpus-scale work is a single partial-aggregated
-    pass computing all raw moments (dim sums + dim*(dim+1)/2 cross sums in
-    one agg row); the covariance matrix, the all-ones start vector, and
-    every iteration live on KB frames joined broadcast-style — no driver
-    loop touches data. Determinism: covariance entries round to
-    ``round_to`` BEFORE iterating, each iterate renormalizes by its
-    largest-|.|-component (abs desc, index asc tie-break — the signed
-    pivot fixes the sign convention) and rounds, so both engines iterate
+    Scale shape: the ONLY distributed work is one partial-aggregated pass
+    computing all raw moments (dim sums + dim*(dim+1)/2 cross sums in one
+    agg row), collected to the driver — MLlib's
+    ``RowMatrix.computePrincipalComponents`` shape. The dim x dim
+    covariance and every iteration are a few hundred float operations,
+    replayed in plain Python (``_pca_replay``) and returned as a dim-row
+    ``LocalTableScan``: no lineage cut, join, window or broadcast.
+    Determinism: covariance entries round to ``round_to`` BEFORE
+    iterating, each iterate renormalizes by its largest-|.|-component (abs
+    desc, index asc tie-break — the signed pivot fixes the sign
+    convention) and rounds, so the driver and the SQL oracle iterate
     identical rationals.
 
     Returns (i, component, eigenvalue) — eigenvalue is the pivot magnitude
     of the LAST un-normalized iterate (the dominant-eigenvalue estimate).
     """
-    cov = _cov_matrix(df, vec_col, dim, round_to)
-    v = _power_iterate(df.sparkSession, cov, dim, n_iter, round_to)
-    return v.select(
-        F.col("j").alias("i"),
-        F.col("v").alias("component"),
-        F.col("__eig__").alias("eigenvalue"),
+    _, [(v, eig)] = _pca_replay(df, vec_col, dim, n_iter, round_to, 1)
+    return _local_frame(
+        df.sparkSession,
+        "i bigint, component double, eigenvalue double",
+        [(i, c, eig) for i, c in enumerate(v, 1)],
     )
 
 
@@ -1366,13 +1373,9 @@ def _moments(
     df: DataFrame,
     vec_col: str,
     dim: int,
-) -> DataFrame:
-    """The ONE corpus-scale pass of the PCA family: a single materialized
-    1-row frame holding n, the dim sums and the dim*(dim+1)/2 cross sums
-    — covariance, means and every iteration derive from it without ever
-    rescanning the corpus."""
-    from peskas_timor_data_pipeline_spark.llm.ckpt import materialize
-
+) -> dict:
+    """The ONE corpus-scale pass of the PCA family, collected: n, the dim
+    sums s{i} and the dim*(dim+1)/2 cross sums p{i}_{j} of one agg row."""
     # expr-string aggregates (r11): identical parsed trees, one py4j
     # round-trip per aggregate instead of ~6
     el = lambda i: f"CAST(element_at(`{vec_col}`, {i}) AS DOUBLE)"  # noqa: E731
@@ -1382,86 +1385,129 @@ def _moments(
     for i in range(1, dim + 1):
         for j in range(i, dim + 1):
             aggs.append(F.expr(f"sum({el(i)} * {el(j)}) AS p{i}_{j}"))
-    return materialize(df.agg(*aggs))
+    return df.agg(*aggs).collect()[0].asDict()
 
 
-def _cov_from_moments(
-    moments: DataFrame,
-    dim: int,
-    round_to: int,
-) -> DataFrame:
-    """(i, j, c) covariance frame off the materialized moments row, with
-    entries rounded BEFORE any iteration (see top_eigenvector)."""
-    from peskas_timor_data_pipeline_spark.llm.ckpt import materialize
+def _local_frame(spark, ddl: str, rows: list) -> DataFrame:
+    """A driver-side result as a ``LocalTableScan``: built from an Arrow
+    table, its rows are read in the JVM. A list of tuples would start a
+    Python worker on every read (~0.3 s for 8 rows on 4 cores)."""
+    import pyarrow as pa
+    from pyspark.sql.types import DataType
 
-    entries = []
-    for i in range(1, dim + 1):
-        for j in range(1, dim + 1):
-            lo, hi = min(i, j), max(i, j)
-            entries.append(
-                f"{i}L, {j}L, round((p{lo}_{hi} - s{i} * s{j} / n) / n, {round_to})"
-            )
-    # every iteration references cov several times; without a lineage cut
-    # the optimized plan carried 28 copies of the moments aggregate —
-    # materialize the dim*dim matrix once, so the corpus is scanned ONCE
-    return materialize(
-        moments.selectExpr(
-            f"stack({dim * dim}, {', '.join(entries)}) AS (i, j, c)"
-        ),
+    schema = DataType.fromDDL(ddl)
+    return spark.createDataFrame(
+        pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows]), schema
     )
 
 
-def _cov_matrix(
+def _spark_round(jvm, x: float | None, r: int) -> float | None:
+    """Spark's ``round(double, r)`` on the driver: HALF_UP on the JVM's
+    ``Double.toString(x)`` (Spark rounds ``BigDecimal.valueOf(x)``, and
+    JDK 17 does not always print the shortest string), NULL, NaN and
+    ±inf unchanged. ``+ 0.0`` drops the negative zero BigDecimal lacks;
+    the context's precision must hold the ~330 digits of a large double."""
+    if x is None or not math.isfinite(x):
+        return x
+    d = Decimal(jvm.java.lang.Double.toString(x))
+    q = d.quantize(Decimal(1).scaleb(-r), ROUND_HALF_UP, Context(prec=MAX_PREC))
+    return float(q) + 0.0
+
+
+def _sql_op(f, *args):
+    """``f(*args)`` with SQL NULL propagation: None if any operand is."""
+    return None if any(a is None for a in args) else f(*args)
+
+
+def _sql_sum(terms) -> float | None:
+    """SQL ``sum`` over doubles in order: from 0.0, NULL terms skipped,
+    NULL when every term is."""
+    total = None
+    for t in terms:
+        if t is not None:
+            total = (0.0 if total is None else total) + t
+    return total
+
+
+def _power_chain(cov: list, n_iter: int, rnd) -> tuple[list, float | None]:
+    """Pinned power iteration on a dim x dim matrix from the all-ones
+    start: (C v)_i is a SQL sum over j ascending, rounded; the pivot is
+    the first entry by |.| descending (NaN above every number, as Spark
+    orders it), index ascending, NULLs last; each entry is divided by it
+    and rounded. Returns (v, eig) with eig the final pivot magnitude. A
+    zero pivot raises, where the SQL division raised DIVIDE_BY_ZERO."""
+    v, eig = [1.0] * len(cov), None
+    for _ in range(n_iter):
+        cv = [
+            rnd(_sql_sum(_sql_op(operator.mul, c, x) for c, x in zip(row, v)))
+            for row in cov
+        ]
+        # min keeps the first of equal keys: the index-ascending tie-break
+        pivot = min(
+            (c for c in cv if c is not None),
+            key=lambda c: (not math.isnan(c), -abs(c)),
+            default=None,
+        )
+        if pivot == 0:
+            raise ZeroDivisionError(
+                "power iteration hit a zero pivot: every entry of C v is 0 "
+                "(constant vectors, a single row, or a rank-1 input deflated)"
+            )
+        v = [None if c is None else rnd(c / pivot) for c in cv]
+        eig = None if pivot is None else abs(pivot)
+    return v, eig
+
+
+def _pca_replay(
     df: DataFrame,
     vec_col: str,
     dim: int,
-    round_to: int,
-) -> DataFrame:
-    """One corpus-scale moments pass -> materialized (i, j, c) covariance
-    frame (top_eigenvector / pca_top2 / pca_scores shared core)."""
-    return _cov_from_moments(_moments(df, vec_col, dim), dim, round_to)
-
-
-def _power_iterate(
-    spark,
-    cov: DataFrame,
-    dim: int,
     n_iter: int,
     round_to: int,
-) -> DataFrame:
-    """Pinned-round power iteration on a materialized (i, j, c) matrix
-    frame from the all-ones start vector: per round one broadcast join +
-    KB groupBy, signed-pivot normalization (abs desc, index asc), round
-    to ``round_to`` — both engines iterate identical rationals. Returns
-    (j, v, __eig__) with __eig__ the final pivot magnitude."""
-    from pyspark.sql.window import Window
+    n_comp: int,
+) -> tuple[list, list]:
+    """The PCA family's driver-side solve off the collected moments row:
+    the rounded covariance (p - s_i * s_j / n) / n, the first pinned power
+    chain and, for ``n_comp`` 2, the Hotelling deflation
+    round(c - eig1 * v_i * v_j / vv) with vv = round(sum v_j * v_j) and a
+    second chain. Every expression keeps the SQL oracle's operand order
+    and NULL semantics, so an empty frame gives NULL components. vv sums
+    j ascending; the Spark chain this replaced summed in partition order,
+    which can differ only when the exact sum sits within an ulp of a
+    rounding tie. Returns (rounded means, [(v, eig) per component])."""
+    jvm = df.sparkSession.sparkContext._jvm
+    mom = _moments(df, vec_col, dim)
+    n = mom["n"]
+    s = [mom[f"s{i}"] for i in range(1, dim + 1)]
 
-    from peskas_timor_data_pipeline_spark.llm.ckpt import materialize
+    def rnd(x):
+        return _spark_round(jvm, x, round_to)
 
-    v = spark.range(1, dim + 1).select(
-        F.col("id").alias("j"), F.lit(1.0).alias("v")
-    )
-    w = Window.orderBy(F.desc(F.abs(F.col("cv"))), F.asc("i"))
-    for _ in range(n_iter):
-        cv = (
-            cov.join(F.broadcast(v), cov.j == v.j)
-            .groupBy("i")
-            .agg(F.round(F.sum(F.col("c") * F.col("v")), round_to).alias("cv"))
-        )
-        pivot = (
-            cv.withColumn("__rn__", F.row_number().over(w))
-            .filter(F.col("__rn__") == 1)
-            .select(F.col("cv").alias("pivot"))
-        )
-        normed = cv.crossJoin(F.broadcast(pivot))
-        v = materialize(
-            normed.select(
-                F.col("i").alias("j"),
-                F.round(F.col("cv") / F.col("pivot"), round_to).alias("v"),
-                F.abs(F.col("pivot")).alias("__eig__"),
-            ),
-        )
-    return v
+    cov = [
+        [
+            rnd(_sql_op(
+                lambda p, a, b: (p - a * b / n) / n,
+                mom[f"p{min(i, j)}_{max(i, j)}"], s[i - 1], s[j - 1],
+            ))
+            for j in range(1, dim + 1)
+        ]
+        for i in range(1, dim + 1)
+    ]
+    comps = [_power_chain(cov, n_iter, rnd)]
+    if n_comp == 2:
+        v, eig = comps[0]
+        vv = rnd(_sql_sum(_sql_op(operator.mul, x, x) for x in v))
+        cov2 = [
+            [
+                rnd(_sql_op(lambda c, e, a, b, w: c - e * a * b / w,
+                            c, eig, v[i], v[j], vv))
+                for j, c in enumerate(row)
+            ]
+            for i, row in enumerate(cov)
+        ]
+        comps.append(_power_chain(cov2, n_iter, rnd))
+    means = [rnd(_sql_op(lambda a: a / n, x)) for x in s]
+    return means, comps
 
 
 def pca_top2(
@@ -1478,73 +1524,28 @@ def pca_top2(
     contract as ``top_eigenvector``: covariance entries round before
     iterating, every iterate pivot-normalizes and rounds, and the
     deflated matrix C2 = round(C - eig1 * v1 v1^T / (v1^T v1)) rounds
-    entry-wise, so both engines replay identical rationals end to end
-    (covariance is PSD, so the pivot magnitude IS the signed dominant
-    eigenvalue estimate and deflation needs no sign fix).
+    entry-wise, so the driver and the SQL oracle replay identical
+    rationals end to end (covariance is PSD, so the pivot magnitude IS the
+    signed dominant eigenvalue estimate and deflation needs no sign fix).
 
-    Scale shape: ONE corpus-scale moments pass (shared with
-    ``top_eigenvector`` via ``_cov_matrix``); both iteration chains and
-    the deflation run on KB-sized matrix/vector frames — the corpus is
-    never rescanned for the second component.
+    Scale shape: ONE corpus-scale moments pass, collected as one row (as
+    for ``top_eigenvector``); the deflation and both iteration chains run
+    on the driver over dim x dim lists (``_pca_replay``) — the corpus is
+    never rescanned for the second component, and no job runs after the
+    moments pass until the 2*dim-row ``LocalTableScan`` is read.
 
     Returns 2*dim rows: (comp 1|2, i, loading, eigenvalue).
     """
-    spark = df.sparkSession
-    cov = _cov_matrix(df, vec_col, dim, round_to)
-    v1, v2 = _pca_two_vectors(spark, cov, dim, n_iter, round_to)
-    one = v1.select(
-        F.lit(1).cast("int").alias("comp"),
-        F.col("j").alias("i"),
-        F.col("v").alias("loading"),
-        F.col("__eig__").alias("eigenvalue"),
+    _, comps = _pca_replay(df, vec_col, dim, n_iter, round_to, 2)
+    return _local_frame(
+        df.sparkSession,
+        "comp int not null, i bigint, loading double, eigenvalue double",
+        [
+            (k, i, c, eig)
+            for k, (v, eig) in enumerate(comps, 1)
+            for i, c in enumerate(v, 1)
+        ],
     )
-    two = v2.select(
-        F.lit(2).cast("int").alias("comp"),
-        F.col("j").alias("i"),
-        F.col("v").alias("loading"),
-        F.col("__eig__").alias("eigenvalue"),
-    )
-    return one.unionAll(two)
-
-
-def _pca_two_vectors(
-    spark,
-    cov: DataFrame,
-    dim: int,
-    n_iter: int,
-    round_to: int,
-) -> tuple[DataFrame, DataFrame]:
-    """Shared pca_top2/pca_scores core: pinned power chain on ``cov``,
-    Hotelling deflation (rounded entry-wise), second pinned chain.
-    Returns the two (j, v, __eig__) iterate frames."""
-    from peskas_timor_data_pipeline_spark.llm.ckpt import materialize
-
-    v1 = _power_iterate(spark, cov, dim, n_iter, round_to)
-    vv = v1.agg(
-        F.round(F.sum(F.col("v") * F.col("v")), round_to).alias("vv"),
-        F.max("__eig__").alias("eig1"),
-    )
-    cov2 = materialize(
-        cov.join(
-            F.broadcast(v1.select(F.col("j").alias("i"), F.col("v").alias("vi"))),
-            "i",
-        )
-        .join(
-            F.broadcast(v1.select(F.col("j"), F.col("v").alias("vj"))), "j"
-        )
-        .crossJoin(F.broadcast(vv))
-        .select(
-            "i",
-            "j",
-            F.round(
-                F.col("c")
-                - F.col("eig1") * F.col("vi") * F.col("vj") / F.col("vv"),
-                round_to,
-            ).alias("c"),
-        ),
-    )
-    v2 = _power_iterate(spark, cov2, dim, n_iter, round_to)
-    return v1, v2
 
 
 def pca_scores(
@@ -1564,53 +1565,30 @@ def pca_scores(
     the shared moments pass, and each score is ONE fixed left-associated
     IEEE chain over the row's ``dim`` elements — fully codegen, no UDF.
 
-    Scale shape: the corpus is scanned twice total — once for the shared
-    moments pass (`_moments`), once for the projection itself — and the
-    projection side only crossJoin-broadcasts a single 1-row frame of
-    means + loadings; nothing row-wise ever shuffles.
+    Scale shape: the corpus is scanned twice total — once for the
+    collected moments pass (``_pca_replay``), once for the projection
+    itself — and the projection carries the means and loadings as
+    literals: no join, broadcast or shuffle.
 
     Returns (id, score1, score2) rounded ``round_to``dp.
     """
-    spark = df.sparkSession
-    mom = _moments(df, vec_col, dim)
-    cov = _cov_from_moments(mom, dim, round_to)
-    v1, v2 = _pca_two_vectors(spark, cov, dim, n_iter, round_to)
-    means = mom.selectExpr(
-        *[f"round(s{i} / n, {round_to}) AS m{i}" for i in range(1, dim + 1)]
-    )
-    # expr-string construction (r11): identical parsed trees, one py4j
-    # round-trip per aggregate/chain instead of ~5 per term
-    w1 = v1.agg(
-        *[
-            F.expr(f"max(CASE WHEN j = {i} THEN v END) AS w1_{i}")
-            for i in range(1, dim + 1)
-        ]
-    )
-    w2 = v2.agg(
-        *[
-            F.expr(f"max(CASE WHEN j = {i} THEN v END) AS w2_{i}")
-            for i in range(1, dim + 1)
-        ]
-    )
+    means, [(w1, _), (w2, _)] = _pca_replay(df, vec_col, dim, n_iter, round_to, 2)
+    x = [
+        F.expr(f"CAST(element_at(`{vec_col}`, {i}) AS DOUBLE)")
+        for i in range(1, dim + 1)
+    ]
 
-    def chain(prefix: str):
-        return F.expr(
-            " + ".join(
-                f"(CAST(element_at(`{vec_col}`, {i}) AS DOUBLE) - m{i})"
-                f" * {prefix}_{i}"
-                for i in range(1, dim + 1)
-            )
+    def chain(w):
+        # (t1 + t2) + t3 ...: the left association of a parsed "t1 + t2 + t3"
+        return functools.reduce(
+            operator.add,
+            [(xi - F.lit(m)) * F.lit(c) for xi, m, c in zip(x, means, w)],
         )
 
-    return (
-        df.crossJoin(F.broadcast(means))
-        .crossJoin(F.broadcast(w1))
-        .crossJoin(F.broadcast(w2))
-        .select(
-            F.col(id_col).alias("id"),
-            F.round(chain("w1"), round_to).alias("score1"),
-            F.round(chain("w2"), round_to).alias("score2"),
-        )
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.round(chain(w1), round_to).alias("score1"),
+        F.round(chain(w2), round_to).alias("score2"),
     )
 
 
@@ -1690,8 +1668,6 @@ def jl_project_sql_terms(
 ) -> list[str]:
     """The k projection expressions as SQL strings (1-indexed element
     access, for DuckDB oracles): '(0.0 + v[3] - v[17] ...) * scale'."""
-    import math
-
     R = jl_sign_matrix(dim, k, seed)
     scale = math.sqrt(3.0 / k)
     out = []
@@ -1729,8 +1705,6 @@ def jl_project(
 
     Returns (id, proj array<double> length k).
     """
-    import math
-
     R = jl_sign_matrix(dim, k, seed)
     scale = math.sqrt(3.0 / k)
     cols = []

@@ -829,7 +829,11 @@ def test_round8_operators_survive_empty_inputs(spark):
     division errors or crashes — returning an empty or NULL-stat result."""
     import datetime as dt
 
-    from peskas_timor_data_pipeline_spark.llm.similarity import pca_scores, pca_top2
+    from peskas_timor_data_pipeline_spark.llm.similarity import (
+        pca_scores,
+        pca_top2,
+        top_eigenvector,
+    )
     from peskas_timor_data_pipeline_spark.llm.text import (
         good_turing_coverage,
         readability_scores,
@@ -908,6 +912,9 @@ def test_round8_operators_survive_empty_inputs(spark):
     assert kaplan_meier(e_de, "dur", "ev").count() == 0
     assert pca_top2(e_emb, "embedding", dim=2, n_iter=1).count() == 2 * 2
     assert pca_scores(e_emb, "id", "embedding", dim=2, n_iter=1).count() == 0
+    te = top_eigenvector(e_emb, "embedding", dim=2, n_iter=1).collect()
+    assert len(te) == 2
+    assert all(r["component"] is None and r["eigenvalue"] is None for r in te)
 
 
 # --- RFM ----------------------------------------------------------------------

@@ -60,7 +60,7 @@ SHOWCASE = {
     "a27_funnel": "funnel: per-step filtered partial-agg + user-keyed joins, no collected history",
     "a30_log_histogram_quantiles": "log-histogram: integer bucketing, partial counts, no float LOG",
     "w11_rolling_active_users": "rolling distinct rewrite: Generate + plain counts, zero Window nodes",
-    "e17_top_eigenvector": "power iteration: corpus scanned ONCE (moments), KB-frame iterations",
+    "e17_top_eigenvector": "power iteration: corpus scanned ONCE (moments row collected), chain solved on the driver, dim-row local frame",
     "m10_poisson_bootstrap": "Poisson bootstrap: B replicates = 2B sums in ONE agg pass, hex-compare draws",
     "j14_fuzzy_join": "fuzzy join: deletion-variant Generate + ONE equi-join + levenshtein verify",
     "d11_cdc_segments": "CDC: let-bound bounds array — boundary scan appears once in the plan",
@@ -113,11 +113,11 @@ SHOWCASE = {
     "ts5_acf": "ACF: corpus -> daily partial agg; lag align = ONE equi-join on the dimension-sized spine; exact integer moments",
     "w17_attribution": "attribution: user-partitioned running-count windows + LeftSemi closed-window filter; no cross-user state",
     "t46_readability": "readability: regex counting + per-word transform fold, all codegen, zero Python, zero Exchange",
-    "e27_pca_top2": "rank-2 PCA: corpus scanned ONCE (shared moments pass); deflation + both power chains on KB matrix frames",
+    "e27_pca_top2": "rank-2 PCA: corpus scanned ONCE (moments row collected); deflation + both power chains solved on the driver, 2*dim-row local frame",
     "m19_kruskal_wallis": "Kruskal-Wallis: lattice partial agg, rank cumsum on the bin grid, pinned-sorted cross-group fold",
     "m20_spearman": "Spearman: two dimension-sized rank maps joined back, one exact-moment agg, zero windows over rows",
     "ts6_holt_linear": "Holt: corpus -> per-series daily agg, recursion = ONE in-row fold, no joins, no Python",
-    "e28_pca_project": "PCA scores: two corpus scans total (moments + projection), 1-row loadings broadcast, codegen chains",
+    "e28_pca_project": "PCA scores: two corpus scans total (collected moments + projection), means and loadings as literals, codegen chains",
     "g8_hits": "HITS: per half-round one equi-join + partial-agg BIGINT sum, 1-row max broadcast, integer div — no float in the loop",
     "a42_decayed_agg": "decay agg: per-row micro-rounded weights, ONE partial-agg groupBy, zero windows, zero joins",
     "e29_ivf_cell_split": "cell split: slim (id,cell) assignment, vectors rejoin by id for the hot list, 128-agg moments pass, 1-row decisions",
