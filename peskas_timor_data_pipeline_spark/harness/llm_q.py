@@ -13,7 +13,7 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from peskas_timor_data_pipeline_spark.harness.tables import load
+from peskas_timor_data_pipeline_spark.harness.tables import exact_ppm, load
 from peskas_timor_data_pipeline_spark.llm.dedup import (
     exact_dedup,
     lsh_candidate_pairs,
@@ -4259,7 +4259,7 @@ def mm11_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_pixels",
         "px_sum",
         "px_sumsq",
-        F.expr("px_sum * 1000000L div n_pixels").alias("mean_micros"),
+        exact_ppm("px_sum", "n_pixels").alias("mean_micros"),
         F.round(num.cast("double") / den.cast("double"), 6).alias("variance"),
     )
 
@@ -4510,12 +4510,17 @@ QUERIES["e21_cell_exemplars"] = (e21_cell_exemplars, E21_ORACLE)
 
 def e22_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF tuning curve: recall@3 against the exact top-3 for n_probe
-    in {1, 2, 4, 8} — ONE assignment and ONE probe ranking feed all four
-    settings (a setting is just a filter on the probe rank), so the sweep
-    costs barely more than a single search. Recall is summed hits over
-    summed truth (exact integer ppm). The brute-force truth side is the
-    audit harness's job, same status as e1/d10."""
+    in {1, 2, 4, 8} — ONE assignment (``_nearest_cell``) and ONE probe
+    ranking (``_probe_cells`` at n_probe 8) feed all four settings (a
+    setting is just a filter on the probe rank), so the sweep costs
+    barely more than a single search. Recall is summed hits over summed
+    truth (exact integer ppm); the truth count is a 1-row aggregate in
+    the plan, and an empty query set fails loudly through the d12
+    raise_error guard. The brute-force truth side is the audit harness's
+    job, same status as e1/d10."""
     from peskas_timor_data_pipeline_spark.llm.similarity import (
+        _nearest_cell,
+        _probe_cells,
         cosine_topk_bruteforce,
         dot_expr,
         ivf_centroids,
@@ -4531,42 +4536,19 @@ def e22_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries, candidates, "vec_id", "embedding", k=3, dim=DIM
     ).select("query_id", "cand_id")
 
-    cents = F.broadcast(ivf_centroids(candidates, "vec_id", "embedding", 16, DIM))
+    cents = ivf_centroids(candidates, "vec_id", "embedding", 16, DIM)
     c = candidates.select(
         F.col("vec_id").alias("cand_id"),
         F.col("embedding").alias("cv"),
         norm_expr("embedding", DIM).alias("cn"),
     )
-    w_assign = Window.partitionBy("cand_id").orderBy(F.desc("cos_c"), F.asc("cell_id"))
-    # SLIM window input + id-rejoin (r11, guide §2.3): only
-    # (cand_id, cell_id, cos_c) rides the ×16 assignment Exchange+Sort;
-    # vectors rejoin by id after the winning cell is picked.
-    inverted = (
-        c.crossJoin(cents)
-        .select(
-            "cand_id",
-            "cell_id",
-            (dot_expr("cv", "cvec", DIM) / (F.col("cn") * F.col("cnorm"))).alias("cos_c"),
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("cell_id", "cand_id")
-        .join(c, "cand_id")
-        .select("cell_id", "cand_id", "cv", "cn")
-    )
+    inverted = _nearest_cell(c, "cand_id", "cv", "cn", cents, DIM).join(c, "cand_id")
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
         norm_expr("embedding", DIM).alias("qn"),
     )
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("cos_q"), F.asc("cell_id"))
-    probes = (
-        q.crossJoin(cents)
-        .withColumn("cos_q", dot_expr("qv", "cvec", DIM) / (F.col("qn") * F.col("cnorm")))
-        .withColumn("probe_rn", F.row_number().over(w_probe))
-        .filter(F.col("probe_rn") <= 8)
-        .select("query_id", "qv", "qn", "cell_id", "probe_rn")
-    )
+    probes = _probe_cells(q, "query_id", "qv", "qn", cents, DIM, 8).join(q, "query_id")
     scored = probes.join(inverted, "cell_id").withColumn(
         "cosine", dot_expr("qv", "cv", DIM) / (F.col("qn") * F.col("cn"))
     )
@@ -4574,7 +4556,7 @@ def e22_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("shiftleft(1, cast(id as int))").alias("n_probe")
     )
     per_setting = scored.join(
-        F.broadcast(settings), F.col("probe_rn") <= F.col("n_probe")
+        F.broadcast(settings), F.col("probe_rank") <= F.col("n_probe")
     )
     w_rank = Window.partitionBy("n_probe", "query_id").orderBy(
         F.desc("cosine"), F.asc("cand_id")
@@ -4588,17 +4570,22 @@ def e22_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_hits")
     )
     # every query has exactly k=3 truth rows (the candidate pool is far
-    # larger than k), so n_truth needs only a cheap query count — NOT a
-    # .count() on the truth frame, which would run the brute-force
-    # scoring an extra time
-    n_truth = 3 * queries.count()
+    # larger than k), so the truth count is 3 x the query count — NOT a
+    # count of the truth frame, which would run the brute-force scoring
+    # an extra time
+    n_truth = queries.agg((3 * F.count(F.lit(1))).cast("long").alias("n_truth"))
     return (
         settings.join(hits, "n_probe", "left")
+        .crossJoin(F.broadcast(n_truth))
         .select(
             "n_probe",
             F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            F.lit(n_truth).cast("long").alias("n_truth"),
-            F.expr(f"coalesce(n_hits, 0) * 1000000L div {n_truth}").alias("recall_ppm"),
+            "n_truth",
+            F.when(F.col("n_truth") > 0, exact_ppm("coalesce(n_hits, 0)", "n_truth"))
+            .otherwise(
+                F.raise_error(F.lit("e22 probe sweep: empty query set (n_truth = 0)"))
+            )
+            .alias("recall_ppm"),
         )
         .orderBy("n_probe")
     )
@@ -5218,8 +5205,8 @@ def t36_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return agg.select(
         "lang", "n_docs", "n_chars", "n_words", "n_pieces",
-        F.expr("n_chars * 1000000L div n_pieces").alias("chars_per_piece_ppm"),
-        F.expr("n_pieces * 1000000L div n_words").alias("pieces_per_word_ppm"),
+        exact_ppm("n_chars", "n_pieces").alias("chars_per_piece_ppm"),
+        exact_ppm("n_pieces", "n_words").alias("pieces_per_word_ppm"),
     ).orderBy("lang")
 
 
@@ -5303,10 +5290,11 @@ def d15_dup_rate_scout(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pattern): the doc count and the candidate-pair count become 1-row
     # aggregate subtrees cross-joined onto the bucket-mass row, so the
     # scout is ONE job instead of one job per driver-side .count(). The
-    # ppm division moves in-plan as exact long arithmetic (both operands
-    # positive, well inside bigint range — identical values to the old
-    # Python floor division). An empty corpus has no rate: it fails
-    # loudly through the d12 raise_error guard instead of dividing by 0.
+    # ppm division moves in-plan as exact long arithmetic (exact_ppm
+    # divides first, so no intermediate product can overflow — identical
+    # values to the old Python floor division). An empty corpus has no
+    # rate: it fails loudly through the d12 raise_error guard instead of
+    # dividing by 0.
     n_docs_df = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     n_pairs_df = lsh_candidate_pairs(sigs, "doc_id", N_HASHES, BAND_SIZE).agg(
         F.count(F.lit(1)).cast("long").alias("n_distinct_candidates")
@@ -5321,7 +5309,7 @@ def d15_dup_rate_scout(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_distinct_candidates",
             F.when(
                 F.col("n_docs") > 0,
-                F.expr("n_distinct_candidates * 1000000L div n_docs"),
+                exact_ppm("n_distinct_candidates", "n_docs"),
             )
             .otherwise(
                 F.raise_error(F.lit("d15 duplication rate: empty corpus (n_docs = 0)"))

@@ -52,6 +52,20 @@ def exact_avg(expr: str, scale: int, nd: int = 6):
     return F.round(s / float(scale) / F.count(F.lit(1)), nd)
 
 
+def exact_ppm(n: str, d: str):
+    """``n * 10^6 div d`` (parts per million, truncated) without the
+    intermediate product: ``n * 1000000L`` overflows a long under ANSI
+    once ``n`` passes ~9.2e12, so divide first and scale the remainder,
+    ``(n div d) * 10^6 + ((n % d) * 10^6) div d``. Exact for ``d > 0``;
+    ``d = 0`` still raises DIVIDE_BY_ZERO, so guard it where it can
+    happen (the d12 ``raise_error`` pattern)."""
+    from pyspark.sql import functions as F
+
+    return F.expr(
+        f"(({n}) div ({d})) * 1000000L + ((({n}) % ({d})) * 1000000L) div ({d})"
+    )
+
+
 def exact_sum(expr: str, scale: int, nd: int):
     """Order-independent rounded sum — see exact_avg. Needed whenever the
     rounding granularity is at or coarser than the data's decimal

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from peskas_timor_data_pipeline_spark.session import local_frame
+
 
 def dot_expr(a: str, b: str, dim: int) -> Column:
     """sum_i a[i]*b[i] as one generated expression (deterministic order)."""
@@ -369,6 +371,61 @@ def ivf_centroids(
     )
 
 
+def _cell_scores(frame, key, vec, norm, cents, dim) -> DataFrame:
+    """The slim ×n_cells expansion both IVF kernels start from: one
+    ``(key, cell_id, cos)`` row per (row, centroid), where ``cents`` is
+    (cell_id, cvec, cnorm) and ``cos = dot(vec, cvec) / (norm * cnorm)``.
+    Only ids and the score leave the codegen stage, never a vector."""
+    cos = dot_expr(vec, "cvec", dim) / (F.col(norm) * F.col("cnorm"))
+    return frame.crossJoin(F.broadcast(cents)).select(key, "cell_id", cos.alias("cos"))
+
+
+def _nearest_cell(frame, key, vec, norm, cents, dim) -> DataFrame:
+    """Every row's nearest centroid by cosine, as ``(key, cell_id, cos)``:
+    the IVF assignment (FAISS's coarse quantizer ``add``) behind every
+    inverted list in this module.
+
+    The winner is the first cell in the order a
+    ``row_number() OVER (PARTITION BY key ORDER BY cos DESC, cell_id)``
+    would give: NaN first, NULL last, -0.0 equal to 0.0, ties to the
+    lowest cell_id. One ``min`` over the ascending struct
+    ``(cos IS NULL, NOT isnan(cos), -cos, cell_id)`` picks it; its
+    partial aggregate (a SortAggregate, as a struct buffer is not
+    fixed-width) combines the n×n_cells rows map-side, so the Exchange
+    carries one row per key and partition. ``cos`` rides along last,
+    for callers that need the winner's score."""
+    s = F.col("cos")
+    best = F.min(
+        F.struct(
+            s.isNull().alias("null"),
+            (~F.isnan(s)).alias("num"),
+            (-s).alias("neg"),
+            F.col("cell_id"),
+            s.alias("cos"),
+        )
+    )
+    return (
+        _cell_scores(frame, key, vec, norm, cents, dim)
+        .groupBy(key)
+        .agg(best.alias("__best__"))
+        .select(key, "__best__.cell_id", "__best__.cos")
+    )
+
+
+def _probe_cells(queries, key, vec, norm, cents, dim, n_probe) -> DataFrame:
+    """Every query's ``n_probe`` nearest centroids by cosine, as
+    ``(key, cell_id, probe_rank)`` with ranks 1..n_probe in the
+    ``(cos DESC, cell_id)`` order of :func:`_nearest_cell`. A top-n is a
+    window, but a slim one: callers rejoin their own columns by key."""
+    w = Window.partitionBy(key).orderBy(F.desc("cos"), F.asc("cell_id"))
+    return (
+        _cell_scores(queries, key, vec, norm, cents, dim)
+        .withColumn("probe_rank", F.row_number().over(w))
+        .filter(F.col("probe_rank") <= n_probe)
+        .select(key, "cell_id", "probe_rank")
+    )
+
+
 def cosine_topk_ivf(
     queries: DataFrame,
     candidates: DataFrame,
@@ -380,62 +437,26 @@ def cosine_topk_ivf(
     n_probe: int = 4,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: candidates are assigned to
-    their nearest centroid cell once (broadcast ×n_cells comparison, argmax
-    by window — the inverted lists); each query probes only its ``n_probe``
-    nearest cells and scores those lists. Per-query work drops from O(N) to
-    O(n_probe·N/n_cells); at scale n_cells ~ √N keeps both the centroid
-    broadcast (MBs) and the cell lists balanced. The recall/cost trade is
-    the probe count, not a hash-design constant like hyperplane LSH."""
-    cents = F.broadcast(ivf_centroids(candidates, id_col, vec_col, n_cells, dim))
-
+    their nearest centroid cell once (broadcast ×n_cells comparison,
+    partial-aggregate argmax — the inverted lists); each query probes only
+    its ``n_probe`` nearest cells and scores those lists. Per-query work
+    drops from O(N) to O(n_probe·N/n_cells); at scale n_cells ~ √N keeps
+    both the centroid broadcast (MBs) and the cell lists balanced. The
+    recall/cost trade is the probe count, not a hash-design constant like
+    hyperplane LSH."""
+    cents = ivf_centroids(candidates, id_col, vec_col, n_cells, dim)
     c = candidates.select(
         F.col(id_col).alias("cand_id"),
         F.col(vec_col).alias("cv"),
         norm_expr(vec_col, dim).alias("cn"),
     )
-    w_assign = Window.partitionBy("cand_id").orderBy(
-        F.desc("cos_c"), F.asc("cell_id")
-    )
-    # SLIM the window input (r11, guide §2.3 "project before the exchange"):
-    # the assignment window only needs (cand_id, cell_id, cos_c) — carrying
-    # the dim-double vector + norm through the ×n_cells Exchange+Sort ships
-    # n_cells copies of every vector; the winning cell rejoins the vectors
-    # by id afterwards (one slim equi-join — the proven ivfpq_build
-    # slim-carry pattern). Same rows, same window ordering, same values.
-    best_cell = (
-        c.crossJoin(cents)
-        .select(
-            "cand_id",
-            "cell_id",
-            (dot_expr("cv", "cvec", dim) / (F.col("cn") * F.col("cnorm"))).alias("cos_c"),
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("cell_id", "cand_id")
-    )
-    inverted = best_cell.join(c, "cand_id").select("cell_id", "cand_id", "cv", "cn")
-
+    inverted = _nearest_cell(c, "cand_id", "cv", "cn", cents, dim).join(c, "cand_id")
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
         norm_expr(vec_col, dim).alias("qn"),
     )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_q"), F.asc("cell_id")
-    )
-    probe_cells = (
-        q.crossJoin(cents)
-        .select(
-            "query_id",
-            "cell_id",
-            (dot_expr("qv", "cvec", dim) / (F.col("qn") * F.col("cnorm"))).alias("cos_q"),
-        )
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "cell_id")
-    )
-    probes = probe_cells.join(q, "query_id").select("query_id", "qv", "qn", "cell_id")
-
+    probes = _probe_cells(q, "query_id", "qv", "qn", cents, dim, n_probe).join(q, "query_id")
     scored = probes.join(inverted, "cell_id").withColumn(
         "cosine", dot_expr("qv", "cv", dim) / (F.col("qn") * F.col("cn"))
     )
@@ -527,13 +548,11 @@ def kmeans_refine(
     from a sampled to a trained one.
 
     Scale shape per iteration: centroids broadcast (k rows); the nearest
-    cell comes from a ``max_by`` AGGREGATE over the xk comparison rows —
-    declarative, partial-aggregated map-side — not a per-vector
-    row_number window (which would sort n*k rows in a shuffle). Vector
-    norms are hoisted before the cross join so codegen evaluates each
-    once, and the recompute is dim-many scalar avgs (see
-    :func:`group_centroids`). Total: one broadcast + ONE shuffle carrying
-    (sum,count) x dim per cell.
+    cell comes from :func:`_nearest_cell`'s partial aggregate over the xk
+    comparison rows, not a per-vector window (which would sort n*k rows
+    in a shuffle), and the vectors rejoin by id. The recompute is
+    dim-many scalar avgs (see :func:`group_centroids`). Total: one
+    broadcast + ONE shuffle carrying (sum,count) x dim per cell.
 
     ``centroids`` needs (cell_id, cvec); returns (cell_id, centroid, n).
     """
@@ -542,26 +561,10 @@ def kmeans_refine(
         F.col(vec_col).alias("__v__"),
         norm_expr(vec_col, dim).alias("__vn__"),
     )
-    c = centroids.select(
-        "cell_id", F.col("cvec"), norm_expr("cvec", dim).alias("__cn__")
+    c = centroids.select("cell_id", "cvec", norm_expr("cvec", dim).alias("cnorm"))
+    best = _nearest_cell(v, id_col, "__v__", "__vn__", c, dim).join(
+        v.select(F.col(id_col), "__v__"), id_col
     )
-    sim = dot_expr("__v__", "cvec", dim) / (F.col("__vn__") * F.col("__cn__"))
-    # SLIM carry (r11, guide §2.3): only (id, cell_id, sim) rides the ×k
-    # expansion and the aggregate — routing the dim-double array through
-    # n×k expanded rows and the agg buffers (the former F.first carry) is
-    # pure memcpy, the exact ivfpq_build r07 lesson. Vectors rejoin by id.
-    best_cell = (
-        v.crossJoin(F.broadcast(c))
-        .select(F.col(id_col), F.col("cell_id"), sim.alias("__sim__"))
-        .groupBy(id_col)
-        .agg(
-            F.min_by(
-                "cell_id",
-                F.struct((-F.col("__sim__")).alias("ns"), F.col("cell_id")),
-            ).alias("cell_id"),
-        )
-    )
-    best = best_cell.join(v.select(F.col(id_col), "__v__"), id_col)
     return group_centroids(best, "cell_id", "__v__", dim, round_to=round_to)
 
 
@@ -950,7 +953,7 @@ def centroid_blocked_near_dup(
     higher at the same compare budget.
 
     Scale shape: assignment is one broadcast ×n_cells comparison + argmax
-    (row_number over a per-row n_cells frame); the pairwise compare is
+    (:func:`_nearest_cell`'s partial aggregate); the pairwise compare is
     cell-keyed self-join fan-out bounded by the cell population, never the
     corpus; the keep decision is one bool_or aggregation per id. At 100 TB
     pick n_cells ~ sqrt(N) (k-means-refined centroids slot in directly —
@@ -962,33 +965,20 @@ def centroid_blocked_near_dup(
     """
     from peskas_timor_data_pipeline_spark.llm.ckpt import materialize
 
-    cents = F.broadcast(ivf_centroids(df, id_col, vec_col, n_cells, dim))
+    cents = ivf_centroids(df, id_col, vec_col, n_cells, dim)
     v = df.select(
         F.col(id_col),
         F.col(vec_col).alias("v"),
         norm_expr(vec_col, dim).alias("n"),
     )
-    w_assign = Window.partitionBy(id_col).orderBy(F.desc("cos_c"), F.asc("cell_id"))
-    # SLIM window input + id-rejoin (r11, guide §2.3): the assignment
-    # window needs only (id, cell_id, cos_c); shipping the dim-double
-    # vector + norm through the ×n_cells Exchange+Sort moves n_cells
-    # copies of the corpus. MATERIALIZED once (r11): the assignment feeds
-    # three consumers (both self-join sides + the final verdict join) —
-    # unmaterialized, the whole ×n_cells assignment subtree was planned
-    # and executed three times per run (see plans/r11/e11_semdedup_*).
-    best = (
-        v.crossJoin(cents)
-        .select(
-            id_col,
-            "cell_id",
-            (dot_expr("v", "cvec", dim) / (F.col("n") * F.col("cnorm"))).alias("cos_c"),
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select(id_col, "cell_id")
-    )
+    # MATERIALIZED once (r11): the assignment feeds three consumers (both
+    # self-join sides + the final verdict join) — unmaterialized, the
+    # whole ×n_cells assignment subtree was planned and executed three
+    # times per run (see plans/r11/e11_semdedup_*).
     assigned = materialize(
-        best.join(v, id_col).select(id_col, "v", "n", "cell_id")
+        _nearest_cell(v, id_col, "v", "n", cents, dim)
+        .join(v, id_col)
+        .select(id_col, "v", "n", "cell_id")
     )
     a = assigned.select(
         F.col(id_col).alias("id_a"), F.col("v").alias("va"),
@@ -1285,38 +1275,10 @@ def hard_negatives(
         F.col(label_col).alias("nlbl"),
     )
     if method == "ivf":
-        cents = F.broadcast(ivf_centroids(df, id_col, vec_col, n_cells, dim))
-        w_assign = Window.partitionBy("neg_id").orderBy(
-            F.desc("cos_c"), F.asc("cell_id")
-        )
-        # SLIM window input + id-rejoin (r11, guide §2.3): only
-        # (neg_id, cell_id, cos_c) rides the ×n_cells assignment
-        # Exchange+Sort; vector/norm/label rejoin by id afterwards.
-        inverted = (
-            cand.crossJoin(cents)
-            .select(
-                "neg_id",
-                "cell_id",
-                (dot_expr("nv", "cvec", dim)
-                 / (F.col("nn") * F.col("cnorm"))).alias("cos_c"),
-            )
-            .withColumn("rn", F.row_number().over(w_assign))
-            .filter(F.col("rn") == 1)
-            .select("cell_id", "neg_id")
-            .join(cand, "neg_id")
-            .select("cell_id", "neg_id", "nv", "nn", "nlbl")
-        )
-        w_probe = Window.partitionBy("anchor_id").orderBy(
-            F.desc("cos_q"), F.asc("cell_id")
-        )
-        probes = (
-            anc.crossJoin(cents)
-            .withColumn(
-                "cos_q", dot_expr("av", "cvec", dim) / (F.col("an") * F.col("cnorm"))
-            )
-            .withColumn("rn", F.row_number().over(w_probe))
-            .filter(F.col("rn") <= n_probe)
-            .select("anchor_id", "av", "an", "albl", "cell_id")
+        cents = ivf_centroids(df, id_col, vec_col, n_cells, dim)
+        inverted = _nearest_cell(cand, "neg_id", "nv", "nn", cents, dim).join(cand, "neg_id")
+        probes = _probe_cells(anc, "anchor_id", "av", "an", cents, dim, n_probe).join(
+            anc, "anchor_id"
         )
         joined = probes.join(inverted, "cell_id")
     else:
@@ -1362,7 +1324,7 @@ def top_eigenvector(
     of the LAST un-normalized iterate (the dominant-eigenvalue estimate).
     """
     _, [(v, eig)] = _pca_replay(df, vec_col, dim, n_iter, round_to, 1)
-    return _local_frame(
+    return local_frame(
         df.sparkSession,
         "i bigint, component double, eigenvalue double",
         [(i, c, eig) for i, c in enumerate(v, 1)],
@@ -1386,19 +1348,6 @@ def _moments(
         for j in range(i, dim + 1):
             aggs.append(F.expr(f"sum({el(i)} * {el(j)}) AS p{i}_{j}"))
     return df.agg(*aggs).collect()[0].asDict()
-
-
-def _local_frame(spark, ddl: str, rows: list) -> DataFrame:
-    """A driver-side result as a ``LocalTableScan``: built from an Arrow
-    table, its rows are read in the JVM. A list of tuples would start a
-    Python worker on every read (~0.3 s for 8 rows on 4 cores)."""
-    import pyarrow as pa
-    from pyspark.sql.types import DataType
-
-    schema = DataType.fromDDL(ddl)
-    return spark.createDataFrame(
-        pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows]), schema
-    )
 
 
 def _spark_round(jvm, x: float | None, r: int) -> float | None:
@@ -1537,7 +1486,7 @@ def pca_top2(
     Returns 2*dim rows: (comp 1|2, i, loading, eigenvalue).
     """
     _, comps = _pca_replay(df, vec_col, dim, n_iter, round_to, 2)
-    return _local_frame(
+    return local_frame(
         df.sparkSession,
         "comp int not null, i bigint, loading double, eigenvalue double",
         [
@@ -1611,28 +1560,13 @@ def ivf_cell_stats(
     comparison; the report is one partial-aggregated groupBy over cell
     ids plus a one-row rollup — integers and two exact divisions.
     """
-    cents = F.broadcast(ivf_centroids(candidates, id_col, vec_col, n_cells, dim))
+    cents = ivf_centroids(candidates, id_col, vec_col, n_cells, dim)
     c = candidates.select(
         F.col(id_col).alias("cand_id"),
         F.col(vec_col).alias("cv"),
         norm_expr(vec_col, dim).alias("cn"),
     )
-    w_assign = Window.partitionBy("cand_id").orderBy(
-        F.desc("cos_c"), F.asc("cell_id")
-    )
-    # SLIM window input (r11, guide §2.3): stats only need ids — keep the
-    # dim-double vectors out of the ×n_cells window Exchange entirely.
-    assigned = (
-        c.crossJoin(cents)
-        .select(
-            "cand_id",
-            "cell_id",
-            (dot_expr("cv", "cvec", dim) / (F.col("cn") * F.col("cnorm"))).alias("cos_c"),
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("cell_id", "cand_id")
-    )
+    assigned = _nearest_cell(c, "cand_id", "cv", "cn", cents, dim)
     sizes = assigned.groupBy("cell_id").agg(
         F.count(F.lit(1)).cast("long").alias("sz")
     )
@@ -1784,44 +1718,22 @@ def binary_topk_rerank(
         )
     )
     if method == "ivf":
-        cents = F.broadcast(ivf_centroids(candidates, id_col, vec_col, n_cells, dim))
+        cents = ivf_centroids(candidates, id_col, vec_col, n_cells, dim)
         c = candidates.select(
             F.col(id_col).alias("cand_id"),
             F.col(vec_col).alias("__cv__"),
             norm_expr(vec_col, dim).alias("__cn__"),
         )
-        w_assign = Window.partitionBy("cand_id").orderBy(
-            F.desc("cos_c"), F.asc("cell_id")
-        )
-        inverted = (
-            c.crossJoin(cents)
-            .withColumn(
-                "cos_c",
-                dot_expr("__cv__", "cvec", dim) / (F.col("__cn__") * F.col("cnorm")),
-            )
-            .withColumn("rn", F.row_number().over(w_assign))
-            .filter(F.col("rn") == 1)
-            .select("cell_id", "cand_id")
-            .join(cb, "cand_id")
+        inverted = _nearest_cell(c, "cand_id", "__cv__", "__cn__", cents, dim).join(
+            cb, "cand_id"
         )
         q = queries.select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("__qv__"),
             norm_expr(vec_col, dim).alias("__qn__"),
         )
-        w_probe = Window.partitionBy("query_id").orderBy(
-            F.desc("cos_q"), F.asc("cell_id")
-        )
-        probes = (
-            q.crossJoin(cents)
-            .withColumn(
-                "cos_q",
-                dot_expr("__qv__", "cvec", dim) / (F.col("__qn__") * F.col("cnorm")),
-            )
-            .withColumn("rn", F.row_number().over(w_probe))
-            .filter(F.col("rn") <= n_probe)
-            .select("query_id", "cell_id")
-            .join(qb, "query_id")
+        probes = _probe_cells(q, "query_id", "__qv__", "__qn__", cents, dim, n_probe).join(
+            qb, "query_id"
         )
         paired = probes.join(inverted, "cell_id")
     else:
@@ -1877,34 +1789,19 @@ def cell_exemplars(
 
     Returns (cell_id, exemplar_id, cosine, n_members).
     """
-    cents = F.broadcast(ivf_centroids(df, id_col, vec_col, n_cells, dim))
+    cents = ivf_centroids(df, id_col, vec_col, n_cells, dim)
     v = df.select(
         F.col(id_col).alias("__vid__"),
         F.col(vec_col).alias("__v__"),
         norm_expr(vec_col, dim).alias("__vn__"),
     )
-    w_assign = Window.partitionBy("__vid__").orderBy(
-        F.desc("__cos__"), F.asc("cell_id")
-    )
-    # SLIM window input (r11, guide §2.3): the exemplar pick only needs
-    # (id, cell_id, cos) — the vectors never ride the assignment Exchange.
-    assigned = (
-        v.crossJoin(cents)
-        .select(
-            "__vid__",
-            "cell_id",
-            (dot_expr("__v__", "cvec", dim)
-             / (F.col("__vn__") * F.col("cnorm"))).alias("__cos__"),
-        )
-        .withColumn("__rn__", F.row_number().over(w_assign))
-        .filter(F.col("__rn__") == 1)
-    )
+    assigned = _nearest_cell(v, "__vid__", "__v__", "__vn__", cents, dim)
     return assigned.groupBy("cell_id").agg(
         F.min_by(
             "__vid__",
-            F.struct((-F.col("__cos__")).alias("ns"), F.col("__vid__")),
+            F.struct((-F.col("cos")).alias("ns"), F.col("__vid__")),
         ).alias("exemplar_id"),
-        F.round(F.max("__cos__"), 6).alias("cosine"),
+        F.round(F.max("cos"), 6).alias("cosine"),
         F.count(F.lit(1)).alias("n_members"),
     )
 
@@ -2534,13 +2431,12 @@ def ivf_build(
     the inverted lists (cell_id, cand_id, cv, cn), both materialized so
     repeated searches never re-pay assignment. Returns (cents, inverted).
 
-    Assignment is a SLIM broadcast expansion (r09): the x n_cells rows
-    carry only (cand_id, cell_id, cos) — one codegen dot per pair, one
-    ``max_by`` partial aggregate (map-side combine, no window shuffle) —
-    and the vectors rejoin by id. The previous window-over-wide-rows
-    shape memcpy'd the dim-double array n x n_cells times and shuffled
-    it (the r07 ivfpq lesson, ported here after ANNSCALE showed 382 s
-    at 300k vectors).
+    Assignment is :func:`_nearest_cell`: the x n_cells rows carry only
+    (cand_id, cell_id, cos) — one codegen dot per pair, one partial
+    aggregate (map-side combine, no window shuffle) — and the vectors
+    rejoin by id. The previous window-over-wide-rows shape memcpy'd the
+    dim-double array n x n_cells times and shuffled it (the r07 ivfpq
+    lesson, ported here after ANNSCALE showed 382 s at 300k vectors).
 
     ``route="gemm"`` (r10) is the build path at scale: one Arrow-batched
     BLAS GEMM per vector batch against the full centroid matrix — the
@@ -2561,15 +2457,6 @@ def ivf_build(
         F.col(vec_col).alias("cv"),
         norm_expr(vec_col, dim).alias("cn"),
     )
-    cos = dot_expr("cv", "cvec", dim) / (F.col("cn") * F.col("cnorm"))
-    # min_by over (-cos, cell_id): max cosine, ties to the LOWEST cell
-    # id — identical to the previous max_by(cos, -cell_id) form but the
-    # tie-break never negates the id, so string-id corpora work on the
-    # exact route too (ADVICE r10; cosines are finite here — ANSI division
-    # rejects zero norms before any NaN could flip min/max NaN ordering)
-    argmax = F.min_by(
-        "cell_id", F.struct((-F.col("cos_c")).alias("ns"), F.col("cell_id"))
-    ).alias("cell_id")
     if route == "gemm":
         # Arrow-batched BLAS argmax over ALL cells — exact assignment at
         # a fraction of the JVM scoring cost (see _gemm_assign; r10
@@ -2577,12 +2464,7 @@ def ivf_build(
         # aggregate was free)
         assign = _gemm_assign(c, cents, "cand_id", "cv", dim, "cosine")
     else:
-        assign = (
-            c.crossJoin(F.broadcast(cents))
-            .select("cand_id", "cell_id", cos.alias("cos_c"))
-            .groupBy("cand_id")
-            .agg(argmax)
-        )
+        assign = _nearest_cell(c, "cand_id", "cv", "cn", cents, dim)
     inverted = materialize(
         assign.join(c, "cand_id").select("cell_id", "cand_id", "cv", "cn"),
     )
@@ -2609,18 +2491,7 @@ def ivf_search(
         F.col(vec_col).alias("qv"),
         norm_expr(vec_col, dim).alias("qn"),
     )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_q"), F.asc("cell_id")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn(
-            "cos_q", dot_expr("qv", "cvec", dim) / (F.col("qn") * F.col("cnorm"))
-        )
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "qv", "qn", "cell_id")
-    )
+    probes = _probe_cells(q, "query_id", "qv", "qn", cents, dim, n_probe).join(q, "query_id")
     scored = inverted.join(F.broadcast(probes), "cell_id").withColumn(
         "cosine", dot_expr("qv", "cv", dim) / (F.col("qn") * F.col("cn"))
     )
@@ -2712,28 +2583,16 @@ def ivf_cell_split(
     """
     from peskas_timor_data_pipeline_spark.llm.ckpt import materialize
 
-    cents = F.broadcast(ivf_centroids(candidates, id_col, vec_col, n_cells, dim))
+    cents = ivf_centroids(candidates, id_col, vec_col, n_cells, dim)
     c = candidates.select(
         F.col(id_col).alias("cand_id"),
         F.col(vec_col).alias("cv"),
         norm_expr(vec_col, dim).alias("cn"),
     )
-    w_assign = Window.partitionBy("cand_id").orderBy(
-        F.desc("cos_c"), F.asc("cell_id")
-    )
-    # SLIM window input (r11, guide §2.3): only (cand_id, cell_id, cos_c)
-    # rides the assignment Exchange+Sort — the split decision never needs
-    # the vectors downstream of the window, so there is no rejoin either.
+    # the split decision never needs the vectors downstream of the
+    # assignment, so there is no rejoin
     assign = materialize(
-        c.crossJoin(cents)
-        .select(
-            "cand_id",
-            "cell_id",
-            (dot_expr("cv", "cvec", dim) / (F.col("cn") * F.col("cnorm"))).alias("cos_c"),
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("cell_id", "cand_id")
+        _nearest_cell(c, "cand_id", "cv", "cn", cents, dim).select("cell_id", "cand_id")
     )
     sizes = materialize(
         assign.groupBy("cell_id").agg(F.count(F.lit(1)).alias("sz"))

@@ -7,6 +7,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from peskas_timor_data_pipeline_spark.session import local_frame
+
 # n-gram-heuristic language ID: tiny per-language stopword inventories.
 # Deterministic tie-break = this dict's order.
 STOPWORDS = {
@@ -769,9 +771,10 @@ def bm25_topk(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
     )
-    qt = spark.createDataFrame(
+    qt = local_frame(
+        spark,
+        "query_id long, term string",
         [(qid, t) for qid, terms in query_terms for t in terms],
-        schema="query_id long, term string",
     )
     dfreq = (
         tf.join(F.broadcast(qt.select("term").distinct()), "term")

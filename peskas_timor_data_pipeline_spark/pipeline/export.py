@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from peskas_timor_data_pipeline_spark.session import local_frame
+
 # taxa -> fish group: the FULL case_when at R/export.R:287-352
 # (estimated_tons), first-match-wins materialized as one row per taxon.
 # Unmatched taxa map to NULL (the reference's TRUE ~ NA_character_), NOT
@@ -93,7 +95,7 @@ def fish_group_dim(spark: SparkSession, variant: str = "export") -> DataFrame:
     R/export.R:287-352 (MZZ->Other, SUR small-demersal); ``'ingest'`` is
     R/ingest-pds-data.R:622-690 (MZZ->Unknown, SUR large-demersal)."""
     rows = FISH_GROUPS if variant == "export" else FISH_GROUPS_INGEST
-    return spark.createDataFrame(rows, "catch_taxon string, fish_group string")
+    return local_frame(spark, "catch_taxon string, fish_group string", rows)
 
 
 def attach_fish_groups(

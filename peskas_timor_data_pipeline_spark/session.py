@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_TIMEZONE = "Asia/Dili"
 
@@ -106,3 +106,21 @@ def prep_session(spark: SparkSession, timezone: str = "UTC") -> SparkSession:
     """
     spark.conf.set("spark.sql.session.timeZone", timezone)
     return spark
+
+
+def local_frame(spark: SparkSession, ddl: str, rows: list) -> DataFrame:
+    """Driver-side rows (tuples in ``ddl``'s column order) as a
+    ``LocalTableScan``: built from an Arrow table, the rows are read in
+    the JVM. ``spark.createDataFrame(<list of tuples>)`` would start a
+    Python worker on every read of the frame (~0.3 s for 8 rows on 4
+    cores). The Arrow schema comes from ``ddl``, so empty and all-NULL
+    columns keep their types."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = DataType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)

@@ -47,6 +47,8 @@ from collections import OrderedDict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
+from peskas_timor_data_pipeline_spark.session import local_frame
+
 _VERSION_RE = re.compile(r"^(?P<prefix>.+)__(?P<ts>\d{14})_(?P<sha>[0-9a-f]+)__$")
 
 
@@ -346,6 +348,6 @@ def schema_diff(spark, path_a: str, path_b: str):
         else:
             status = "unchanged"
         rows.append((name, status, ta, tb))
-    return spark.createDataFrame(
-        rows, "column_name string, status string, type_a string, type_b string"
+    return local_frame(
+        spark, "column_name string, status string, type_a string, type_b string", rows
     )
