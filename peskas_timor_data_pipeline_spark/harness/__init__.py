@@ -64,7 +64,6 @@ _PRIORITY_R11 = (
     "p6_coalesce_columns", "p7_case_when_recode", "p9_type_casts",
     "t41_weighted_reservoir",
 )
-_PRIORITY_R04 = _PRIORITY_R11  # kept name used by registry()
 
 
 def registry() -> dict[str, tuple[QueryFn, str | None]]:
@@ -85,11 +84,11 @@ def registry() -> dict[str, tuple[QueryFn, str | None]]:
             if name in merged:
                 raise ValueError(f"duplicate query name: {name}")
             merged[name] = entry
-    missing = [n for n in _PRIORITY_R04 if n not in merged]
+    missing = [n for n in _PRIORITY_R11 if n not in merged]
     if missing:
         raise ValueError(f"priority list names unknown queries: {missing}")
     out: dict[str, tuple[QueryFn, str | None]] = {}
-    for name in _PRIORITY_R04:
+    for name in _PRIORITY_R11:
         out[name] = merged[name]
     for name in merged:
         if name not in out:

@@ -573,8 +573,9 @@ QUERIES["d4_embedding_near_dup"] = (d4_embedding_near_dup, D4_ORACLE)
 
 def t5_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF over whitespace tokens: tf = count in doc, idf =
-    ln(N / df). Two groupBys + one broadcast join — the classic corpus
-    featurization, top-3 terms per doc for a bounded output."""
+    ln(N / df). Two groupBys + one broadcast join, with N a 1-row count
+    broadcast onto the rows — the classic corpus featurization, top-3
+    terms per doc for a bounded output."""
     from pyspark.sql.window import Window
     from peskas_timor_data_pipeline_spark.llm.dedup import _spread
 
@@ -583,10 +584,13 @@ def t5_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.split(F.lower("text"), r"\s+")).alias("tok")
     ).filter(F.col("tok") != "")
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    n_docs = docs.count()
+    # a 1-row aggregate in the plan: no driver count() job at build time
+    n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
     df_ = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    scored = tf.join(F.broadcast(df_), "tok").withColumn(
-        "tfidf", F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df"))
+    scored = (
+        tf.join(F.broadcast(df_), "tok")
+        .crossJoin(F.broadcast(n_docs))
+        .withColumn("tfidf", F.col("tf") * F.log(F.col("n_docs") / F.col("df")))
     )
     w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("tok"))
     return (
@@ -1631,8 +1635,8 @@ QUERIES["e7_pq_encode"] = (e7_pq_encode, _e7_sql())
 
 def e8_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC search over PQ codes: per-query distance tables to the codebook
-    (broadcast maps), candidate distance = 8 map lookups summed — no
-    float-vector scan (llm/similarity.py::pq_adc_topk)."""
+    (broadcast cid-ordered arrays), candidate distance = 8 array reads
+    summed — no float-vector scan (llm/similarity.py::pq_adc_topk)."""
     from peskas_timor_data_pipeline_spark.llm.similarity import (
         pq_adc_topk,
         pq_codebook,
@@ -4521,12 +4525,12 @@ def e22_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from peskas_timor_data_pipeline_spark.llm.similarity import (
         _nearest_cell,
         _probe_cells,
+        _topk,
+        cosine_expr,
         cosine_topk_bruteforce,
-        dot_expr,
         ivf_centroids,
         norm_expr,
     )
-    from pyspark.sql.window import Window
 
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
@@ -4550,7 +4554,7 @@ def e22_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probes = _probe_cells(q, "query_id", "qv", "qn", cents, DIM, 8).join(q, "query_id")
     scored = probes.join(inverted, "cell_id").withColumn(
-        "cosine", dot_expr("qv", "cv", DIM) / (F.col("qn") * F.col("cn"))
+        "cosine", cosine_expr("qv", "qn", "cv", "cn", DIM)
     )
     settings = spark.range(0, 4).select(
         F.expr("shiftleft(1, cast(id as int))").alias("n_probe")
@@ -4558,13 +4562,8 @@ def e22_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_setting = scored.join(
         F.broadcast(settings), F.col("probe_rank") <= F.col("n_probe")
     )
-    w_rank = Window.partitionBy("n_probe", "query_id").orderBy(
-        F.desc("cosine"), F.asc("cand_id")
-    )
-    approx = (
-        per_setting.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= 3)
-        .select("n_probe", "query_id", "cand_id")
+    approx = _topk(per_setting, ["n_probe", "query_id"], "cand_id", "cosine", 3, True).select(
+        "n_probe", "query_id", "cand_id"
     )
     hits = approx.join(truth, ["query_id", "cand_id"]).groupBy("n_probe").agg(
         F.count(F.lit(1)).alias("n_hits")
@@ -5247,6 +5246,7 @@ def d15_dup_rate_scout(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice. All outputs are exact integers."""
     from peskas_timor_data_pipeline_spark.llm.ckpt import materialize
     from peskas_timor_data_pipeline_spark.llm.dedup import (
+        band_rows,
         lsh_candidate_pairs,
         minhash_signature,
     )
@@ -5259,25 +5259,9 @@ def d15_dup_rate_scout(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = materialize(
         minhash_signature(docs, "doc_id", "text", N_HASHES, K_SHINGLE)
     )
-    n_bands = N_HASHES // BAND_SIZE
-    bands = [
-        F.md5(
-            F.concat_ws(
-                "|",
-                F.lit(str(b)),
-                *[F.col(f"h{b * BAND_SIZE + i}") for i in range(BAND_SIZE)],
-            )
-        ).alias(f"band{b}")
-        for b in range(n_bands)
-    ]
-    long = sigs.select("doc_id", *bands).select(
-        "doc_id",
-        F.explode(F.array(*[F.col(f"band{b}") for b in range(n_bands)])).alias(
-            "band_key"
-        ),
-    )
     bucket_mass = (
-        long.groupBy("band_key")
+        band_rows(sigs, "doc_id", N_HASHES, BAND_SIZE)
+        .groupBy("band_key")
         .agg(F.count(F.lit(1)).alias("s"))
         .agg(
             F.sum(F.expr("s * (s - 1) div 2")).alias("candidate_pair_mass"),
@@ -5598,7 +5582,7 @@ def e24_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ with residual encoding + per-probed-cell ADC tables
     (llm/similarity.py::ivfpq_adc_topk) — coarse cells route, PQ encodes
     the residual to the cell centroid, queries scan only probed cells'
-    inverted lists via m_sub map lookups per candidate. The oracle
+    inverted lists via m_sub array reads per candidate. The oracle
     replays the full chain: seeded centroids, L2 assignment, seeded
     residual codebook, all 8 subvector argmins, probe selection, and the
     table-lookup distance sum."""

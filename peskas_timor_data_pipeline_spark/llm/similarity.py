@@ -11,6 +11,13 @@ The dot product is a generated fixed-length arithmetic expression (the
 embedding dim is known from the schema), which keeps the whole computation
 inside whole-stage codegen — faster than higher-order aggregate lambdas and
 bit-identical across engines for the oracle.
+
+Each decision the family shares is written once (the FAISS layout, Jégou
+et al., TPAMI 2011): :func:`cosine_expr` is the cosine, :func:`_topk` the
+exact per-query ranking, :func:`_nearest_cell` / :func:`_probe_cells` the
+IVF assignment and probe, :func:`_blas_topk` the Arrow-batched exact
+scan, and :func:`_seeded_pick`, :func:`_residual_l2_sql`,
+:func:`_adc_tables` and :func:`_adc_sum` the PQ codebooks and tables.
 """
 
 from __future__ import annotations
@@ -53,6 +60,107 @@ def norm_expr(a: str, dim: int) -> Column:
     return F.sqrt(F.expr(terms))
 
 
+def cosine_expr(
+    a: str, a_norm: str | Column, b: str, b_norm: str | Column, dim: int
+) -> Column:
+    """Cosine of vector columns ``a`` and ``b`` given their norms (column
+    names, or a norm expression), as ``dot / (a_norm * b_norm)``: the one
+    spelling of the operand order every DuckDB twin replays (the dot
+    first, then the product of the norms, then one division)."""
+    na, nb = (F.col(n) if isinstance(n, str) else n for n in (a_norm, b_norm))
+    return dot_expr(a, b, dim) / (na * nb)
+
+
+def _topk(
+    scored: DataFrame, key: str | list[str], item: str, score: str, k: int, desc: bool
+) -> DataFrame:
+    """Exact top-``k`` per ``key`` (a column name or a list of them):
+    adds ``rank`` = ``row_number() OVER (PARTITION BY key ORDER BY score
+    DESC|ASC, item ASC)`` and keeps ranks 1..k. Ties go to the lowest
+    ``item``; Spark's sort order puts NaN above every number and NULL
+    first ascending, last descending. Callers add their final select."""
+    order = F.desc(score) if desc else F.asc(score)
+    w = Window.partitionBy(key).orderBy(order, F.asc(item))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _blas_topk(
+    queries: DataFrame,
+    candidates: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    score: str,
+    desc: bool,
+    scorer,
+) -> DataFrame:
+    """The exact Arrow-batched BLAS scan behind ``engine="gemm"`` and
+    :func:`l2_topk_bruteforce`. The query matrix is collected (the query
+    batch is the small side by contract); an empty query frame returns
+    an empty frame of the same typed columns, as the sql engine's
+    crossJoin is empty. ``scorer(qids, qmat)`` validates the
+    queries and returns the per-batch ``(vectors, ids) -> b x Q`` score
+    matrix. Each candidate batch keeps, per query, its top ``k`` under
+    the global total order (``score`` desc or asc, cand_id asc) — a
+    batch-local top-k under a total order is a superset of the global
+    winners — and one :func:`_topk` over partitions x Q x k rows
+    finishes.
+
+    Returns (query_id, cand_id, ``score``, rank), ``score`` unrounded."""
+    import numpy as np
+    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+    ids_schema = [
+        StructField("query_id", queries.schema[id_col].dataType),
+        StructField("cand_id", candidates.schema[id_col].dataType),
+    ]
+    qrows = queries.select(id_col, vec_col).collect()
+    if not qrows:
+        return queries.sparkSession.createDataFrame(
+            [],
+            StructType(
+                ids_schema
+                + [StructField(score, DoubleType()), StructField("rank", IntegerType())]
+            ),
+        )
+    qids = [r[0] for r in qrows]
+    batch_scores = scorer(
+        qids, np.array([[float(x) for x in r[1]] for r in qrows], dtype=np.float64)
+    )
+    sign = -1.0 if desc else 1.0
+
+    def score_batches(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            v = np.asarray(
+                [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]
+            )
+            ids = pdf[id_col].to_numpy()
+            s = batch_scores(v, ids)  # b x Q
+            b = s.shape[0]
+            oq, oc, os_ = [], [], []
+            for j, qid in enumerate(qids):
+                col = s[:, j]
+                if b > k:
+                    # keep every score tied with the k-th
+                    p = b - k if desc else k - 1
+                    thr = np.partition(col, p)[p]
+                    idx = np.nonzero(col >= thr if desc else col <= thr)[0]
+                else:
+                    idx = np.arange(b)
+                best = sorted(idx, key=lambda i: (sign * col[i], ids[i]))[:k]
+                oq.extend([qid] * len(best))
+                oc.extend(ids[i] for i in best)
+                os_.extend(float(col[i]) for i in best)
+            yield pd.DataFrame({"query_id": oq, "cand_id": oc, score: os_})
+
+    local = candidates.select(id_col, vec_col).mapInPandas(
+        score_batches, StructType(ids_schema + [StructField(score, DoubleType())])
+    )
+    return _topk(local, "query_id", "cand_id", score, k, desc)
+
+
 def cosine_topk_bruteforce(
     queries: DataFrame,
     candidates: DataFrame,
@@ -68,16 +176,15 @@ def cosine_topk_bruteforce(
     expression chains — float sums left-associated, replayed by the e1
     DuckDB twin. ``engine="gemm"`` (r10, non-oracle): the same exact
     scan as one Arrow-batched numpy GEMM per candidate batch against
-    the collected query matrix (bounded collect — the QUERY batch is
-    the small side by contract), with per-batch top-k under the same
-    (cosine desc, cand_id asc) total order (batch-local top-k under a
-    total order is a superset of the global winners) and one final
-    window over partitions x Q x k rows. ~10x the sql engine's
+    the collected query matrix (:func:`_blas_topk`, under the same
+    (cosine desc, cand_id asc) total order). ~10x the sql engine's
     throughput (the r10 split-probe: JVM per-pair scoring is ~2 us);
     float sums reassociate, so only use where a DuckDB replay isn't
     required (recall evaluation, corpus-scale exact sweeps)."""
     if engine == "gemm":
-        return _gemm_topk(queries, candidates, id_col, vec_col, k)
+        return _blas_topk(
+            queries, candidates, id_col, vec_col, k, "cosine", True, _cosine_scorer
+        ).select("query_id", "cand_id", "rank", F.round("cosine", 6).alias("cosine"))
     if engine != "sql":
         raise ValueError(f"unknown engine: {engine}")
     # norms are per-row: compute them BEFORE the join (once per vector, not
@@ -95,14 +202,9 @@ def cosine_topk_bruteforce(
         F.col(vec_col).alias("cv"),
         norm_expr(vec_col, dim).alias("cn"),
     )
-    scored = q.crossJoin(c).withColumn(
-        "cosine", dot_expr("qv", "cv", dim) / (F.col("qn") * F.col("cn"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", F.round("cosine", 6).alias("cosine"))
+    scored = q.crossJoin(c).withColumn("cosine", cosine_expr("qv", "qn", "cv", "cn", dim))
+    return _topk(scored, "query_id", "cand_id", "cosine", k, True).select(
+        "query_id", "cand_id", "rank", F.round("cosine", 6).alias("cosine")
     )
 
 
@@ -128,120 +230,36 @@ def l2_topk_bruteforce(
     any rerank budget. Recall against this truth isolates the index's
     actual loss (quantization + probe misses).
 
-    BLAS engine only (Arrow-batched GEMM, same shape as the gemm brute
-    scan): this is a recall-evaluation truth, not an oracle path — no
-    DuckDB replay depends on it. Distances use the expansion
+    BLAS engine only (:func:`_blas_topk`, the scan behind the cosine
+    ``engine="gemm"``): this is a recall-evaluation truth, not an oracle
+    path — no DuckDB replay depends on it. Distances use the expansion
     |v|^2 - 2 v.q + |q|^2 computed batch-wise; the returned ``dist`` is
     the true (non-squared) L2, rounded to 6.
 
     Returns (query_id, cand_id, rank, dist).
     """
+    def scorer(qids, qmat):
+        qsq = (qmat * qmat).sum(axis=1)  # Q
+        # b x Q squared distances via the expansion
+        return lambda v, ids: (v * v).sum(axis=1)[:, None] - 2.0 * (v @ qmat.T) + qsq[None, :]
+
+    return _blas_topk(
+        queries, candidates, id_col, vec_col, k, "dist2", False, scorer
+    ).select(
+        "query_id",
+        "cand_id",
+        "rank",
+        F.round(F.sqrt(F.greatest("dist2", F.lit(0.0))), 6).alias("dist"),
+    )
+
+
+def _cosine_scorer(qids, qmat):
+    """The cosine score matrix of the gemm engine. Zero-norm vectors
+    raise a clear ValueError, as the sql engine's ANSI division rejects
+    them too (DIVIDE_BY_ZERO on qn*cn = 0): a silent NaN here would
+    diverge from the engine the tests pin this path against."""
     import numpy as np
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
 
-    out_schema = StructType(
-        [
-            StructField("query_id", queries.schema[id_col].dataType),
-            StructField("cand_id", candidates.schema[id_col].dataType),
-            StructField("dist2", DoubleType()),
-        ]
-    )
-    qrows = queries.select(id_col, vec_col).collect()
-    if not qrows:
-        empty_schema = StructType(
-            out_schema.fields[:2]
-            + [
-                StructField("rank", IntegerType()),
-                StructField("dist", DoubleType()),
-            ]
-        )
-        return queries.sparkSession.createDataFrame([], empty_schema)
-    qids = [r[0] for r in qrows]
-    qmat = np.array(
-        [[float(x) for x in r[1]] for r in qrows], dtype=np.float64
-    )
-    qsq = (qmat * qmat).sum(axis=1)  # Q
-
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            v = np.asarray(
-                [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]
-            )
-            ids = pdf[id_col].to_numpy()
-            vsq = (v * v).sum(axis=1)
-            # b x Q squared distances via the expansion
-            d = vsq[:, None] - 2.0 * (v @ qmat.T) + qsq[None, :]
-            b = d.shape[0]
-            oq, oc, od = [], [], []
-            for j, qid in enumerate(qids):
-                col = d[:, j]
-                if b > k:
-                    thr = np.partition(col, k - 1)[k - 1]
-                    idx = np.nonzero(col <= thr)[0]  # <= keeps k-th ties
-                else:
-                    idx = np.arange(b)
-                # the global total order: dist asc, cand_id asc
-                best = sorted(idx, key=lambda i: (col[i], ids[i]))[:k]
-                oq.extend([qid] * len(best))
-                oc.extend(ids[i] for i in best)
-                od.extend(float(col[i]) for i in best)
-            yield pd.DataFrame({"query_id": oq, "cand_id": oc, "dist2": od})
-
-    local = candidates.select(id_col, vec_col).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.asc("dist2"), F.asc("cand_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "cand_id",
-            "rank",
-            F.round(F.sqrt(F.greatest("dist2", F.lit(0.0))), 6).alias("dist"),
-        )
-    )
-
-
-def _gemm_topk(
-    queries: DataFrame,
-    candidates: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-) -> DataFrame:
-    """BLAS engine for :func:`cosine_topk_bruteforce` — see its docstring.
-
-    Degenerate inputs mirror the sql engine (ADVICE r10): an empty query
-    frame returns an empty result (the sql engine's crossJoin is empty),
-    and zero-norm vectors raise a clear ValueError — the sql engine's
-    ANSI division rejects them too (DIVIDE_BY_ZERO on qn*cn = 0), so a
-    silent NaN here would DIVERGE from the engine the pytest pins this
-    path against, not match it."""
-    import numpy as np
-    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField("query_id", queries.schema[id_col].dataType),
-            StructField("cand_id", candidates.schema[id_col].dataType),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-    qrows = queries.select(id_col, vec_col).collect()
-    if not qrows:
-        empty_schema = StructType(
-            out_schema.fields[:2]
-            + [StructField("rank", IntegerType()), StructField("cosine", DoubleType())]
-        )
-        return queries.sparkSession.createDataFrame([], empty_schema)
-    qids = [r[0] for r in qrows]
-    qmat = np.array([[float(x) for x in r[1]] for r in qrows], dtype=np.float64)
     qn = np.sqrt((qmat * qmat).sum(axis=1))
     if np.any(qn == 0):
         bad = [qids[i] for i in np.nonzero(qn == 0)[0][:5]]
@@ -251,52 +269,18 @@ def _gemm_topk(
         )
     qmat_t = (qmat / qn[:, None]).T  # dim x Q, column-normalized
 
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            v = np.asarray(
-                [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]
+    def batch_scores(v, ids):
+        vn = np.sqrt((v * v).sum(axis=1))
+        if np.any(vn == 0):
+            bad = [ids[i] for i in np.nonzero(vn == 0)[0][:5]]
+            raise ValueError(
+                f"zero-norm candidate vector(s) {bad}: cosine is "
+                "undefined (the sql engine raises DIVIDE_BY_ZERO "
+                "here under ANSI mode)"
             )
-            vn = np.sqrt((v * v).sum(axis=1))
-            ids = pdf[id_col].to_numpy()
-            if np.any(vn == 0):
-                bad = [ids[i] for i in np.nonzero(vn == 0)[0][:5]]
-                raise ValueError(
-                    f"zero-norm candidate vector(s) {bad}: cosine is "
-                    "undefined (the sql engine raises DIVIDE_BY_ZERO "
-                    "here under ANSI mode)"
-                )
-            s = (v @ qmat_t) / vn[:, None]  # b x Q
-            b = s.shape[0]
-            oq, oc, ocos = [], [], []
-            for j, qid in enumerate(qids):
-                col = s[:, j]
-                if b > k:
-                    thr = np.partition(col, b - k)[b - k]
-                    idx = np.nonzero(col >= thr)[0]  # >= keeps k-th ties
-                else:
-                    idx = np.arange(b)
-                # the global total order: cosine desc, cand_id asc
-                best = sorted(idx, key=lambda i: (-col[i], ids[i]))[:k]
-                oq.extend([qid] * len(best))
-                oc.extend(ids[i] for i in best)
-                ocos.extend(float(col[i]) for i in best)
-            yield pd.DataFrame(
-                {"query_id": oq, "cand_id": oc, "cosine": ocos}
-            )
+        return (v @ qmat_t) / vn[:, None]
 
-    local = candidates.select(id_col, vec_col).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("cand_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "cand_id", "rank", F.round("cosine", 6).alias("cosine")
-        )
-    )
+    return batch_scores
 
 
 def hyperplane_bucket(vec_col: str, n_bits: int = 8) -> Column:
@@ -331,14 +315,9 @@ def cosine_topk_lsh(
         norm_expr(vec_col, dim).alias("cn"),
         hyperplane_bucket(vec_col, n_bits).alias("bucket"),
     )
-    scored = q.join(c, "bucket").withColumn(
-        "cosine", dot_expr("qv", "cv", dim) / (F.col("qn") * F.col("cn"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", F.round("cosine", 6).alias("cosine"))
+    scored = q.join(c, "bucket").withColumn("cosine", cosine_expr("qv", "qn", "cv", "cn", dim))
+    return _topk(scored, "query_id", "cand_id", "cosine", k, True).select(
+        "query_id", "cand_id", "rank", F.round("cosine", 6).alias("cosine")
     )
 
 
@@ -376,7 +355,7 @@ def _cell_scores(frame, key, vec, norm, cents, dim) -> DataFrame:
     ``(key, cell_id, cos)`` row per (row, centroid), where ``cents`` is
     (cell_id, cvec, cnorm) and ``cos = dot(vec, cvec) / (norm * cnorm)``.
     Only ids and the score leave the codegen stage, never a vector."""
-    cos = dot_expr(vec, "cvec", dim) / (F.col(norm) * F.col("cnorm"))
+    cos = cosine_expr(vec, norm, "cvec", "cnorm", dim)
     return frame.crossJoin(F.broadcast(cents)).select(key, "cell_id", cos.alias("cos"))
 
 
@@ -458,13 +437,10 @@ def cosine_topk_ivf(
     )
     probes = _probe_cells(q, "query_id", "qv", "qn", cents, dim, n_probe).join(q, "query_id")
     scored = probes.join(inverted, "cell_id").withColumn(
-        "cosine", dot_expr("qv", "cv", dim) / (F.col("qn") * F.col("cn"))
+        "cosine", cosine_expr("qv", "qn", "cv", "cn", dim)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", F.round("cosine", 6).alias("cosine"))
+    return _topk(scored, "query_id", "cand_id", "cosine", k, True).select(
+        "query_id", "cand_id", "rank", F.round("cosine", 6).alias("cosine")
     )
 
 
@@ -491,9 +467,7 @@ def embedding_near_dup_pairs(
         F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("n").alias("nb"), "bucket"
     )
     pairs = a.join(b, "bucket").filter(F.col("id_a") < F.col("id_b"))
-    scored = pairs.withColumn(
-        "cosine", dot_expr("va", "vb", dim) / (F.col("na") * F.col("nb"))
-    )
+    scored = pairs.withColumn("cosine", cosine_expr("va", "na", "vb", "nb", dim))
     return scored.filter(F.col("cosine") >= threshold).select(
         "id_a", "id_b", F.round("cosine", 6).alias("cosine")
     )
@@ -655,6 +629,50 @@ def _sub_l2_sql(a: str, b: str, m: int, sub: int) -> str:
     )
 
 
+def _residual_l2_sql(diff: str, m: int, sub: int) -> str:
+    """Squared L2 between subvector ``m`` of the residual array ``diff``
+    and the codebook's ``rvec``, as ONE SQL string (one py4j call instead
+    of ~5 per element): first-term seed, left-associated ascending i, no
+    casts (both arrays are double) — the sum the oracle chains replay.
+    It runs on every row of a x k_cb expansion (the IVFPQ encode and the
+    per-probe search tables), so it is an unrolled codegen chain, not an
+    aggregate/zip_with fold: higher-order lambdas evaluate interpreted
+    and allocate slice/zip arrays per row, which was most of the r07
+    build cost."""
+    return " + ".join(
+        f"({diff}[{i}] - rvec[{i}]) * ({diff}[{i}] - rvec[{i}])"
+        for i in range(m * sub, (m + 1) * sub)
+    )
+
+
+def _adc_tables(dtab: DataFrame, keys: list[str], dist: str, m_sub: int) -> DataFrame:
+    """Per ``keys`` group, one cid-ordered array ``__a{m}__`` of the
+    ``{dist}{m}__`` distances per subvector — the ADC lookup tables.
+    Arrays, not maps (r10): element_at on an UnsafeMapData is a LINEAR
+    key scan, m_sub x k comparisons per scanned candidate (ANNSCALE_r09:
+    ivfpq_search 19.5 s vs ivf_search 3.7 s at 300k vectors). cids are
+    dense 1..k (the codebooks' row_number), so a cid-sorted array makes
+    each lookup one O(1) offset read; array_sort on the (cid, d) structs
+    orders by the unique cid, sorting collect_list's order away."""
+
+    def cid_array(m: int) -> Column:
+        d = f"{dist}{m}__"
+        return F.transform(
+            F.array_sort(F.collect_list(F.struct("cid", d))), lambda s: s[d]
+        ).alias(f"__a{m}__")
+
+    return dtab.groupBy(*keys).agg(*[cid_array(m) for m in range(m_sub)])
+
+
+def _adc_sum(code: str, m_sub: int) -> Column:
+    """The ADC distance: ``m_sub`` O(1) reads of :func:`_adc_tables`'
+    arrays at the row's codes (``code`` formats ``m`` into the code of
+    subvector m), summed left to right."""
+    return F.expr(
+        " + ".join(f"element_at(__a{m}__, {code.format(m=m)})" for m in range(m_sub))
+    )
+
+
 def pq_codebook(
     candidates: DataFrame,
     id_col: str,
@@ -666,16 +684,24 @@ def pq_codebook(
     md5(seed_prefix#id) (same seeded-sample init as ``ivf_centroids``),
     numbered 1..k by that order so codes are compact ints. One
     TakeOrderedAndProject pass + a k-row window."""
+    return _seeded_pick(
+        candidates, id_col, [F.col(vec_col).alias("cvec")], k, seed_prefix, "cvec"
+    )
+
+
+def _seeded_pick(df, id_col, cols, k, seed_prefix, entry) -> DataFrame:
+    """The ``k`` rows of ``df`` with the smallest md5(seed_prefix#id),
+    numbered ``cid`` 1..k in that order (ties to the lower id), as
+    ``(cid, entry)``: the codebook pick of :func:`pq_codebook` and
+    :func:`residual_codebook`. ``cols`` are the columns ``entry`` reads."""
     picked = (
-        candidates.select(F.col(id_col).alias("__sid__"), F.col(vec_col).alias("cvec"))
+        df.select(F.col(id_col).alias("__sid__"), *cols)
         .withColumn("__seed__", F.md5(F.concat(F.lit(f"{seed_prefix}#"), F.col("__sid__").cast("string"))))
         .orderBy("__seed__", "__sid__")
         .limit(k)
     )
     w = Window.orderBy("__seed__", "__sid__")
-    return picked.select(
-        F.row_number().over(w).alias("cid"), "cvec"
-    )
+    return picked.select(F.row_number().over(w).alias("cid"), entry)
 
 
 def pq_encode(
@@ -785,29 +811,11 @@ def pq_adc_topk(
         for m in range(m_sub)
     ]
     dtab = pairs.select("query_id", "cid", *dcols)
-    # cid-ORDERED ARRAYS, not maps (r10, same fix as ivfpq_search):
-    # element_at on an UnsafeMapData is a LINEAR key scan, m_sub x k
-    # comparisons per scanned candidate; cids are dense 1..k
-    # (pq_codebook's row_number), so a cid-sorted array makes each
-    # lookup one O(1) offset read. array_sort on the (cid, d) structs
-    # orders by the unique cid — collect_list nondeterminism sorted away.
-    def _cid_array(m: int) -> Column:
-        return F.transform(
-            F.array_sort(F.collect_list(F.struct("cid", f"__d{m}__"))),
-            lambda s: s[f"__d{m}__"],
-        ).alias(f"__a{m}__")
-
-    per_q = dtab.groupBy("query_id").agg(
-        *[_cid_array(m) for m in range(m_sub)]
-    )
+    per_q = _adc_tables(dtab, ["query_id"], "__d", m_sub)
     joined = encoded.select(F.col(id_col).alias("cand_id"), "codes").crossJoin(
         F.broadcast(per_q)
     )
-    adc = F.expr(
-        " + ".join(
-            f"element_at(__a{m}__, codes[{m}])" for m in range(m_sub)
-        )
-    )
+    adc = _adc_sum("codes[{m}]", m_sub)
     scored = joined.withColumn("__adc__", adc).select(
         "query_id", "cand_id", "__adc__"
     )
@@ -829,13 +837,8 @@ def pq_adc_topk(
         scored = scored.join(F.broadcast(thr), "query_id").filter(
             F.col("__adc__") <= F.col("__thr__")
         )
-    w = Window.partitionBy("query_id").orderBy(F.asc("__adc__"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
-        .select(
-            "query_id", "cand_id", "rank", F.round("__adc__", 6).alias("adc_dist")
-        )
+    return _topk(scored, "query_id", "cand_id", "__adc__", k_top, False).select(
+        "query_id", "cand_id", "rank", F.round("__adc__", 6).alias("adc_dist")
     )
 
 
@@ -872,9 +875,7 @@ def silhouette_by_centroid(
     )
     paired = v.crossJoin(F.broadcast(cents)).withColumn(
         "__dist__",
-        F.lit(1.0)
-        - dot_expr("__v__", "centroid", dim)
-        / (F.col("__vn__") * norm_expr("centroid", dim)),
+        F.lit(1.0) - cosine_expr("__v__", "__vn__", "centroid", norm_expr("centroid", dim), dim),
     )
     per_vec = paired.groupBy(id_col, "__vlabel__").agg(
         F.min(
@@ -991,9 +992,7 @@ def centroid_blocked_near_dup(
     dup_ids = (
         a.join(b, "cell_id")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine", dot_expr("va", "vb", dim) / (F.col("na") * F.col("nb"))
-        )
+        .withColumn("cosine", cosine_expr("va", "na", "vb", "nb", dim))
         .filter(F.col("cosine") >= threshold)
         .select(F.col("id_b").alias(id_col))
         .distinct()
@@ -1075,7 +1074,7 @@ def mmr_topk(
         .filter(F.col("id_a") != F.col("id_b"))
         .select(
             "query_id", "id_a", "id_b",
-            (dot_expr("va", "vb", dim) / (F.col("na") * F.col("nb"))).alias("sim"),
+            cosine_expr("va", "na", "vb", "nb", dim).alias("sim"),
         ),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("__mmr__"), F.asc("cand_id"))
@@ -1177,11 +1176,8 @@ def int8_topk(
         )
     )
     scored = qq.crossJoin(cq).withColumn("score", idot)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", "score")
+    return _topk(scored, "query_id", "cand_id", "score", k, True).select(
+        "query_id", "cand_id", "rank", "score"
     )
 
 
@@ -1285,14 +1281,9 @@ def hard_negatives(
         joined = anc.crossJoin(cand)
     scored = joined.filter(
         (F.col("albl") != F.col("nlbl")) & (F.col("anchor_id") != F.col("neg_id"))
-    ).withColumn(
-        "cosine", dot_expr("av", "nv", dim) / (F.col("an") * F.col("nn"))
-    )
-    w = Window.partitionBy("anchor_id").orderBy(F.desc("cosine"), F.asc("neg_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("anchor_id", "neg_id", "rank", F.round("cosine", 6).alias("cosine"))
+    ).withColumn("cosine", cosine_expr("av", "an", "nv", "nn", dim))
+    return _topk(scored, "anchor_id", "neg_id", "cosine", k, True).select(
+        "anchor_id", "neg_id", "rank", F.round("cosine", 6).alias("cosine")
     )
 
 
@@ -1761,16 +1752,10 @@ def binary_topk_rerank(
     scored = (
         pre.join(qv, "query_id")
         .join(cv, "cand_id")
-        .withColumn("cosine", dot_expr("qv", "cv", dim) / (F.col("qn") * F.col("cn")))
+        .withColumn("cosine", cosine_expr("qv", "qn", "cv", "cn", dim))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "cand_id", "rank", "hamming",
-            F.round("cosine", 6).alias("cosine"),
-        )
+    return _topk(scored, "query_id", "cand_id", "cosine", k, True).select(
+        "query_id", "cand_id", "rank", "hamming", F.round("cosine", 6).alias("cosine")
     )
 
 
@@ -1820,18 +1805,6 @@ def residual_codebook(
     — a vector and its assigned centroid. Same seeded-sample init as
     :func:`pq_codebook`, computed on the residual field PQ will encode.
     """
-    picked = (
-        assigned.select(
-            F.col(id_col).alias("__sid__"), F.col("__v__"), F.col("__cv__")
-        )
-        .withColumn(
-            "__seed__",
-            F.md5(F.concat(F.lit(f"{seed_prefix}#"), F.col("__sid__").cast("string"))),
-        )
-        .orderBy("__seed__", "__sid__")
-        .limit(k)
-    )
-    w = Window.orderBy("__seed__", "__sid__")
     # one expr string, not dim x ~4 py4j operator calls (r11) — identical
     # parsed tree
     rvec = F.expr(
@@ -1840,8 +1813,9 @@ def residual_codebook(
             for i in range(dim)
         ) + ")"
     )
-    return picked.select(
-        F.row_number().over(w).alias("cid"), rvec.alias("rvec")
+    return _seeded_pick(
+        assigned, id_col, [F.col("__v__"), F.col("__cv__")], k, seed_prefix,
+        rvec.alias("rvec"),
     )
 
 
@@ -1869,19 +1843,7 @@ def _pq_folds(dim: int, m_sub: int):
             lambda x, y: x.cast("double") - y.cast("double"),
         )
 
-    def res_fold(diff_col: str, m: int) -> Column:
-        # sum_j ((v[j] - cell_c[j]) - rvec[j])^2 over subvector m, same
-        # association order as the oracle's generated chain; the (v - c)
-        # diff is HOISTED to one array per vector BEFORE the x k_cb
-        # codebook cross join, so it is computed n times, not n*k_cb
-        sq = F.zip_with(
-            F.slice(diff_col, m * sub + 1, sub),
-            F.slice("rvec", m * sub + 1, sub),
-            lambda d, r: (d - r) * (d - r),
-        )
-        return F.aggregate(sq, F.lit(0.0), lambda acc, t: acc + t)
-
-    return l2_fold, diff_arr, res_fold
+    return l2_fold, diff_arr
 
 
 def _gemm_pq_encode(
@@ -1990,7 +1952,7 @@ def ivfpq_build(
     if route not in ("exact", "gemm"):
         raise ValueError(f"unknown route: {route!r}")
 
-    l2_fold, diff_arr, res_fold = _pq_folds(dim, m_sub)
+    l2_fold, diff_arr = _pq_folds(dim, m_sub)
     cents = F.broadcast(
         materialize(
             ivf_centroids(candidates, id_col, vec_col, n_cells, dim).select(
@@ -2053,29 +2015,12 @@ def ivfpq_build(
     # only the code ids and fold distances (n x k_cb rows of a few dozen
     # bytes instead of two dim-double arrays each); the flat vector for
     # the optional refine path rejoins by id at the end. The per-subvector
-    # distances here are UNROLLED element chains, not aggregate/zip_with
-    # folds: higher-order-function lambdas evaluate INTERPRETED (outside
-    # whole-stage codegen) and allocate slice/zip arrays per joined row —
-    # at n x k_cb rows that interpretation was most of the r07 build cost.
-    # At sub = dim/m_sub elements a chain is 8 terms: milliseconds to
-    # compile, codegen'd, zero allocation. Same left-associated sum as the
-    # fold ((0+t0)+t1... == t0+t1..., bit-identical), so e24/e24b hashes
-    # are unchanged.
+    # distances are _residual_l2_sql's unrolled chains.
     sub = dim // m_sub
-
-    def unrolled(m: int) -> Column:
-        # one expr string per subvector (r11): identical parsed tree —
-        # first-term seed, left-associated, no casts (arrays are double)
-        # — at one py4j round-trip instead of ~5 per element
-        return F.expr(
-            " + ".join(
-                f"(__rd__[{m * sub + i}] - rvec[{m * sub + i}])"
-                f" * (__rd__[{m * sub + i}] - rvec[{m * sub + i}])"
-                for i in range(sub)
-            )
-        )
-
-    enc_dists = [unrolled(m).alias(f"__d{m}__") for m in range(m_sub)]
+    enc_dists = [
+        F.expr(_residual_l2_sql("__rd__", m, sub)).alias(f"__d{m}__")
+        for m in range(m_sub)
+    ]
     enc_scored = assigned.crossJoin(rcb).select("cand_id", "cid", *enc_dists)
     codes = enc_scored.groupBy("cand_id").agg(
         *[
@@ -2111,10 +2056,10 @@ def ivfpq_search(
     """Search a prebuilt IVF-PQ index (:func:`ivfpq_build`) — the
     recurring serving cost: probe n_probe cells, compute one k_cb-row
     distance table per (query, probed cell), rank the probed lists by
-    m_sub map lookups each; optionally refine (FAISS IndexRefineFlat)
+    m_sub array reads each; optionally refine (FAISS IndexRefineFlat)
     the ADC top-``rerank_m`` with exact L2 against the index's flat
     vectors. Per-query work is O(n_probe/n_cells) of the corpus."""
-    l2_fold, diff_arr, res_fold = _pq_folds(dim, m_sub)
+    l2_fold, diff_arr = _pq_folds(dim, m_sub)
     # --- query probes: n_probe nearest cells by L2 ---
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     w_probe = Window.partitionBy("query_id").orderBy(F.asc("__l2__"), F.asc("cell_id"))
@@ -2128,79 +2073,36 @@ def ivfpq_search(
             diff_arr("qv", "cvec").alias("__qd__"),
         )
     )
-    # --- per-(query, probed cell) distance tables to the residual codebook.
-    # UNROLLED element chains, not res_fold: higher-order lambdas evaluate
-    # INTERPRETED, and this is a x k_cb expansion (q x n_probe x k_cb rows
-    # x m_sub sums) — the same wall the r07 BUILD paid before its encode
-    # step was unrolled (ivfpq_build docstring). Identical left-associated
-    # IEEE sum, so e24/e24b oracle hashes are unchanged.
+    # --- per-(query, probed cell) distance tables to the residual codebook
+    # (q x n_probe x k_cb rows x m_sub unrolled _residual_l2_sql chains) ---
     sub = dim // m_sub
-
-    def _tab_unrolled(m: int) -> Column:
-        # one expr string per subvector (r11): identical parsed tree at
-        # one py4j round-trip instead of ~5 per element
-        return F.expr(
-            " + ".join(
-                f"(__qd__[{m * sub + i}] - rvec[{m * sub + i}])"
-                f" * (__qd__[{m * sub + i}] - rvec[{m * sub + i}])"
-                for i in range(sub)
-            )
-        )
-
-    tab_dists = [_tab_unrolled(m).alias(f"__t{m}__") for m in range(m_sub)]
+    tab_dists = [
+        F.expr(_residual_l2_sql("__qd__", m, sub)).alias(f"__t{m}__")
+        for m in range(m_sub)
+    ]
     dtab = probes.crossJoin(rcb).select(
         "query_id", "cell_id", "cid", *tab_dists
     )
-    # cid-ORDERED ARRAYS, not maps (r10): element_at on an UnsafeMapData
-    # is a LINEAR key scan — m_sub lookups x k_cb comparisons per scanned
-    # candidate row turned the 300k-vector search into billions of key
-    # compares (ANNSCALE_r09: ivfpq_search 19.5s vs ivf_search 3.7s).
-    # cids are dense 1..k_cb by construction (residual_codebook's
-    # row_number), so an array sorted by cid makes each lookup one O(1)
-    # offset read. array_sort on (cid, t) structs orders by the unique
-    # cid; collect_list nondeterminism is sorted away.
-    def _cid_array(m: int) -> Column:
-        return F.transform(
-            F.array_sort(F.collect_list(F.struct("cid", f"__t{m}__"))),
-            lambda s: s[f"__t{m}__"],
-        ).alias(f"__a{m}__")
-
-    tables = dtab.groupBy("query_id", "cell_id").agg(
-        *[_cid_array(m) for m in range(m_sub)]
-    )
+    tables = _adc_tables(dtab, ["query_id", "cell_id"], "__t", m_sub)
     # --- scan only probed cells' inverted lists; ADC = m_sub O(1) reads ---
     # tables has exactly ONE consumer (this broadcast): no materialize —
     # the broadcast build computes it directly, saving one eager
     # checkpoint barrier per search (r11). Determinism is unaffected
     # (array_sort fixes the collect_list order).
     joined = encoded.join(F.broadcast(tables), "cell_id")
-    adc = F.expr(
-        " + ".join(
-            f"element_at(__a{m}__, __c{m}__)" for m in range(m_sub)
-        )
-    )
+    adc = _adc_sum("__c{m}__", m_sub)
     scored = joined.select("query_id", "cand_id", adc.alias("__adc__"))
-    w = Window.partitionBy("query_id").orderBy(F.asc("__adc__"), F.asc("cand_id"))
     if rerank_m is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_top)
-            .select(
-                "query_id",
-                "cand_id",
-                "rank",
-                F.round("__adc__", 6).alias("adc_dist"),
-            )
+        return _topk(scored, "query_id", "cand_id", "__adc__", k_top, False).select(
+            "query_id", "cand_id", "rank", F.round("__adc__", 6).alias("adc_dist")
         )
     # --- refine (FAISS IndexRefineFlat): exact L2 rerank of the ADC top-m.
     # The (q x m)-row shortlist broadcasts; the index's flat vectors are
     # read once via the cand_id equi-join, never shuffled — ADC
     # quantization error then only costs recall a neighbor pushed BELOW
     # rank m, not ranking noise inside the shortlist.
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(rerank_m))
-        .select("query_id", "cand_id", "__adc__")
+    shortlist = _topk(scored, "query_id", "cand_id", "__adc__", int(rerank_m), False).select(
+        "query_id", "cand_id", "__adc__"
     )
     sl = F.broadcast(shortlist.join(q, "query_id"))
     flat = encoded.select("cand_id", "__v__")
@@ -2210,17 +2112,12 @@ def ivfpq_search(
         sl["__adc__"],
         l2_fold("qv", "__v__").alias("__l2__"),
     )
-    w2 = Window.partitionBy("query_id").orderBy(F.asc("__l2__"), F.asc("cand_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k_top)
-        .select(
-            "query_id",
-            "cand_id",
-            "rank",
-            F.round("__adc__", 6).alias("adc_dist"),
-            F.round("__l2__", 6).alias("l2_dist"),
-        )
+    return _topk(exact, "query_id", "cand_id", "__l2__", k_top, False).select(
+        "query_id",
+        "cand_id",
+        "rank",
+        F.round("__adc__", 6).alias("adc_dist"),
+        F.round("__l2__", 6).alias("l2_dist"),
     )
 
 
@@ -2260,8 +2157,8 @@ def ivfpq_adc_topk(
       all m_sub argmins simultaneously; emitted state is m_sub bytes of
       codes + the cell id per vector;
     - search: the per-(query, probed-cell) distance tables are
-      (n_queries x n_probe x k_cb) rows -> broadcast maps; candidate
-      distance is m_sub map lookups inside codegen; only the inverted
+      (n_queries x n_probe x k_cb) rows -> broadcast cid-ordered arrays;
+      candidate distance is m_sub O(1) array reads inside codegen; only the inverted
       lists of probed cells are scanned (cell_id equi-join, never the
       corpus), then one per-query top-k window over ~n_probe/n_cells of
       the corpus.
@@ -2326,14 +2223,9 @@ def mrl_funnel_topk(
         F.col(vec_col).alias("cv"),
         norm_expr(vec_col, dim).alias("cn"),
     )
-    rer = c.join(sl, "cand_id").withColumn(
-        "cosine", dot_expr("qv", "cv", dim) / (F.col("qn") * F.col("cn"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
-        .select("query_id", "cand_id", "rank", F.round("cosine", 6).alias("cosine"))
+    rer = c.join(sl, "cand_id").withColumn("cosine", cosine_expr("qv", "qn", "cv", "cn", dim))
+    return _topk(rer, "query_id", "cand_id", "cosine", k_top, True).select(
+        "query_id", "cand_id", "rank", F.round("cosine", 6).alias("cosine")
     )
 
 
@@ -2484,7 +2376,8 @@ def ivf_search(
     """Search a prebuilt IVF index (:func:`ivf_build`): per query, probe
     the n_probe nearest cells and rank only those cells' lists — the
     recurring cost a serving deployment actually pays, O(n_probe/n_cells)
-    of the corpus per query. Same scoring expressions as
+    of the corpus per query. The probe is :func:`_probe_cells`, the
+    score :func:`cosine_expr` and the ranking :func:`_topk`, as in
     :func:`cosine_topk_ivf` (which builds and searches in one call)."""
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -2493,13 +2386,10 @@ def ivf_search(
     )
     probes = _probe_cells(q, "query_id", "qv", "qn", cents, dim, n_probe).join(q, "query_id")
     scored = inverted.join(F.broadcast(probes), "cell_id").withColumn(
-        "cosine", dot_expr("qv", "cv", dim) / (F.col("qn") * F.col("cn"))
+        "cosine", cosine_expr("qv", "qn", "cv", "cn", dim)
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "rank", F.round("cosine", 6).alias("cosine"))
+    return _topk(scored, "query_id", "cand_id", "cosine", k, True).select(
+        "query_id", "cand_id", "rank", F.round("cosine", 6).alias("cosine")
     )
 
 

@@ -613,13 +613,6 @@ def hits_scores(
             F.col(src_col).alias("s"), F.col(dst_col).alias("d")
         ).distinct()
     )
-    # Measured r12: running the fixed-round loop fully lazy on small edge
-    # sets (one job, hoping for Exchange reuse across each half-round's
-    # doubled references) EXPLODED — 67 -> 149 stages, action 0.36 -> 10.5 s
-    # at sf0.1; under AQE the duplicated aggregate subtrees do not share
-    # stages. The per-half-round eager checkpoint stays unconditional.
-    def _half(df: DataFrame) -> DataFrame:
-        return materialize(df)
     hubs = e.select(F.col("s").alias("n")).distinct().select(
         "n", F.lit(NANO).cast("long").alias("h")
     )
@@ -632,8 +625,13 @@ def hits_scores(
     # crossJoin of a 1-row max over the checkpointed raw frame — stays
     # lazy; its next-half-round consumer replays only that cheap
     # projection, never the edge-scale aggregate.
+    # Measured r12: running the fixed-round loop fully lazy on small edge
+    # sets (one job, hoping for Exchange reuse across each half-round's
+    # doubled references) EXPLODED — 67 -> 149 stages, action 0.36 -> 10.5 s
+    # at sf0.1; under AQE the duplicated aggregate subtrees do not share
+    # stages. The per-half-round eager checkpoint stays unconditional.
     for _ in range(n_rounds):
-        a_raw = _half(
+        a_raw = materialize(
             e.join(hubs.withColumnRenamed("n", "s"), "s")
             .groupBy("d")
             .agg(F.sum("h").alias("a_raw"))
@@ -646,7 +644,7 @@ def hits_scores(
                 f" div CAST(m AS DECIMAL(38,0)) AS BIGINT)"
             ).alias("a"),
         )
-        h_raw = _half(
+        h_raw = materialize(
             e.join(auth.withColumnRenamed("n", "d"), "d")
             .groupBy("s")
             .agg(F.sum("a").alias("h_raw"))
